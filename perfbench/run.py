@@ -1,6 +1,6 @@
 """End-to-end benchmark of the lakerunner_spark engine.
 
-    python3 perfbench/run.py --workload <ingest_otlp|query_api|query_dataprep>
+    python3 perfbench/run.py --workload <ingest_otlp|query>
                              --seed <n> --seconds <s> --trace <0|1>
 
 Run from the root of a checkout. One process runs one closed-loop
@@ -19,7 +19,7 @@ workload with a single client on ``local[<cpus>]``:
    end-to-end figure, then one JSON line.
 
 With ``--trace 0`` the JSON carries the end-to-end metrics; with
-``--trace 1`` the first half of the timed ops is traced and the JSON
+``--trace 1`` every other timed op is traced and the JSON
 carries the per-layer metrics (spans are written to
 ``.perfbench/spans/<workload>-seed<n>/spans.jsonl``). Every file the
 run writes stays under ``.perfbench`` in the checkout; the run's own
@@ -126,14 +126,10 @@ def make_workload(name: str):
         from wl_ingest import Ingest
 
         return Ingest()
-    if name == "query_api":
-        from wl_api import QueryApi
+    if name == "query":
+        from wl_query import Query
 
-        return QueryApi()
-    if name == "query_dataprep":
-        from wl_dataprep import DataPrep
-
-        return DataPrep()
+        return Query()
     raise SystemExit(f"unknown workload {name!r}")
 
 
@@ -252,9 +248,10 @@ def run(args) -> dict:
         t0 = time.perf_counter()
         for j in range(n_timed):
             i = n_warm + j
-            # trace the first half of the timed ops: with these rotations
-            # every op kind then has traced and untraced samples
-            on = bool(args.trace) and j < (n_timed + 1) // 2
+            # trace every other timed op: with these rotations (odd
+            # lengths) every op kind then has traced and untraced
+            # samples, and the ingest compaction op is traced
+            on = bool(args.trace) and j % 2 == 0
             tracer.enabled = on
             tracer.op = i if on else None
             wl.before_op(i, ctx)

@@ -1,7 +1,7 @@
 """Steadiness and warm-up evidence for the benchmark.
 
-    python3 perfbench/steady.py spread --workload query_api --seeds 1-10 [--trace 0]
-    python3 perfbench/steady.py curve  --workload query_api --ops 48 [--seed 1]
+    python3 perfbench/steady.py spread --workload query --seeds 1-10 [--trace 0]
+    python3 perfbench/steady.py curve  --workload query --ops 66 [--seed 1]
 
 ``spread`` runs the benchmark once per seed, one run at a time, and
 reports for every metric its median, quartiles (as

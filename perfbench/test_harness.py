@@ -195,7 +195,7 @@ def test_benchmark_json_matches_runner():
     layer = run.layer_metrics(Tracer(False), [], 1.0, 1.0, (1.0, 1.0), (1.0, 1.0), {}, {})
     layer["peak_rss_mb"] = (1.0, "MB")
     assert {m["name"]: m["unit"] for m in bench["per_layer"]} == {k: u for k, (_v, u) in layer.items()}
-    assert {w["name"] for w in bench["workloads"]} == {"ingest_otlp", "query_api", "query_dataprep"}
+    assert {w["name"] for w in bench["workloads"]} == {"ingest_otlp", "query"}
 
 
 def test_overhead_compares_like_kinds():
@@ -205,3 +205,20 @@ def test_overhead_compares_like_kinds():
     plain = {"a": [1.0], "b": [2.0], "c": [5.0]}
     assert run.overhead_pct(traced, plain) == pytest.approx(15.0)
     assert run.overhead_pct({"a": [1.0]}, {"b": [1.0]}) == 0.0
+
+
+# -- query rotation ----------------------------------------------------------
+
+
+def test_query_rotation_walks_each_family_in_order():
+    import wl_api
+    import wl_dataprep
+    from wl_query import ROUND, slot
+
+    n = 3 * len(ROUND)
+    seen = {"api": [], "prep": []}
+    for i in range(n):
+        family, j = slot(i)
+        seen[family].append(j)
+    assert seen["api"] == list(range(3 * len(wl_api.KINDS)))
+    assert seen["prep"] == list(range(3 * len(wl_dataprep.ROTATION)))

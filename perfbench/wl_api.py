@@ -1,4 +1,5 @@
-"""query_api: query string in -> rendered JSON out, through QueryAPI.
+"""The QueryAPI requests of the ``query`` workload (``wl_query``):
+query string in -> rendered JSON out, through ``QueryAPI.handle``.
 
 A fixed rotation of request kinds over an sf0.1-sized ``events`` table:
 a PromQL range query, a PromQL instant query, a LogQL aggregate whose
@@ -33,10 +34,6 @@ def _close(a: float, b: float) -> bool:
 
 
 class QueryApi(Workload):
-    name = "query_api"
-    warm_ops = 16
-    ops_per_second = 2.4
-
     def inputs(self, work: str, seed: int, n_ops: int, digest: gen.Digest) -> None:
         self.sf = os.path.join(work, "sf")
         gen.write_tables(self.sf, seed, {"events": N_EVENTS}, digest)

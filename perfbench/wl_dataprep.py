@@ -1,4 +1,5 @@
-"""query_dataprep: registered data-prep queries, materialized as the
+"""The data-prep queries of the ``query`` workload (``wl_query``):
+registered data-prep queries, materialized as the
 caller gets them (a ``noop`` sink, never ``count()``, which Catalyst
 would prune).
 
@@ -21,12 +22,9 @@ import gen
 from workload import Workload
 
 N_DOCS = 300
-# txt7 takes about a fifth of the time of the other two, so the median
-# of three rounds (the fifth of nine ops) always falls inside the
-# dd10/mm1 cluster, never across the gap below it.
 ROTATION = (
     "dd10_dedup_pipeline",
-    "txt7_quality_pipeline",
+    "dd2_minhash_lsh",
     "mm1_byte_histogram",
 )
 
@@ -53,10 +51,6 @@ def same(spark_pdf, oracle_pdf) -> bool:
 
 
 class DataPrep(Workload):
-    name = "query_dataprep"
-    warm_ops = 3
-    ops_per_second = 0.9
-
     def inputs(self, work: str, seed: int, n_ops: int, digest: gen.Digest) -> None:
         import __spark_entry__ as entry
 
