@@ -14,6 +14,7 @@ user drives per batch (or from foreachBatch in streaming):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -125,124 +126,126 @@ def cook_metrics(
         percentiles=not sketch_percentiles,
     )
     persisted: list[DataFrame] = []
-    for grain in tiers:
-        first = grain == 10_000
-        last = grain == tiers[-1]
-        if not first:
-            tier_df = rollup_tier(
-                tier_df, dims, grain,
-                sketch_col="_sk_pairs" if gamma is not None else None,
+    try:
+        for grain in tiers:
+            first = grain == 10_000
+            last = grain == tiers[-1]
+            if not first:
+                tier_df = rollup_tier(
+                    tier_df, dims, grain,
+                    sketch_col="_sk_pairs" if gamma is not None else None,
+                )
+            sk_col = "_sk_list" if first else "_sk_pairs"
+            out = (
+                tier_df.withColumn("org_id", F.lit(org_id))
+                .withColumn("dateint", dateint(F.col("chq_timestamp")))
+                .withColumn("frequency_ms", F.lit(grain))
             )
-        sk_col = "_sk_list" if first else "_sk_pairs"
-        out = (
-            tier_df.withColumn("org_id", F.lit(org_id))
-            .withColumn("dateint", dateint(F.col("chq_timestamp")))
-            .withColumn("frequency_ms", F.lit(grain))
-        )
-        if gamma is not None:
-            # wire bytes once per rollup row at the write boundary —
-            # the single Arrow codec seam of this path (histogram fold
-            # included: see sketch_blob_udf from_list/from_pairs). The
-            # stats variant additionally derives p25..p99 from the
-            # same fold — blob + percentiles in ONE seam. Tiers that
-            # feed a coarser tier ALSO emit the canonical
-            # occupied-bucket pair list from that same fold (the
-            # state-bounding cascade state, r11 verdict #1) — the pair
-            # list used to be a second, interpreted JVM higher-order
-            # fold over every tier row, measured at ~1.5x normalized
-            # on the 2-tier chq2 cook (OPTIMIZATION_r12.md); per-group
-            # state at every coarser tier stays <= tier-ratio x
-            # occupied buckets, independent of cadence. The UDF
-            # argument is always the raw aggregate-output attribute
-            # (never a folded expression — the lambda-closure
-            # extraction hazard, ingest/preagg.py).
-            if sketch_percentiles:
-                from lakerunner_spark.ingest.preagg import (  # noqa: PLC0415
-                    PERCENTILES,
-                    _P_NAMES,
-                )
-                from lakerunner_spark.sources.chq_sketch import (  # noqa: PLC0415
-                    sketch_stats_udf,
-                )
-
-                stats = sketch_stats_udf(
-                    gamma,
-                    {
-                        f"chq_rollup_{n}": q
-                        for n, q in zip(_P_NAMES, PERCENTILES)
-                    },
-                    from_pairs=not first,
-                    with_pairs=not last,
-                )
-                out = out.withColumn("_st", stats(F.col(sk_col))).drop(
-                    sk_col
-                )
-            elif not last:
-                from lakerunner_spark.sources.chq_sketch import (  # noqa: PLC0415
-                    sketch_blob_pairs_udf,
-                )
-
-                out = out.withColumn(
-                    "_st",
-                    sketch_blob_pairs_udf(
-                        gamma, from_list=first, from_pairs=not first
-                    )(F.col(sk_col)),
-                ).drop(sk_col)
-            else:
-                from lakerunner_spark.sources.chq_sketch import (  # noqa: PLC0415
-                    sketch_blob_udf,
-                )
-
-                out = out.withColumn(
-                    "chq_sketch",
-                    sketch_blob_udf(
-                        gamma, from_list=first, from_pairs=not first
-                    )(F.col(sk_col)),
-                ).drop(sk_col)
-        if len(tiers) > 1:
-            # Each tier feeds TWO actions — its own segment write and
-            # the next tier's re-aggregation. Unpersisted, every tier's
-            # write recomputed the whole lineage from the raw scan
-            # (the r12 ingest probe measured input_rows = tiers x
-            # events), so a 5-tier cascade paid the 10s pre-agg five
-            # times. Persist is the idiomatic Spark cascade shape:
-            # cached state is rollup rows (series x buckets — orders
-            # of magnitude smaller than raw), MEMORY_AND_DISK spills
-            # instead of OOMing, and the finer tier's cache is
-            # released as soon as its coarser consumer materializes.
-            # The persist sits AFTER the codec seam so the Python UDF
-            # runs once per row for both consumers (write + rollup).
-            from pyspark import StorageLevel  # noqa: PLC0415
-
-            if not last:
-                # the LAST tier has no coarser consumer — its only
-                # action is its own segment write, so caching it would
-                # be a pure extra materialization (r13)
-                out = out.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted.append(out)
-        wout = out
-        if "_st" in out.columns:
-            wout = out.select("*", "_st.*").drop("_st")
-            if "pairs" in wout.columns:
-                wout = wout.drop("pairs")
-        write_segments(
-            wout, f"{base_path}/metrics", "metrics",
-            max_records_per_file=max_records_per_file,
-            mode=write_mode,
-        )
-        if len(persisted) > 1:
-            # this write materialized the CURRENT tier's cache from
-            # the previous tier's — the finer cache has no consumer
-            # left and its memory funds the next tier
-            persisted.pop(0).unpersist()
-        if not last:
-            tier_df = out
             if gamma is not None:
-                tier_df = tier_df.withColumn(
-                    "_sk_pairs", F.col("_st.pairs")
-                ).drop("_st")
-    for df in persisted:
-        df.unpersist()
+                # wire bytes once per rollup row at the write boundary —
+                # the single Arrow codec seam of this path (histogram fold
+                # included: see sketch_blob_udf from_list/from_pairs). The
+                # stats variant additionally derives p25..p99 from the
+                # same fold — blob + percentiles in ONE seam. Tiers that
+                # feed a coarser tier ALSO emit the canonical
+                # occupied-bucket pair list from that same fold (the
+                # state-bounding cascade state, r11 verdict #1) — the pair
+                # list used to be a second, interpreted JVM higher-order
+                # fold over every tier row, measured at ~1.5x normalized
+                # on the 2-tier chq2 cook (OPTIMIZATION_r12.md); per-group
+                # state at every coarser tier stays <= tier-ratio x
+                # occupied buckets, independent of cadence. The UDF
+                # argument is always the raw aggregate-output attribute
+                # (never a folded expression — the lambda-closure
+                # extraction hazard, ingest/preagg.py).
+                if sketch_percentiles:
+                    from lakerunner_spark.ingest.preagg import (  # noqa: PLC0415
+                        PERCENTILES,
+                        _P_NAMES,
+                    )
+                    from lakerunner_spark.sources.chq_sketch import (  # noqa: PLC0415
+                        sketch_stats_udf,
+                    )
+
+                    stats = sketch_stats_udf(
+                        gamma,
+                        {
+                            f"chq_rollup_{n}": q
+                            for n, q in zip(_P_NAMES, PERCENTILES)
+                        },
+                        from_pairs=not first,
+                        with_pairs=not last,
+                    )
+                    out = out.withColumn("_st", stats(F.col(sk_col))).drop(
+                        sk_col
+                    )
+                elif not last:
+                    from lakerunner_spark.sources.chq_sketch import (  # noqa: PLC0415
+                        sketch_blob_pairs_udf,
+                    )
+
+                    out = out.withColumn(
+                        "_st",
+                        sketch_blob_pairs_udf(
+                            gamma, from_list=first, from_pairs=not first
+                        )(F.col(sk_col)),
+                    ).drop(sk_col)
+                else:
+                    from lakerunner_spark.sources.chq_sketch import (  # noqa: PLC0415
+                        sketch_blob_udf,
+                    )
+
+                    out = out.withColumn(
+                        "chq_sketch",
+                        sketch_blob_udf(
+                            gamma, from_list=first, from_pairs=not first
+                        )(F.col(sk_col)),
+                    ).drop(sk_col)
+            if len(tiers) > 1:
+                # Each tier feeds TWO actions — its own segment write and
+                # the next tier's re-aggregation. Unpersisted, every tier's
+                # write recomputed the whole lineage from the raw scan
+                # (the r12 ingest probe measured input_rows = tiers x
+                # events), so a 5-tier cascade paid the 10s pre-agg five
+                # times. Persist is the idiomatic Spark cascade shape:
+                # cached state is rollup rows (series x buckets — orders
+                # of magnitude smaller than raw), MEMORY_AND_DISK spills
+                # instead of OOMing, and the finer tier's cache is
+                # released as soon as its coarser consumer materializes.
+                # The persist sits AFTER the codec seam so the Python UDF
+                # runs once per row for both consumers (write + rollup).
+                if not last:
+                    # the LAST tier has no coarser consumer — its only
+                    # action is its own segment write, so caching it would
+                    # be a pure extra materialization (r13)
+                    out = out.persist(StorageLevel.MEMORY_AND_DISK)
+                    persisted.append(out)
+            wout = out
+            if "_st" in out.columns:
+                wout = out.select("*", "_st.*").drop("_st")
+                if "pairs" in wout.columns:
+                    wout = wout.drop("pairs")
+            write_segments(
+                wout, f"{base_path}/metrics", "metrics",
+                max_records_per_file=max_records_per_file,
+                mode=write_mode,
+            )
+            if len(persisted) > 1:
+                # this write materialized the CURRENT tier's cache from
+                # the previous tier's — the finer cache has no consumer
+                # left and its memory funds the next tier
+                persisted.pop(0).unpersist()
+            if not last:
+                tier_df = out
+                if gamma is not None:
+                    tier_df = tier_df.withColumn(
+                        "_sk_pairs", F.col("_st.pairs")
+                    ).drop("_st")
+    finally:
+        # also on a failed write: a streaming foreachBatch retry would
+        # otherwise pin one more set of tier caches per attempt
+        for df in persisted:
+            df.unpersist()
     return tiers
 
 
@@ -267,8 +270,10 @@ def cook_logs(
     duplicates by construction: the agg route re-sums ``agg_count`` per
     key (plans/aggfile.py route_count_query) and the pruning index is
     consumed via semi-join/count_distinct (plans/pruning.py). The
-    default full-rebuild mode re-reads all segments and overwrites —
-    O(total), but self-healing if a previous companion write was lost.
+    batch is cached for its three writes, so its source is read and
+    decoded once. The default full-rebuild mode re-reads all segments
+    and overwrites — O(total), but self-healing if a previous companion
+    write was lost.
     """
     cooked = translate_logs(df, message_col=message_col, service_col=service_col)
     cooked = cooked.withColumn("org_id", F.lit(org_id)).withColumn(
@@ -279,18 +284,26 @@ def cook_logs(
         "agg": f"{base_path}/logs_agg",
         "index": f"{base_path}/logs_index",
     }
-    write_segments(
-        cooked, paths["segments"], "logs",
-        max_records_per_file=max_records_per_file,
-    )
     if incremental:
-        src, mode = cooked, "append"
-    else:
-        src = cooked.sparkSession.read.parquet(paths["segments"])
-        mode = "overwrite"
-    dims = [c for c in (level_col, "chq_fingerprint") if c in src.columns]
-    build_agg_table(src, dims).write.mode(mode).parquet(paths["agg"])
-    build_fingerprint_index(src, service_col, message_col).write.mode(
-        mode
-    ).parquet(paths["index"])
+        # the batch feeds three writes (segments, agg, index); cached,
+        # the scan, the OTLP decode and the fingerprint hash run once
+        cooked = cooked.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        write_segments(
+            cooked, paths["segments"], "logs",
+            max_records_per_file=max_records_per_file,
+        )
+        if incremental:
+            src, mode = cooked, "append"
+        else:
+            src = cooked.sparkSession.read.parquet(paths["segments"])
+            mode = "overwrite"
+        dims = [c for c in (level_col, "chq_fingerprint") if c in src.columns]
+        build_agg_table(src, dims).write.mode(mode).parquet(paths["agg"])
+        build_fingerprint_index(src, service_col, message_col).write.mode(
+            mode
+        ).parquet(paths["index"])
+    finally:
+        if incremental:
+            cooked.unpersist()
     return paths

@@ -38,6 +38,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # pyspark's daemon without the per-task re-read of every zip on
+        # the worker's path (README ADR "Python worker daemon")
+        .config("spark.python.daemon.module", "lakerunner_spark.pydaemon")
         # Per-operation call-site capture for enriched error messages
         # walks the Python stack AND issues a py4j origin call on EVERY
         # Column/DataFrame op — measured at ~15-20% of plan-construction

@@ -483,3 +483,98 @@ def test_sketch_pairs_udf_input_stays_lambda_free(spark, raw_metrics):
     assert sum(sk["pos"].values()) + sk["zero_count"] + sum(
         sk["neg"].values()
     ) == float(row.chq_rollup_count)
+
+
+def _otlp_log_batch(spark, raw, decoder=None):
+    from lakerunner_spark.sources.otel import read_otlp_logs
+
+    return (
+        read_otlp_logs(spark, str(raw), decoder=decoder)
+        .withColumn("service_identifier", F.col("resource_service_name"))
+        .drop("attr_keys", "attr_values")
+    )
+
+
+def test_cook_logs_incremental_decodes_each_payload_once(spark, tmp_path):
+    """The incremental batch feeds three writes (segments, agg, index);
+    the OTLP decode behind it runs once per payload file, and the
+    tables equal the uncached full-rebuild cook of the same files."""
+    from lakerunner_spark.sources.otel import decode_otlp_logs_payload
+    from tests.test_e2e_otlp import BASE_NS, _payload, _record
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for k, svc in enumerate(("checkout", "billing", "search")):
+        recs = [
+            _record(BASE_NS + i * 10_000_000_000 + k, f"{svc} req {i} ok", lvl)
+            for i, lvl in enumerate(["INFO", "INFO", "ERROR"] * 4)
+        ]
+        (raw / f"{svc}.binpb").write_bytes(_payload(svc, recs))
+
+    decoded = spark.sparkContext.accumulator(0)
+
+    def counting(payload):
+        decoded.add(1)
+        return decode_otlp_logs_payload(payload)
+
+    inc = cook_logs(
+        _otlp_log_batch(spark, raw, counting), str(tmp_path / "inc"),
+        incremental=True,
+    )
+    assert decoded.value == 3
+
+    full = cook_logs(_otlp_log_batch(spark, raw), str(tmp_path / "full"))
+    for table in ("segments", "agg", "index"):
+        got = spark.read.parquet(inc[table])
+        want = spark.read.parquet(full[table])
+        assert got.count() == want.count() > 0
+        assert got.exceptAll(want).count() == 0 == want.exceptAll(got).count()
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_cook_metrics_failed_write_releases_tier_caches(
+    spark, raw_metrics, tmp_path, monkeypatch
+):
+    """A tier write that fails after the 10s tier cache materialized
+    must not leave that cache pinned (a streaming retry would pile one
+    up per attempt)."""
+    from lakerunner_spark.ingest import cook
+
+    write_segments = cook.write_segments
+    calls = []
+
+    def second_write_fails(df, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("forced tier write failure")
+        return write_segments(df, *args, **kwargs)
+
+    monkeypatch.setattr(cook, "write_segments", second_write_fails)
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="forced"):
+        cook_metrics(raw_metrics, str(tmp_path / "x"), tiers_ms=[10_000, 60_000])
+    assert len(calls) == 2
+    assert _persistent_rdds(spark) == before
+
+
+def test_cook_logs_failed_write_releases_batch_cache(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    from lakerunner_spark.ingest import cook
+
+    def index_fails(*args, **kwargs):
+        raise RuntimeError("forced index failure")
+
+    logs = events_stream(spark, sf_dir).limit(200).select(
+        "chq_timestamp",
+        F.col("props").alias("log_message"),
+        F.col("event_type").alias("service_identifier"),
+    )
+    monkeypatch.setattr(cook, "build_fingerprint_index", index_fails)
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="forced"):
+        cook_logs(logs, str(tmp_path / "x"), incremental=True)
+    assert _persistent_rdds(spark) == before
