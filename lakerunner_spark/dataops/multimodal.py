@@ -24,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -438,32 +438,37 @@ def extract_features(
 
 
 def byte_histogram_features(media: DataFrame, buckets: int = 16) -> DataFrame:
-    """Codec-free feature extraction that runs ANYWHERE: normalized byte
-    histogram of the payload — pure Spark expressions over hex pairs
-    (binary-safe, stays in codegen), no Python in the loop."""
-    n = F.length("payload")  # byte count for binary columns
+    """Codec-free features that run anywhere: the normalized byte
+    histogram of ``payload``, in pure Spark expressions.
+
+    Bucket ``i`` counts the bytes in ``[i*w, i*w + w - 1]`` with
+    ``w = 256 // buckets``; feature ``i`` is that count over
+    ``length(payload)``. Decoding as ISO-8859-1 maps each byte to the one
+    char of the same code point (a total bijection: no input is
+    malformed), so a bucket's count is the length of the chars left
+    after deleting every run of chars outside its range: one linear
+    regex pass per bucket, all codegen'd, no higher-order function.
+
+    Every input column but ``payload`` passes through, followed by
+    ``n_bytes`` and ``features``. An empty payload gives ``n_bytes = 0``
+    and all features NULL; a NULL payload gives NULLs throughout.
+    ``buckets`` must divide 256, so that every byte lands in a bucket.
+    """
+    if not (1 <= buckets <= 256 and 256 % buckets == 0):
+        raise ValueError(f"buckets must divide 256, got {buckets!r}")
     width = 256 // buckets
-    # binary -> array<int> of byte values via hex-pair parsing
-    bytes_arr = F.expr(
-        "transform(sequence(1, length(payload)),"
-        " i -> cast(conv(substr(hex(payload), 2*i - 1, 2), 16, 10) as int))"
-    )
-    hist = F.array(
-        *[
-            (
-                F.size(
-                    F.filter(
-                        bytes_arr, lambda b: (b / width).cast("int") == F.lit(i)
-                    )
-                )
-                / n
-            ).cast("double")
-            for i in range(buckets)
-        ]
-    )
+    n = F.length("payload")  # byte count for binary columns
+    chars = F.decode("payload", "ISO-8859-1")
+
+    def count(lo: int) -> Column:
+        # one match per run of outside chars, not per char: 1.4x faster
+        # at 4 buckets and 2.2x at 16 on random bytes
+        outside = f"[^\\x{{{lo:02x}}}-\\x{{{lo + width - 1:02x}}}]+"
+        return F.length(F.regexp_replace(chars, outside, ""))
+
+    hist = F.array(*[F.try_divide(count(i * width), n) for i in range(buckets)])
     return media.select(
-        "media_id",
-        "media_type",
+        *[media[c] for c in media.columns if c != "payload"],
         n.cast("long").alias("n_bytes"),
         hist.alias("features"),
     )

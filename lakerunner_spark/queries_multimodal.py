@@ -1,8 +1,8 @@
 """Multimodal + ANN scale-path query catalog.
 
 ``mm1`` exercises the binary-column plumbing end-to-end with an exact
-oracle (payloads synthesized from ASCII text, histogram over hex-parsed
-bytes); ``mm2`` decodes real PNGs with the stdlib codec. The ANN
+oracle (payloads synthesized from ASCII text, histogram over bytes read
+as Latin-1 chars); ``mm2`` decodes real PNGs with the stdlib codec. The ANN
 variants carry EXACT DuckDB oracles (centroid assignment / hyperplane
 sign buckets reproduced step-for-step); recall-vs-brute-force is
 additionally asserted in tests/test_multimodal_ann.py.
@@ -56,13 +56,8 @@ def mm1_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode("text", "utf-8").alias("payload"),
         "lang",
     )
-    feats = byte_histogram_features(
-        media.select("media_id", "media_type", "payload"), buckets=4
-    )
-    joined = feats.join(
-        media.select(F.col("media_id"), "lang"), "media_id"
-    )
-    return joined.groupBy("lang").agg(
+    feats = byte_histogram_features(media, buckets=4)
+    return feats.groupBy("lang").agg(
         F.sum("n_bytes").alias("total_bytes"),
         *[
             _pr(F.avg(F.element_at("features", i + 1)), 6).alias(f"avg_h{i}")

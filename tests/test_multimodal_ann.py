@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,11 +46,54 @@ def test_extract_features_without_codec_raises(media):
 
 
 def test_byte_histogram_pure_spark(media):
-    out = {r.media_id: r for r in byte_histogram_features(media, buckets=4).collect()}
+    df = byte_histogram_features(media, buckets=4)
+    # every column but the payload passes through, then the features
+    assert df.columns == [
+        "media_id", "media_type", "width", "height", "duration_ms",
+        "n_bytes", "features",
+    ]
+    out = {r.media_id: r for r in df.collect()}
     # payload bytes(range(64)) -> all in bucket 0
     assert out[1].features[0] == 1.0 and sum(out[1].features) == 1.0
     # payload all-255 -> all in bucket 3
     assert out[2].features[3] == 1.0
+    assert (out[1].width, out[3].duration_ms) == (8, 5_000)
+
+
+@pytest.mark.parametrize("buckets", [0, -4, 3, 7, 100, 257, 512])
+def test_byte_histogram_rejects_buckets_not_dividing_256(media, buckets):
+    with pytest.raises(ValueError, match="divide 256"):
+        byte_histogram_features(media, buckets=buckets)
+
+
+@pytest.mark.parametrize("buckets", [1, 4, 16, 256])
+def test_byte_histogram_matches_numpy_bincount(spark, buckets):
+    """Exact float equality with numpy. The 64 KiB payload also pins
+    linear time: a per-byte re-hex of the payload is quadratic in it.
+    An empty payload reads as DuckDB's x / 0 (NULL features) instead of
+    failing the whole query with ANSI's DIVIDE_BY_ZERO."""
+    payloads = {
+        1: bytes(range(256)),
+        2: b"\\]^-[\n\r",  # regex-special bytes and line terminators
+        3: np.random.default_rng(11).integers(0, 256, 65536, np.uint8).tobytes(),
+        4: b"",
+        5: None,
+    }
+    df = spark.createDataFrame(
+        [(mid, "image", p) for mid, p in payloads.items()],
+        "media_id long, media_type string, payload binary",
+    )
+    out = {r.media_id: r for r in byte_histogram_features(df, buckets).collect()}
+    w = 256 // buckets
+    for mid, p in payloads.items():
+        if not p:
+            assert out[mid].n_bytes == (None if p is None else 0)
+            assert out[mid].features == [None] * buckets
+            continue
+        b = np.frombuffer(p, np.uint8)
+        want = np.bincount(b // w, minlength=buckets) / len(p)
+        assert out[mid].n_bytes == len(p)
+        assert out[mid].features == want.tolist(), mid
 
 
 def test_frame_sample_bounded(media):

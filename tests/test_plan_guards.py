@@ -245,3 +245,30 @@ def test_ds12_single_corpus_pass(spark, sf_dir):
         "scans — the bigram scan/explode/hash subtree is being "
         "computed once per distribution instead of shared:\n" + plan
     )
+
+
+def test_mm1_single_scan_no_join(spark, sf_dir):
+    """mm1 carries ``lang`` through ``byte_histogram_features`` with the
+    media columns, so it reads ``documents`` once and joins nothing: the
+    final adaptive plan has one parquet scan and no join. The histogram
+    itself must stay a linear, codegen'd projection: no per-byte
+    ``sequence``/``transform`` array and no ``hex`` of the payload (the
+    quadratic route: one hex string rebuilt for every byte)."""
+    import __spark_entry__ as entry
+
+    from lakerunner_spark.dataops.multimodal import byte_histogram_features
+
+    df = entry.queries()["mm1_byte_histogram"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, plan
+    assert "Join" not in final and "CartesianProduct" not in final, plan
+
+    media = spark.createDataFrame([(1, b"ab")], "media_id long, payload binary")
+    proj = (
+        byte_histogram_features(media)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    for token in ("sequence(", "transform(", "hex("):
+        assert token not in proj, f"{token} in the histogram projection:\n{proj}"
