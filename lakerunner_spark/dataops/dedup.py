@@ -1086,20 +1086,10 @@ def _gram_run_islands(
         .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
-    from lakerunner_spark.operators.skew import spread_small_scan
-
     toks = F.expr(WINNOW_TOKENIZE.format(col=text_col))
-    # the tokenize + gram posexplode below are adjacent to the pruned
-    # scan; spread a low-partition input across the cores first (r12,
-    # guide §2.5 — no-op at real scale). The partition probe is the
-    # PURE scan-projection, not the semi-join plan: building the RDD of
-    # a broadcast-join plan fires the broadcast job eagerly, and here
-    # the build side is the whole winnow candidate pipeline — probing
-    # the join executed it TWICE (measured: dd16 main input_rows
-    # 210k -> 410k, norm x4.6, before the probe= split).
-    scan = docs.select(id_col, text_col)
     d = (
-        spread_small_scan(scan.join(ids, id_col, "left_semi"), probe=scan)
+        docs.select(id_col, text_col)
+        .join(ids, id_col, "left_semi")
         .select(F.col(id_col), toks.alias("_tk"))
         .filter(F.size("_tk") >= k)
     )

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from lakerunner_spark.functions.rounding import (
     portable_round,
     portable_round_finite,
+    pround_sql,
 )
 
 # Rounding convention for this module: every per-row similarity /
@@ -144,9 +145,9 @@ def lsh_bucket_signature(
         # driver round trips per plane (~180 per side over 18 planes —
         # measured at ~3s of sim3/sim8 plan construction, r13 #3). The
         # parsed tree is identical piece for piece: the same
-        # index-ordered dot fold (_dot_const_sql), the same
-        # floor(x*1e12 + 0.5)/1e12 rounding (portable_round_finite's
-        # exact construction — finite by the module convention), the
+        # index-ordered dot fold (_dot_const_sql), the same 12-dp
+        # rounding (pround_sql, portable_round_finite's SQL text —
+        # finite by the module convention), the
         # sign decided on the 12-dp-rounded dot (float summation order
         # differs across engines/partitions, and a dot within one ulp
         # of zero must not flip a bucket bit — oracle parity), each
@@ -155,9 +156,8 @@ def lsh_bucket_signature(
         for p in planes:
             dot = _dot_const_sql(vec_col, p)
             bit = (
-                "CAST(CASE WHEN (floor((" + dot + ") * 1000000000000"
-                " + 0.5) / 1000000000000) >= 0 THEN 1 ELSE 0 END"
-                " AS BIGINT)"
+                f"CAST(CASE WHEN {pround_sql(dot, 12)} >= 0"
+                " THEN 1 ELSE 0 END AS BIGINT)"
             )
             sig_sql = bit if sig_sql is None else (
                 f"(({sig_sql}) * 2 + {bit})"
@@ -878,17 +878,10 @@ def l2_topk(
 
     Same 100 TB shape as cosine_topk: the query set broadcasts, the
     corpus streams once; the distance is an index-ordered fold."""
-    from lakerunner_spark.operators.skew import (
-        VEC_ROWS_PER_PART,
-        spread_small_scan,
-    )
-
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("_qv")
     )
-    c = spread_small_scan(
-        corpus.select(id_col, vec_col), rows_per_part=VEC_ROWS_PER_PART
-    ).select(
+    c = corpus.select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("_cv")
     )
     pairs = c.crossJoin(F.broadcast(q))

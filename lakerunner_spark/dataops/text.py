@@ -477,13 +477,10 @@ def unigram_logprob(
         f"filter(split(trim(regexp_replace(lower({text_col}),"
         f" '[^a-z0-9]+', ' ')), ' '), t -> t != '')"
     )
-    # Spread sized so it fires only at decade scale (r13, refining the
-    # r12 revert): at sf0.1/sf1 the probed spread shuffled the full
-    # text payload ahead of a map-side-collapsing aggregation for
-    # nothing (txt9 main x2.7 — the guide §2.3 class, measured and
-    # reverted in r12); at sf10 the single-file corpus tokenized
-    # 85M tokens on ONE task (4.2s serial of txt12s' 10s). A 24k-doc
-    # batch leaves every sub-decade fixture un-spread and un-shuffled.
+    # A 24k-doc batch: a full-row spread ahead of this map-side-
+    # collapsing aggregation cost txt9 x2.7 at sf0.1 (r12), so the
+    # sf0.1 corpus stays un-spread; from sf1 up (3 tasks at 50k docs)
+    # the tokenize pays for the shuffle (SPREAD_AUDIT.md).
     from lakerunner_spark.operators.skew import spread_small_scan
 
     tokens = spread_small_scan(

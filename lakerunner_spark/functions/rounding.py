@@ -6,8 +6,10 @@ binary value; they disagree on half-boundary values like 0.0626875.
 ``portable_round`` = floor(x*10^dp + 0.5)/10^dp is computed identically
 by both engines given identical input doubles, so results hash-match.
 
-``compile_pround`` rewrites the ``pround(expr, dp)`` pseudo-function in
-oracle SQL strings into the same floor construction.
+``pround_sql`` emits the same floor construction as SQL text; it is
+the one source of that text, used by ``compile_pround`` (which rewrites
+the ``pround(expr, dp)`` pseudo-function in oracle SQL strings) and by
+SQL-built engine expressions such as the LSH sign bits.
 """
 
 from __future__ import annotations
@@ -58,6 +60,12 @@ def portable_round(col: Column | str, dp: int) -> Column:
     )
 
 
+def pround_sql(expr: str, dp: int) -> str:
+    """SQL text of ``portable_round_finite(expr, dp)``."""
+    scale = 10**dp
+    return f"(floor(({expr}) * {scale} + 0.5) / {scale})"
+
+
 def compile_pround(sql: str) -> str:
     """Rewrite pround(expr, dp) -> (floor((expr) * SCALE + 0.5) / SCALE)."""
     out = []
@@ -68,7 +76,7 @@ def compile_pround(sql: str) -> str:
         if j < 0:
             out.append(sql[i:])
             return "".join(out)
-        out.append(sql[j if False else i : j])
+        out.append(sql[i:j])
         depth = 1
         k = j + len(token)
         comma = -1
@@ -82,7 +90,5 @@ def compile_pround(sql: str) -> str:
                 comma = k
             k += 1
         expr = compile_pround(sql[j + len(token) : comma])
-        dp = int(sql[comma + 1 : k - 1].strip())
-        scale = 10**dp
-        out.append(f"(floor(({expr}) * {scale} + 0.5) / {scale})")
+        out.append(pround_sql(expr, int(sql[comma + 1 : k - 1].strip())))
         i = k

@@ -31,54 +31,30 @@ _PARTIAL = {
 }
 
 
-# Rows of scan input that justify one spread task. The r12 spread fanned
-# EVERY small scan to defaultParallelism tasks regardless of volume; the
-# driver's r12 artifact priced that at +93% main-section tasks and a
-# measured sf0.1 regression class (dd10/dd12/ds12 — many near-empty
-# tasks whose scheduling overhead exceeds the map work they carry).
-# Sizing the target by the scan's row count (parquet footer metadata —
-# no job, no data read) keeps the sf1/sf10 wins (enough rows -> full
-# fan-out) while a tiny fixture gets 2-4 partitions. Both knobs are
-# per-task BATCH sizes (how many rows make one task worthwhile), not
-# core counts — the core count enters only through the
-# defaultParallelism cap, so the sizing stays scale-adaptive. Env
-# overrides for cluster tuning; the defaults are measured locally
-# (OPTIMIZATION_r13.md #1).
-ROWS_PER_PART = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_ROWS_PER_PART", "1536")
-)
-# vector/embedding scans carry ~64 doubles per row and their consumers
-# (brute topk folds, k-means assignment) do k*d work per row — a
-# smaller batch saturates the cores at one decade lower volume
-VEC_ROWS_PER_PART = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_VEC_ROWS_PER_PART", "640")
-)
-# media rows carry whole payloads (KB-MB) and each costs a Python
-# decode (~ms per row even vectorized) — a media task earns its keep
-# at a few hundred rows
-MEDIA_ROWS_PER_PART = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MEDIA_ROWS_PER_PART", "256")
-)
-
-# (path, mtime) -> parquet footer row count; footer reads are ~1ms but
-# every query construction re-probes its scan
-_FOOTER_ROWS: dict[tuple[str, float], int] = {}
+# Rows of scan input that justify one spread task: per-task batch
+# sizes, not core counts (cores enter only through the
+# defaultParallelism cap). Vector rows carry ~64 doubles and their
+# consumers do k*d work per row; media rows carry whole payloads and a
+# Python decode each — so smaller batches pay there.
+ROWS_PER_PART = 1536
+VEC_ROWS_PER_PART = 640
+MEDIA_ROWS_PER_PART = 256
 
 
 def scan_rows(df: DataFrame) -> int | None:
     """Row count of ``df``'s file scan from parquet footer metadata —
     driver-side only, no Spark job, no data pages read. None when the
     relation is not a local parquet file set (in-memory test frames,
-    object-store URIs) or the file list is large enough that footer
-    probing would itself cost (at that point the scan has plenty of
-    partitions and the caller's partition-count check short-circuits
-    first anyway)."""
+    object-store URIs) or has more than 64 files (enough partitions
+    that no spread would fire)."""
     try:
         files = df.inputFiles()
     except Exception:  # streaming/local relations
         return None
     if not files or len(files) > 64:
         return None
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
     total = 0
     for uri in files:
         path = uri[7:] if uri.startswith("file://") else uri
@@ -86,14 +62,7 @@ def scan_rows(df: DataFrame) -> int | None:
         if not os.path.isfile(path):
             return None
         try:
-            key = (path, os.path.getmtime(path))
-            n = _FOOTER_ROWS.get(key)
-            if n is None:
-                import pyarrow.parquet as pq  # noqa: PLC0415
-
-                n = pq.ParquetFile(path).metadata.num_rows
-                _FOOTER_ROWS[key] = n
-            total += n
+            total += pq.ParquetFile(path).metadata.num_rows
         except Exception:
             return None
     return total
@@ -108,13 +77,9 @@ def _scan_like(df: DataFrame) -> bool:
     """True when ``df``'s analyzed plan is a pure scan tree —
     projections/filters/aliases over file relations, nothing else.
     Driver-side metadata walk with early exit; no job, no execution.
-    Anything beyond a scan tree (joins, aggregates, generates,
-    checkpoints) both mis-maps the footer row count (the relation's
-    rows are not the file's rows) and may EXECUTE work under the
-    ``.rdd`` partition probe (a broadcast exchange fires during RDD
-    construction — the r12 probe bug, re-measured this round on
-    txt13's rebuilt corpus: +3 construction jobs for a spread that
-    was a no-op anyway)."""
+    Anything else (joins, aggregates, checkpoints, streams) has rows
+    that are not the file's rows, and building its ``.rdd`` may run
+    work: a broadcast exchange executes during RDD construction."""
     try:
         stack = [df._jdf.queryExecution().analyzed()]
         while stack:
@@ -131,92 +96,50 @@ def _scan_like(df: DataFrame) -> bool:
 
 def spread_small_scan(
     df: DataFrame,
-    min_parts: int | None = None,
-    probe: DataFrame | None = None,
-    rows_per_part: int | None = None,
+    rows_per_part: int = ROWS_PER_PART,
     floor: int = 1,
 ) -> DataFrame:
-    """Round-robin repartition a scan that yields fewer partitions than
-    the cluster has cores — otherwise every map operator adjacent to the
-    scan (tokenize/hash/explode pipelines) runs on a single task while
-    the rest of the cluster idles (the guide's input-skew remedy:
-    "repartition immediately after the read").
+    """Round-robin repartition a small parquet scan so the map work
+    next to it runs on more than one task.
 
-    Scale-adaptive, not a local[32] constant: the target is
-    ``defaultParallelism`` (tracks the session's core count, so the
-    driver's low-core bench run sees a proportionally lower target), and
-    when the scan already carries at least that many partitions — the
-    normal case at production scale, where inputs are many files — this
-    is a NO-OP adding no exchange. Only small single-row-group inputs
-    (like the bench fixtures) pay the one cheap shuffle of the projected
-    columns. Round-robin keeps retry-determinism via Spark's
+    Rule: when ``df`` is a pure scan tree over at most 64 local parquet
+    files, the target is ``min(defaultParallelism, max(floor,
+    ceil(footer rows / rows_per_part)))``, and ``df`` is repartitioned
+    only when that exceeds its partition count. Anything else (derived,
+    checkpointed, in-memory or streaming relations, unknown row counts,
+    scans already split that far) passes through with no exchange.
+    Round-robin stays retry-deterministic through Spark's
     sort-before-repartition (on by default, SPARK-23207).
 
-    ``probe``: partition count is read from this DataFrame instead of
-    ``df`` when given. Building ``df.rdd`` EXECUTES any broadcast
-    exchange inside ``df``'s plan (executeBroadcast fires during RDD
-    construction, before any action) — so a caller spreading e.g. the
-    pruned side of a broadcast semi-join must pass the underlying pure
-    scan-projection as ``probe``; the stream side of such a join keeps
-    the scan's partitioning, so the probe's count is the right answer.
-    ``df`` itself must only be passed bare when its plan is
-    scan+project (no joins, no subqueries).
+    A site keeps the call only when the same-host A/B in
+    SPREAD_AUDIT.md measured it paying (sf1 wall saved, 4 cores): minhash
+    signatures 71%, jaccard verify 17%, winnow fingerprints 50%,
+    unigram LM 44% (batch 24576: no-op below sf1), dd14 paragraphs 46%,
+    ds12 50%, sim6 59%, sim8's shared corpus 36%, cosine/IVF/LSH/
+    k-means/PQ vector scans 36-52% (:data:`VEC_ROWS_PER_PART`), image
+    patches 12% on the sf1 media decade (:data:`MEDIA_ROWS_PER_PART`);
+    sampled semantic dedup read 5% raw / 12% normalised and stays
+    unresolved.
 
-    Streaming DataFrames pass through untouched: the partition probe
-    (``df.rdd``) is illegal on a streaming plan, and a micro-batch's
-    partitioning is the stream source's to decide — the spread is a
-    batch-scan remedy.
-
-    ``rows_per_part`` (r13): rows of input that justify one task —
-    defaults to :data:`ROWS_PER_PART`; vector call sites pass
-    :data:`VEC_ROWS_PER_PART`. The target is
-    ``min(defaultParallelism, ceil(scan_rows / rows_per_part))`` so a
-    tiny fixture stops fanning to every core (the r12 driver's measured
-    +93%-tasks regression class) while a scan with a core's worth of
-    rows per task still spreads fully. When the row count is unknowable
-    (derived/checkpointed/in-memory relation, not a bounded local file
-    scan) the spread is a NO-OP: this operator is a small-FILE-SCAN
-    remedy, and whoever produced a derived relation already chose its
-    partitioning. The earlier cap-only fallback blind-fanned such
-    inputs to every core — measured this round shuffling txt13's full
-    rebuilt-corpus text payload ahead of a map-side-collapsing
-    aggregation (sf1 norm x2.06, sf10 x1.59, +387MB shuffle — the
-    guide §2.3 class r12 already reverted once for file scans), and
-    re-fanning sim8's already-sized checkpointed corpus inside every
-    member operator.
-
-    ``floor``: minimum spread target once the scan is below the cap.
-    A caller whose downstream relies on the spread EXCHANGE as an AQE
-    reuse boundary (a shared subtree consumed by several branches —
-    ds12) passes 2: a single-partition child satisfies every hash
-    distribution, so with no exchange anywhere Spark plans the shared
-    subtree once PER CONSUMER. The two-partition round-robin of a
-    sub-batch input costs microseconds; recomputing the subtree at
-    scale does not.
+    ``floor``: minimum target for ds12, whose spread exchange is also
+    the AQE reuse boundary of its shared corpus pass: a
+    single-partition child satisfies every hash distribution, so with
+    no exchange Spark plans that subtree once per consumer.
     """
-    if df.isStreaming:
+    if rows_per_part < 1:
+        raise ValueError(
+            f"spread_small_scan: rows_per_part must be >= 1, got {rows_per_part}"
+        )
+    if not _scan_like(df):
         return df
-    sc = df.sparkSession.sparkContext
-    cap = min_parts or sc.defaultParallelism
-    src = probe if probe is not None else df
-    target = cap
-    rpp = rows_per_part if rows_per_part is not None else ROWS_PER_PART
-    if rpp > 0:
-        # The scan-likeness gate and row sizing run BEFORE the
-        # partition probe: both are driver-only metadata (no job),
-        # while src.rdd on a derived plan EXECUTES any broadcast
-        # exchange it contains (executeBroadcast fires during RDD
-        # construction — the r12 probe bug). A non-scan relation is
-        # never sized (footer rows are not its rows) and never
-        # .rdd-probed at all.
-        if not _scan_like(src):
-            return df
-        rows = scan_rows(src)
-        if rows is None:
-            return df
-        target = min(cap, max(floor, -(-rows // rpp) or 1))
-    cur = src.rdd.getNumPartitions()
-    if target <= cur:
+    rows = scan_rows(df)
+    if rows is None:
+        return df
+    target = min(
+        df.sparkSession.sparkContext.defaultParallelism,
+        max(floor, -(-rows // rows_per_part)),
+    )
+    if target <= df.rdd.getNumPartitions():
         return df
     return df.repartition(target)
 

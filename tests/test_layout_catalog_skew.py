@@ -281,6 +281,32 @@ def test_spread_small_scan_sizes_target_by_scan_rows(spark, sf_dir):
     ).executedPlan().toString()
 
 
+def test_spread_small_scan_rejects_bad_batch_before_any_probe(spark, sf_dir):
+    """A ``rows_per_part`` below 1 is a caller error, raised before the
+    spread looks at the plan: no path may reach the ``.rdd`` partition
+    probe without the scan-likeness gate, because building the RDD of
+    a broadcast-join plan runs the broadcast."""
+    import time
+
+    from lakerunner_spark.operators.skew import spread_small_scan
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    ids = spark.range(10).withColumnRenamed("id", "doc_id")
+    join = docs.select("doc_id", "text").join(
+        F.broadcast(ids), "doc_id", "left_semi"
+    )
+    sc = spark.sparkContext
+    group = "spread-rejects-bad-batch"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="rows_per_part"):
+            spread_small_scan(join, rows_per_part=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(0.5)  # the status listener drains asynchronously
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_cc_local_path_slices_by_volume(spark):
     """r13 #2: the union-find local path parallelizes its labeling by
     data volume, not core count — a 4-edge graph must not fan to

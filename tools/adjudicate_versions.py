@@ -1,43 +1,51 @@
-"""Same-window A/B adjudication of a cross-round bench drift.
+"""Same-window A/B of two source trees on registered queries.
 
 Three rounds of flag adjudication (r8/r9/r10) plus the r11 dd13/txt12s
 question all ended the same way: a wall-clock elevation that repeated
 across measurement windows was the MACHINE, not the code. The protocol
 that settles it — alternating fresh-JVM probes of the two code
 versions within one wall-clock session, so both versions sample the
-same noise distribution — lived in ad-hoc scripts until now.
+same noise distribution — lives here.
 
-Usage:
-    git worktree add /tmp/r9wt <old-commit>
-    python tools/adjudicate_versions.py /tmp/r9wt \
-        dd13_substring_decontaminate=/root/repo/.localdata/sf1 \
-        txt12s_ccnet_sketch_buckets=/root/testdata/sf0.1
+Usage (run from the tree under test; OLD is any other checkout):
+    git clone -q . /tmp/old && git -C /tmp/old checkout -q <old-commit>
+    python tools/adjudicate_versions.py /tmp/old \
+        dd13_substring_decontaminate=/path/to/sf1 \
+        txt12s_ccnet_sketch_buckets=/path/to/sf0.1
 
-Each query=sf_dir pair is probed warm best-of-2 with a same-child
-calibration anchor, HEAD and the worktree alternating for three
-round-trips. Read the output as per-round-trip normalized ratios: a
-code regression shows HEAD/old consistently above the band in EVERY
-pairing; ratios straddling 1.0 are environment. (bench_diff's
-work-metric counters are the first line of defense; this is the
-manual second opinion for wall-only questions against rounds whose
-baselines predate the counters.)
+Each query=sf_dir pair is warmed once, then timed best-of-2 as a
+``noop``-sink write of the full result (NOT ``count()``: Catalyst
+prunes every column a count does not need, which removes exactly the
+scan-adjacent map work most A/B questions are about). Every probe
+carries a same-child calibration anchor and the work counters of its
+fastest run (tools/work_metrics.py). HEAD and OLD alternate for three
+round-trips (``SPARK_GRAFT_ADJUDICATE_TRIPS``). Each probe runs with
+its own tree as working directory and ``PYTHONPATH``, so the Python
+workers import that tree's code too. Read the output as
+per-round-trip normalized ratios: a code regression shows HEAD/old
+above the band in EVERY pairing, with the work counters showing what
+moved; ratios straddling 1.0 with equal counters are environment.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
 _CHILD = r'''
-import json, sys, time
-sys.path.insert(0, sys.argv[1])
+import json, os, sys, time
+sys.path.insert(0, os.getcwd())
 from lakerunner_spark.session import get_spark
+from tools import work_metrics as wm
 import __spark_entry__ as m
 spark = get_spark(app_name="adjudicate")
 qs = m.queries()
-pairs = [a.split("=", 1) for a in sys.argv[2:]]
+pairs = [a.split("=", 1) for a in sys.argv[1:]]
 out = {}
+def run(name, sf):
+    qs[name](spark, sf).write.format("noop").mode("overwrite").save()
 def calib():
     best = float("inf")
     for _ in range(2):
@@ -47,24 +55,34 @@ def calib():
         best = min(best, time.perf_counter() - t0)
     return best
 for name, sf in pairs:  # warmup pass first (codegen/broadcast)
-    qs[name](spark, sf).count()
+    run(name, sf)
 out["calib"] = round(calib(), 3)
 for name, sf in pairs:
-    best = float("inf")
+    best, work = float("inf"), None
     for _ in range(2):
+        cur = wm.cursor(spark)
         t0 = time.perf_counter()
-        qs[name](spark, sf).count()
-        best = min(best, time.perf_counter() - t0)
-    out[name] = round(best, 3)
+        run(name, sf)
+        dt = time.perf_counter() - t0
+        if dt < best:
+            best = dt
+            tot, _ = wm.totals_since(spark, cur) if cur is not None else (None, 0)
+            work = wm.compact(tot) if tot else None
+    out[f"{name}@{os.path.basename(sf.rstrip('/'))}"] = {
+        "wall": round(best, 3), "work": work}
 print(json.dumps(out))
 '''
 
 
 def probe(repo: str, pairs: list[str]) -> dict:
+    repo = os.path.abspath(repo)
+    env = dict(os.environ, PYTHONPATH=repo)
     p = subprocess.run(
-        [sys.executable, "-c", _CHILD, repo, *pairs],
+        [sys.executable, "-c", _CHILD, *pairs],
         capture_output=True,
         text=True,
+        cwd=repo,
+        env=env,
     )
     if p.returncode != 0:
         raise RuntimeError(p.stderr[-500:])
@@ -77,24 +95,23 @@ def main() -> None:
     if not pairs:
         raise SystemExit(__doc__)
     rows = []
-    for rt in range(int(__import__("os").environ.get(
-            "SPARK_GRAFT_ADJUDICATE_TRIPS", "3"))):
+    for rt in range(int(os.environ.get("SPARK_GRAFT_ADJUDICATE_TRIPS", "3"))):
         for tag, repo in (("HEAD", "."), ("old", old_repo)):
             r = probe(repo, pairs)
             r["version"], r["rt"] = tag, rt
             rows.append(r)
             print(json.dumps(r), flush=True)
     # per-round-trip normalized HEAD/old ratios
-    names = [p.split("=", 1)[0] for p in pairs]
-    for name in names:
+    keys = [k for k in rows[0] if k not in ("calib", "version", "rt")]
+    for key in keys:
         ratios = []
         for rt in range(len(rows) // 2):
             h = next(r for r in rows if r["rt"] == rt and r["version"] == "HEAD")
             o = next(r for r in rows if r["rt"] == rt and r["version"] == "old")
-            ratios.append(
-                round((h[name] / h["calib"]) / (o[name] / o["calib"]), 3)
-            )
-        print(json.dumps({"query": name, "head_over_old_norm": ratios}))
+            ratios.append(round(
+                (h[key]["wall"] / h["calib"]) / (o[key]["wall"] / o["calib"]), 3
+            ))
+        print(json.dumps({"query": key, "head_over_old_norm": ratios}))
 
 
 if __name__ == "__main__":
