@@ -28,6 +28,26 @@ from lakerunner_spark.promql.compiler import compile_promql, step_for_duration
 from lakerunner_spark.promql.parser import parse_promql
 
 
+def _asc_key(v) -> tuple:
+    """Sort key of one value in Spark's ascending order: NULLS FIRST,
+    NaN after every number. Strings compare by code point, which is
+    Spark's UTF-8 byte order."""
+    if v is None:
+        return (0,)
+    if v != v:  # NaN
+        return (2,)
+    return (1, v)
+
+
+def _distinct_sorted(df) -> list:
+    """``df.distinct().orderBy(*df.columns).collect()``, sorted on the
+    driver: the rows are collected either way, and a range sort adds a
+    sampling job."""
+    return sorted(
+        df.distinct().collect(), key=lambda r: tuple(_asc_key(v) for v in r)
+    )
+
+
 class QueryAPI:
     """Handler set bound to a SparkSession + data directory."""
 
@@ -53,11 +73,8 @@ class QueryAPI:
 
     def services(self, params: dict | None = None) -> dict:
         src = default_log_source(self.spark, self.sf_dir)
-        vals = [
-            r[0]
-            for r in src.df.select(src.labels[0]).distinct().orderBy(src.labels[0]).collect()
-        ]
-        return {"services": vals}
+        rows = _distinct_sorted(src.df.select(src.labels[0]))
+        return {"services": [r[0] for r in rows]}
 
     # -- metrics ----------------------------------------------------------
 
@@ -79,7 +96,7 @@ class QueryAPI:
         cat = default_metric_catalog(self.spark, self.sf_dir)
         leaf = cat.resolve(params["metric"])
         tag = params["tag"]
-        rows = leaf.df.select(tag).distinct().orderBy(tag).collect()
+        rows = _distinct_sorted(leaf.df.select(tag))
         return {"values": [r[0] for r in rows]}
 
     def metrics_query(self, params: dict) -> dict:
@@ -480,14 +497,12 @@ class QueryAPI:
     def logs_tagvalues(self, params: dict) -> dict:
         src = default_log_source(self.spark, self.sf_dir)
         tag = params["tag"]
-        rows = src.df.select(tag).distinct().orderBy(tag).collect()
+        rows = _distinct_sorted(src.df.select(tag))
         return {"values": [r[0] for r in rows]}
 
     def logs_series(self, params: dict | None = None) -> dict:
         src = default_log_source(self.spark, self.sf_dir)
-        rows = (
-            src.df.select(*src.labels).distinct().orderBy(*src.labels).collect()
-        )
+        rows = _distinct_sorted(src.df.select(*src.labels))
         return {"series": [dict(zip(src.labels, r)) for r in rows]}
 
     @staticmethod
@@ -612,7 +627,7 @@ class QueryAPI:
     def spans_tagvalues(self, params: dict) -> dict:
         df = self._spans()
         tag = params["tag"]
-        rows = df.select(tag).distinct().orderBy(tag).collect()
+        rows = _distinct_sorted(df.select(tag))
         return {"values": [r[0] for r in rows]}
 
     def spans_query(self, params: dict) -> dict:

@@ -102,12 +102,14 @@ def spread_small_scan(
     """Round-robin repartition a small parquet scan so the map work
     next to it runs on more than one task.
 
-    Rule: when ``df`` is a pure scan tree over at most 64 local parquet
-    files, the target is ``min(defaultParallelism, max(floor,
-    ceil(footer rows / rows_per_part)))``, and ``df`` is repartitioned
-    only when that exceeds its partition count. Anything else (derived,
-    checkpointed, in-memory or streaming relations, unknown row counts,
-    scans already split that far) passes through with no exchange.
+    Rule: when ``df`` is a pure scan tree, the target is
+    ``min(defaultParallelism, max(floor, ceil(footer rows /
+    rows_per_part)))``, or ``min(defaultParallelism, floor)`` when its
+    rows are unknown (more than 64 files, object-store URIs), and ``df``
+    is repartitioned only when that exceeds its partition count and 1.
+    Anything else (derived, checkpointed, in-memory or streaming
+    relations, scans already split that far) passes through with no
+    exchange.
     Round-robin stays retry-deterministic through Spark's
     sort-before-repartition (on by default, SPARK-23207).
 
@@ -124,7 +126,8 @@ def spread_small_scan(
     ``floor``: minimum target for ds12, whose spread exchange is also
     the AQE reuse boundary of its shared corpus pass: a
     single-partition child satisfies every hash distribution, so with
-    no exchange Spark plans that subtree once per consumer.
+    no exchange Spark plans that subtree once per consumer. It holds
+    also when the rows cannot be known.
     """
     if rows_per_part < 1:
         raise ValueError(
@@ -133,13 +136,10 @@ def spread_small_scan(
     if not _scan_like(df):
         return df
     rows = scan_rows(df)
-    if rows is None:
-        return df
-    target = min(
-        df.sparkSession.sparkContext.defaultParallelism,
-        max(floor, -(-rows // rows_per_part)),
-    )
-    if target <= df.rdd.getNumPartitions():
+    # unknown rows (many files, object store): only the floor is known
+    want = floor if rows is None else max(floor, -(-rows // rows_per_part))
+    target = min(df.sparkSession.sparkContext.defaultParallelism, want)
+    if target <= 1 or target <= df.rdd.getNumPartitions():
         return df
     return df.repartition(target)
 

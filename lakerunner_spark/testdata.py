@@ -16,6 +16,10 @@ integer time model.
 
 from __future__ import annotations
 
+import os
+import stat
+import weakref
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,9 +34,63 @@ def _enable_nanos(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# session -> {path: (listing, schema)}; one entry per path, so the memo
+# is bounded by the number of tables a session reads. Keyed weakly by
+# the session a caller passes, so it ends with that session. Two
+# threads missing at once only infer twice: the listing is taken
+# before the read, so a stored pair never outlives a change.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _listing(path: str) -> tuple | None:
+    """``(relative path, st_size, st_mtime_ns)`` of every regular file
+    under ``path`` (or of ``path`` itself), hidden and ``_``-prefixed
+    files included: Spark's inference may read ``_common_metadata``,
+    and an in-flight write leaves ``_temporary`` files. None for
+    non-local URIs, missing paths and paths that list no files."""
+    if path.startswith("file:"):
+        path = "/" + path[5:].lstrip("/")
+    elif "://" in path:
+        return None
+    try:
+        st = os.stat(path)
+        if stat.S_ISREG(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path):
+            for n in names:
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                if stat.S_ISREG(st.st_mode):
+                    files.append(
+                        (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
+                    )
+    except OSError:  # missing path, or a file removed mid-walk
+        return None
+    return tuple(sorted(files)) or None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read ``{sf_dir}/{name}.parquet``, inferring its schema once per
+    file listing. Spark's inference runs a job on every bare
+    ``read.parquet``; a later call over an unchanged listing reads with
+    the remembered schema and runs none. Each call still builds a fresh
+    relation (fresh file index, fresh attribute ids), so self-joins
+    resolve and a changed table is re-listed and re-inferred. The memo
+    assumes the session's Parquet read confs stay as
+    :func:`_enable_nanos` pins them."""
     _enable_nanos(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == listing:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[path] = (listing, df.schema)
+    return df
 
 
 def _ts_to_epoch_ms(df: DataFrame, col: str = "ts") -> Column:

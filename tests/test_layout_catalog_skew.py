@@ -281,6 +281,23 @@ def test_spread_small_scan_sizes_target_by_scan_rows(spark, sf_dir):
     ).executedPlan().toString()
 
 
+def test_spread_small_scan_keeps_floor_when_rows_unknown(spark, sf_dir, monkeypatch):
+    """A scan whose rows cannot be known (more than 64 files, object
+    store) still gets ds12's ``floor`` exchange, its reuse boundary;
+    with the default floor it stays un-spread."""
+    from lakerunner_spark.operators import skew
+
+    monkeypatch.setattr(skew, "scan_rows", lambda df: None)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert docs.rdd.getNumPartitions() == 1
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "RoundRobinPartitioning(2)" in plan(skew.spread_small_scan(docs, floor=2))
+    assert "Exchange" not in plan(skew.spread_small_scan(docs, floor=1))
+
+
 def test_spread_small_scan_rejects_bad_batch_before_any_probe(spark, sf_dir):
     """A ``rows_per_part`` below 1 is a caller error, raised before the
     spread looks at the plan: no path may reach the ``.rdd`` partition
