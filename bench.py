@@ -419,10 +419,11 @@ def _run_section(section: str) -> dict:
     rows: dict[str, int] = {}
     samples: dict[str, int] = {}  # timed iterations per query (all passes)
     # Deterministic WORK counters per query (r10 verdict task #2):
-    # tasks / shuffle / input / spill from the AppStatusStore, measured
-    # around ONE iteration per query (work is plan-deterministic; wall
-    # is not). Reads happen OUTSIDE the timed window. bench_diff flags
-    # regressions on these; wall-only moves annotate as environment.
+    # tasks / shuffle / input / spill from the AppStatusStore, plus
+    # codegen compiles, measured around ONE iteration per query (work
+    # is plan-deterministic; wall is not). Reads happen OUTSIDE the
+    # timed window. bench_diff flags regressions on these (compiles
+    # excepted); wall-only moves annotate as environment.
     work: dict[str, dict] = {}
     try:
         from tools import work_metrics as _wm

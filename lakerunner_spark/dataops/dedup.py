@@ -914,6 +914,7 @@ def semantic_dedup_sampled(
 
         def assign_fn(it):
             import pyarrow as pa  # noqa: PLC0415
+            import pyarrow.compute as pc  # noqa: PLC0415
 
             from lakerunner_spark.dataops import kmeans_np as KM  # noqa: PLC0415
 
@@ -923,7 +924,7 @@ def semantic_dedup_sampled(
                 # NULL ids: the JVM plan drops them at the vcell
                 # equi-join (NULL never matches itself) — replicate
                 if ids.null_count:
-                    batch = batch.filter(pa.compute.is_valid(ids))
+                    batch = batch.filter(pc.is_valid(ids))
                     ids = batch.column("_id")
                 if batch.num_rows == 0:
                     continue

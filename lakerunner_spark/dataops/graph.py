@@ -77,7 +77,7 @@ def _small_star(d: DataFrame) -> DataFrame:
 
 
 # Below this many distinct edges the transitive closure is solved with
-# exact union-find on the driver (one collect, ~tens of MB) instead of
+# exact union-find on the driver (one bounded take, ~tens of MB) instead of
 # O(log^2 n) distributed rounds, each of which costs 2-3 shuffles plus
 # a materialization barrier. The EDGE table here is pairs that survived
 # candidate generation + verification — orders of magnitude smaller
@@ -154,10 +154,13 @@ def connected_components(
         .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .distinct()
     )
-    if e.count() <= local_threshold:
+    # One bounded action decides the route and fetches the local
+    # path's rows: at most local_threshold + 1 edges reach the driver.
+    rows = e.take(local_threshold + 1)
+    if len(rows) <= local_threshold:
         from pyspark.sql import types as T
 
-        rows = [(r["u"], r["v"]) for r in e.collect()]
+        rows = [(r["u"], r["v"]) for r in rows]
         schema = T.StructType(
             [
                 T.StructField("node", e.schema["u"].dataType),

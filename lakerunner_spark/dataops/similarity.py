@@ -525,6 +525,7 @@ def kmeans_cents_arrow(
 
     def fn(it):
         import pyarrow as pa  # noqa: PLC0415
+        import pyarrow.compute as pc  # noqa: PLC0415
 
         from lakerunner_spark.dataops import kmeans_np as KM  # noqa: PLC0415
 
@@ -532,7 +533,7 @@ def kmeans_cents_arrow(
         for batch in it:
             ids = batch.column("_id")
             if ids.null_count:
-                keep = pa.compute.is_valid(ids)
+                keep = pc.is_valid(ids)
                 batch = batch.filter(keep)
                 ids = batch.column("_id")
             if batch.num_rows:

@@ -13,6 +13,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Compiled generated-code classes the JVM keeps. Spark's default of
+# 100 is smaller than one steady cycle of the engine: an ingest op
+# touches ~140 distinct classes and a query round ~125, so at 100
+# every class is evicted before its next use and recompiled (~5 ms
+# median each). 1000 is ~7x the largest cycle measured; at 3-9 KB of
+# bytecode per entry it costs ~10 MB plus metaspace (README ADR
+# "Generated-code cache sized to the working set"). A static SQL conf:
+# it takes effect only when the session is built.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "lakerunner_spark",
@@ -54,6 +64,9 @@ def get_spark(
             else "false",
         )
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
         # NOTE: spark.sql.parquet.aggregatePushdown deliberately NOT
         # set — parquet sits on the default spark.sql.sources.
         # useV1SourceList, whose V1 scan has no aggregate pushdown, so

@@ -22,6 +22,7 @@ import weakref
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, LongType, StructType
 
 
 def _enable_nanos(spark: SparkSession) -> None:
@@ -79,24 +80,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     resolve and a changed table is re-listed and re-inferred. The memo
     assumes the session's Parquet read confs stay as
     :func:`_enable_nanos` pins them."""
+    return _read_table(spark, sf_dir, name)[0]
+
+
+def _read_table(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[DataFrame, StructType | None]:
+    """:func:`load_table`'s read, with the schema it used when that is
+    known without asking the JVM (None for unlisted paths)."""
     _enable_nanos(spark)
     path = f"{sf_dir}/{name}.parquet"
     listing = _listing(path)
     if listing is None:
-        return spark.read.parquet(path)
+        return spark.read.parquet(path), None
     memo = _SCHEMAS.setdefault(spark, {})
     hit = memo.get(path)
     if hit is not None and hit[0] == listing:
-        return spark.read.schema(hit[1]).parquet(path)
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
     df = spark.read.parquet(path)
-    memo[path] = (listing, df.schema)
-    return df
+    schema = df.schema
+    memo[path] = (listing, schema)
+    return df, schema
 
 
-def _ts_to_epoch_ms(df: DataFrame, col: str = "ts") -> Column:
-    """Normalize a raw ``ts`` column (epoch-ns long | timestamp[_ntz]) to epoch-ms."""
-    dtype = dict(df.dtypes)[col]
-    if dtype == "bigint":
+def _ts_to_epoch_ms(dtype: DataType, col: str = "ts") -> Column:
+    """Normalize a raw ``ts`` column of type ``dtype`` (epoch-ns long |
+    timestamp[_ntz]) to epoch-ms."""
+    if isinstance(dtype, LongType):
         # integer `div`: epoch-ns exceeds 2^53, double division would
         # round a few rows into the wrong millisecond
         return F.expr(f"{col} div 1000000").cast("long")
@@ -106,11 +116,14 @@ def _ts_to_epoch_ms(df: DataFrame, col: str = "ts") -> Column:
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events -> telemetry shape with chq_timestamp epoch-ms."""
-    df = load_table(spark, sf_dir, "events")
+    """events -> telemetry shape with chq_timestamp epoch-ms. The ``ts``
+    type comes from the schema the read used, so a memoized table costs
+    no schema round trip to the JVM."""
+    df, schema = _read_table(spark, sf_dir, "events")
+    ts_type = (schema or df.schema)["ts"].dataType
     return df.select(
         "event_id",
-        _ts_to_epoch_ms(df).alias("chq_timestamp"),
+        _ts_to_epoch_ms(ts_type).alias("chq_timestamp"),
         "user_id",
         "event_type",
         "value",

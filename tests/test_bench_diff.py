@@ -542,3 +542,23 @@ def test_ingest_diff_raw_floor_blocks_calib_artifacts():
     # but a genuine raw growth without work evidence still surfaces
     cur2 = {"calib_sec": 0.5, "surfaces": {"batch_10s": {"sec": 13.0}}}
     assert "batch_10s" in ingest_diff(prev, cur2)["flagged"]
+
+
+def test_codegen_compiles_never_decide_a_flag(tmp_path):
+    """Codegen compiles count cache misses, which move with what ran
+    earlier in the JVM: a jump in them is neither a work-only flag nor
+    evidence that turns a wall crossing into a regression."""
+    _baseline(str(tmp_path), 10, {"q_a": 1.0}, 0.5,
+              work={"q_a": dict(_W, codegen_compiles=0)})
+    cur_w = dict(_W, codegen_compiles=500)
+    quiet = compare_to_previous(
+        {"q_a": 1.05}, 0.5, repo_dir=str(tmp_path), sf=0.1,
+        work={"q_a": cur_w},
+    )
+    assert quiet["flagged"] == {}
+    crossed = compare_to_previous(
+        {"q_a": 2.0}, 0.5, repo_dir=str(tmp_path), sf=0.1,
+        work={"q_a": cur_w},
+    )
+    assert crossed["flagged"] == {}
+    assert crossed["env_flags"]["q_a"]["environment"] is True

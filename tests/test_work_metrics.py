@@ -112,3 +112,19 @@ def test_planted_broadcast_regression_flags_on_shuffle(spark, tmp_path):
     assert diff["flagged"]["planted"]["work_only"] is True
     assert diff["flagged"]["planted"]["work"]["shuffle_mb"][1] > \
         diff["flagged"]["planted"]["work"]["shuffle_mb"][0]
+
+
+def test_codegen_compiles_counts_cache_misses(spark):
+    """A plan new to the JVM compiles its generated classes; rerunning
+    the same plan hits the codegen cache and compiles none."""
+
+    def q():
+        # a literal no other test uses: codegen inlines it, so the
+        # generated source (the cache key) is new to this JVM
+        return spark.range(64).selectExpr("id * 7340033 + 917 AS v")
+
+    first = _measure(spark, q)
+    again = _measure(spark, q)
+    assert first["codegen_compiles"] > 0
+    assert again["codegen_compiles"] == 0
+    assert again["input_rows"] == first["input_rows"] == 64

@@ -18,10 +18,11 @@ Each query=sf_dir pair is warmed once, then timed best-of-2 as a
 prunes every column a count does not need, which removes exactly the
 scan-adjacent map work most A/B questions are about). Every probe
 carries a same-child calibration anchor and the work counters of its
-fastest run (tools/work_metrics.py). HEAD and OLD alternate for three
-round-trips (``SPARK_GRAFT_ADJUDICATE_TRIPS``). Each probe runs with
-its own tree as working directory and ``PYTHONPATH``, so the Python
-workers import that tree's code too. Read the output as
+fastest run, codegen compiles included (tools/work_metrics.py). HEAD
+and OLD alternate for three round-trips
+(``SPARK_GRAFT_ADJUDICATE_TRIPS``). Each probe runs with its own tree
+as working directory and ``PYTHONPATH``, so the Python workers import
+that tree's code too. Read the output as
 per-round-trip normalized ratios: a code regression shows HEAD/old
 above the band in EVERY pairing, with the work counters showing what
 moved; ratios straddling 1.0 with equal counters are environment.

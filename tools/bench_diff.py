@@ -49,6 +49,9 @@ RATIO_THRESHOLD = 1.3
 # sub-noise counters (a 2-task probe gaining a task) from flagging.
 WORK_RATIO = 1.25  # work moved => a wall flag is a real regression
 WORK_STRONG_RATIO = 1.5  # work moved this much => flag wall-independent
+# ``codegen_compiles`` is recorded beside these but never compared: it
+# counts codegen-cache misses, which move with what ran earlier in the
+# JVM (cache state), not with the plan.
 WORK_FLOORS = {"tasks": 16, "shuffle_mb": 1.0, "input_rows": 10_000,
                "input_mb": 8.0}
 # ...but only when the RAW wall ratio also exceeds this floor. The
@@ -224,11 +227,11 @@ def _work_moved(
 ) -> tuple[bool, dict]:
     """Did the DETERMINISTIC work of a query grow past the threshold?
     Compares tasks, shuffle bytes (read+write), input rows and input
-    bytes — the counters a plan regression moves. Spill and output are
-    reported in the evidence but never decide (spill depends on memory
-    pressure, i.e. environment). Returns (moved, evidence); evidence
-    carries [prev, cur] for each compared counter so the artifact
-    shows the adjudication."""
+    bytes — the counters a plan regression moves. Spill and output
+    never decide (spill depends on memory pressure, i.e. environment),
+    nor do codegen compiles (cache state). Returns (moved, evidence);
+    evidence carries [prev, cur] for each compared counter so the
+    artifact shows the adjudication."""
     def derive(w: dict) -> dict:
         return {
             "tasks": w.get("tasks", 0),

@@ -33,11 +33,12 @@ sessions inflate timings (bench discipline).
 
 Work adjudication (r11 verdict task #2): each surface also records the
 deterministic AppStatusStore work counters (tools/work_metrics.py —
-tasks, shuffle bytes, input rows/bytes, spill) from its best
-iteration, a ``surcharges`` section reports the PAIRED within-run
-deltas (cascade over 10s, sketch over cascade, stats over sketch) with
-work evidence, and ``ingest_diff`` compares against the previously
-committed artifact the way bench_diff does: a wall crossing whose work
+tasks, shuffle bytes, input rows/bytes, spill; codegen compiles too,
+reported only) from its best iteration, a ``surcharges`` section
+reports the PAIRED within-run deltas (cascade over 10s, sketch over
+cascade, stats over sketch) with work evidence, and ``ingest_diff``
+compares against the previously committed artifact the way bench_diff
+does: a wall crossing whose work
 counters are unchanged is an environment note, not a regression —
 this VM's unchanged-cascade wall swung 63-125s across measurement
 windows (PLANS.md), which is exactly the noise class the bench's

@@ -18,11 +18,20 @@ monotonic, so "the work of one query" is the sum over stages with
 the query ran. Reading via py4j costs ~1ms and happens OUTSIDE the
 timed window. The status listener updates asynchronously, so reads
 poll until two consecutive snapshots agree (bounded).
+
+``codegen_compiles`` is the change in Spark's JVM-wide
+``CodegenMetrics`` compilation count over the same window: how many
+generated classes Janino compiled because the codegen cache missed.
+Unlike the stage counters it depends on what ran before in the JVM
+(a warm cache compiles nothing), so it is reported, never compared
+(tools/bench_diff.py). In local mode driver and executors share one
+JVM and the count covers both; on a cluster it is the driver's only.
 """
 
 from __future__ import annotations
 
 import time
+from typing import NamedTuple
 
 # (result key, v1.StageData getter) — getters resolved defensively so
 # a Spark version that renames one degrades to 0 instead of crashing
@@ -36,6 +45,23 @@ FIELDS = (
     ("output_b", "outputBytes"),
     ("spill_b", "diskBytesSpilled"),
 )
+
+
+class Cursor(NamedTuple):
+    """The pre-query marker: max stage id and codegen compile count
+    (None when ``CodegenMetrics`` is unreachable)."""
+
+    stage_id: int
+    compiles: int | None
+
+
+def _compiles(spark) -> int | None:
+    try:
+        jvm = spark.sparkContext._jvm
+        metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+    except Exception:  # noqa: BLE001 - advisory counter, never fatal
+        return None
 
 
 def _stage_seq(spark):
@@ -84,31 +110,40 @@ def _read(spark, cursor: int) -> tuple[dict, int]:
     return tot, max_id
 
 
-def totals_since(spark, cursor: int, settle_s: float = 1.0) -> tuple[dict, int]:
-    """Work totals over stages with ``stageId > cursor``, polled until
-    two consecutive reads agree (the status listener drains its event
+def totals_since(
+    spark, cursor: Cursor, settle_s: float = 1.0
+) -> tuple[dict, Cursor]:
+    """Work totals over stages with ``stageId > cursor.stage_id``, plus
+    ``codegen_compiles`` since the cursor, polled until two
+    consecutive reads agree (the status listener drains its event
     queue asynchronously; a read taken the instant collect() returns
     can be a few events short). Returns ``(totals, new_cursor)``.
     Never raises — on any py4j failure returns ``(None, cursor)`` so
     the bench records wall time without work counters."""
     try:
-        prev, max_id = _read(spark, cursor)
+        prev, max_id = _read(spark, cursor.stage_id)
         deadline = time.monotonic() + settle_s
         while time.monotonic() < deadline:
             time.sleep(0.05)
-            cur, max_id = _read(spark, cursor)
+            cur, max_id = _read(spark, cursor.stage_id)
             if cur == prev:
-                return cur, max_id
+                break
             prev = cur
-        return prev, max_id
     except Exception:  # noqa: BLE001 - advisory counters, never fatal
         return None, cursor
+    # the count is kept synchronously by the compiling thread, so it
+    # is final once the measured action has returned
+    compiles = _compiles(spark)
+    if compiles is not None and cursor.compiles is not None:
+        prev["codegen_compiles"] = compiles - cursor.compiles
+    return prev, Cursor(max_id, compiles)
 
 
-def cursor(spark) -> int | None:
-    """Current max stage id (the pre-query marker), polled stable so
-    a previous query's still-draining events land BEHIND the cursor;
-    None when the status store is unreachable."""
+def cursor(spark) -> Cursor | None:
+    """Current max stage id and compile count (the pre-query marker),
+    the stage id polled stable so a previous query's still-draining
+    events land BEHIND the cursor; None when the status store is
+    unreachable."""
 
     def _max_id() -> int:
         m, seen = -1, 0
@@ -125,11 +160,11 @@ def cursor(spark) -> int | None:
             time.sleep(0.05)
             cur = _max_id()
             if cur == prev:
-                return cur
+                break
             prev = cur
-        return prev
     except Exception:  # noqa: BLE001 - advisory counters, never fatal
         return None
+    return Cursor(prev, _compiles(spark))
 
 
 def compact(work: dict) -> dict:
