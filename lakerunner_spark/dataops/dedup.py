@@ -881,11 +881,9 @@ def semantic_dedup_sampled(
     # sample_mod): empty centroids would silently return an empty pair
     # set — every duplicate missed — instead of an error. One bounded
     # existence probe (LIMIT 1 over the filtered scan), plan-time only
-    # and deliberately UNCACHED: this probe is a correctness input,
-    # not a routing hint, so it must not share probe_cache (whose
-    # never-wrong contract is scoped to row-identical routers — a
-    # stale or hash-colliding entry here could suppress the error or
-    # raise it for a now-populated table).
+    # and deliberately UNCACHED: this probe is a correctness input, so
+    # a stale answer could suppress the error or raise it for a
+    # now-populated table.
     if train.limit(1).count() == 0:
         raise ValueError(
             f"semantic_dedup_sampled: train slice is empty — no "

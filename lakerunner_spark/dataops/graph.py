@@ -156,7 +156,9 @@ def connected_components(
     )
     # One bounded action decides the route and fetches the local
     # path's rows: at most local_threshold + 1 edges reach the driver.
-    rows = e.take(local_threshold + 1)
+    # coalesce(1) keeps it one job: a bare take scans 1 partition, then
+    # 4x, then 20x more, and the local path must read them all.
+    rows = e.coalesce(1).take(local_threshold + 1)
     if len(rows) <= local_threshold:
         from pyspark.sql import types as T
 

@@ -302,11 +302,9 @@ def _route_mode(df: DataFrame, by: str, window_threshold: int) -> str:
     """Shared auto-route gate of the grouped-rank family
     (:func:`percentile_filter`, :func:`rank_buckets`): the exact
     per-group window while the largest group fits one task, the
-    DDSketch threshold route above that. UNCACHED by design — unlike
-    the density-gate/topk probes (probe_cache.py), whose routes return
-    identical rows, the two rank routes differ near cutoffs, so this
-    is the one probe whose answer affects ROWS: memoizing it would let
-    a stale entry (or a 32-bit semanticHash collision) silently change
+    DDSketch threshold route above that. UNCACHED by design: the two
+    rank routes differ near cutoffs, so the probe's answer affects
+    ROWS, and memoizing it would let a stale entry silently change
     kept rows within a session after the table grows. The probe is one
     bounded aggregation (|groups| intermediate rows, a scalar out),
     paid only in auto mode; auto callers whose input frame is itself an
@@ -513,16 +511,13 @@ def percentile_filter(
     the sketch's relative-error contract: the documented trade of rank
     exactness for removing the per-group sort entirely.
 
-    ``mode=None`` (default) — AUTO, the engine's density-gate/topk-
-    router pattern: the max-group-rowcount probe (:func:`_route_mode`,
+    ``mode=None`` (default) — AUTO, the engine's density-gate
+    pattern: the max-group-rowcount probe (:func:`_route_mode`,
     shared with :func:`rank_buckets`) routes groups <=
     ``window_threshold`` to the exact window and anything larger to
     the sketch route. Because the two routes differ near the cutoff
-    (above), the probe result affects ROWS — so unlike the
-    row-identical routers it is deliberately NOT memoized through
-    plans/probe_cache.py (a stale cache entry could silently change
-    kept rows within a session; probe_cache's never-wrong claim stays
-    scoped to the row-identical routers). Streaming inputs route
+    (above), the probe result affects ROWS, so it runs on every
+    construction and is never memoized. Streaming inputs route
     sketch (a batch probe can't run on an unstarted stream); note that
     BOTH routes contain analytic windows Structured Streaming can't
     run directly — end-to-end streaming filtering belongs inside

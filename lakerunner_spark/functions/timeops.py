@@ -33,15 +33,6 @@ def step_for_duration(span_ms: int) -> int:
     return 3_600_000
 
 
-def frequency_for_step(step_ms: int) -> int:
-    """Best rollup tier <= step (reference: metrics_evaluator.go:414-550)."""
-    best = ROLLUP_CHAIN_MS[0]
-    for freq in ROLLUP_CHAIN_MS:
-        if freq <= step_ms:
-            best = freq
-    return best
-
-
 def bucket_ts(ts_ms: Column | str, step_ms: int) -> Column:
     """``ts - ts % step`` epoch-ms tumbling bucket (F14)."""
     c = F.col(ts_ms) if isinstance(ts_ms, str) else ts_ms

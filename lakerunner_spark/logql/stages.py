@@ -279,15 +279,6 @@ def pattern_to_regex(
     return "^" + "".join(parts) + suffix, groups
 
 
-def pattern_parser(
-    df: DataFrame, template: str, line_col: str = "log_message"
-) -> DataFrame:
-    """``| pattern "<a> - <b>"``: template captures -> columns, compiled
-    to the same regexp_extract plan as ``| regexp``."""
-    pattern, groups = pattern_to_regex(template)
-    return regexp_parser(df, pattern, groups, line_col=line_col)
-
-
 def label_format(df: DataFrame, out_col: str, expr: Column) -> DataFrame:
     """P10: label_format template compiled to a scalar Column expression."""
     return df.withColumn(out_col, expr)

@@ -91,73 +91,23 @@ def vector_agg(
     )
 
 
-# Per-bucket series count above which the rank auto-routes to the
-# two-phase plan: below it the single window per bucket wins (measured
-# ~3x faster at bench scale); above it the single-task-per-bucket
-# window becomes the straggler and the extra shuffle pays for itself.
-TWO_PHASE_THRESHOLD = 1_000_000
-
-
-def _probe_bucket_series(df: DataFrame, bucket_col: str) -> int:
-    """One-bucket cardinality probe for the topk phase router: count
-    the rows of the FIRST observed bucket (PromQL grids carry a near-
-    identical series set at every step, so one bucket is
-    representative). The bucket filter is on the child aggregation's
-    group key, so Catalyst pushes it beneath the aggregate down to the
-    scan — the probe costs one filtered scan plus a tiny shuffle, not
-    a full evaluation (the same bounded plan-time discovery pattern as
-    the quantile density gate, operators/density.py).
-
-    The result is memoized per (child logical plan, bucket column):
-    repeated topk construction over the same child — bench iterations,
-    recompiled dashboards — pays the probe jobs exactly once per
-    session (plans/probe_cache.py; the route is a physical-strategy
-    hint, both routes are row-identical, so staleness is a performance
-    detail, never a correctness one)."""
-    from lakerunner_spark.plans.probe_cache import cached_probe
-
-    def compute() -> int:
-        row = df.select(bucket_col).limit(1).collect()
-        if not row or row[0][0] is None:
-            return 0
-        return df.filter(F.col(bucket_col) == row[0][0]).count()
-
-    return cached_probe(df, f"bucket_series:{bucket_col}", compute)
-
-
 def _ranked(
     df: DataFrame,
     k: int,
     ascending: bool,
     value_col: str,
     bucket_col: str,
-    tiebreak: list[str],
-    two_phase: bool | None = None,
-    two_phase_threshold: int = TWO_PHASE_THRESHOLD,
+    tiebreak: list[str] | None,
 ) -> DataFrame:
-    """Per-bucket rank-and-keep-k.
+    """Per-bucket rank-and-keep-k: one ``row_number`` window per bucket.
 
-    ``two_phase=False``: one ranking window per bucket — the right
-    plan up to ~10^5 series per bucket (the post-aggregation
-    cardinality of telemetry queries), with zero extra shuffles.
-
-    ``two_phase=True``: phase 1 keeps each input partition's local
-    top-k first (the deterministic tiebreak makes the order total, so
-    the global top-k is a subset of the union of local top-ks), and the
-    final per-bucket window ranks at most k x partitions rows instead
-    of every series. Costs one extra shuffle — measured ~3x slower at
-    bench scale — but removes the single-task-per-bucket straggler at
-    multi-million-series cardinality. Both modes return identical rows
-    (equivalence property-tested).
-
-    ``two_phase=None`` (default): AUTO — a one-bucket cardinality
-    probe picks the phase (>= ``two_phase_threshold`` series per
-    bucket routes two-phase). The explicit flag remains the override
-    for callers who know their cardinality up front. The probe is
-    memoized per child plan (plans/probe_cache.py), so repeated
-    construction over the same child costs jobs only once; streaming
-    children skip the probe entirely (no batch jobs can run on an
-    unstarted stream) and take the single-window route.
+    Catalyst's ``InferWindowGroupLimit`` turns the ``rank <= k`` filter
+    into a ``WindowGroupLimit`` pair: a Partial one keeps each input
+    partition's first k rows per bucket before the exchange, a Final
+    one after it. So a bucket's window task receives at most k rows
+    per upstream partition, never every series: the two-phase rank
+    with no extra shuffle, for k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default).
     """
     # absent samples (coverage-gate NULLs) and NaN never occupy a rank
     # slot: the reference collects "scalar, finite entries only"
@@ -166,23 +116,10 @@ def _ranked(
     df = df.filter(F.col(value_col).isNotNull() & ~F.isnan(value_col))
     order = [F.col(value_col).asc() if ascending else F.col(value_col).desc()]
     # deterministic tiebreak so results are stable across engines/runs
+    tiebreak = tiebreak or [
+        c for c in df.columns if c not in (bucket_col, value_col)
+    ]
     order += [F.col(c).asc() for c in tiebreak]
-    if two_phase is None:
-        if df.isStreaming:
-            two_phase = False
-        else:
-            two_phase = (
-                _probe_bucket_series(df, bucket_col) >= two_phase_threshold
-            )
-    if two_phase:
-        w1 = Window.partitionBy(
-            bucket_col, F.spark_partition_id().alias("_salt")
-        ).orderBy(*order)
-        df = (
-            df.withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= k)
-            .drop("_r1")
-        )
     w = Window.partitionBy(bucket_col).orderBy(*order)
     return (
         df.withColumn("_rank", F.row_number().over(w))
@@ -197,8 +134,6 @@ def topk(
     value_col: str = "value",
     bucket_col: str = "bucket_ts",
     tiebreak: list[str] | None = None,
-    two_phase: bool | None = None,
-    two_phase_threshold: int = TWO_PHASE_THRESHOLD,
 ) -> DataFrame:
     """Per-bucket top-k series by value (top_k_node.go:25-100).
 
@@ -209,13 +144,7 @@ def topk(
     reference-faithful, diverging from upstream Prometheus's per-group
     ranking by design.
     """
-    tiebreak = tiebreak or [
-        c for c in df.columns if c not in (bucket_col, value_col)
-    ]
-    return _ranked(
-        df, k, False, value_col, bucket_col, tiebreak,
-        two_phase=two_phase, two_phase_threshold=two_phase_threshold,
-    )
+    return _ranked(df, k, False, value_col, bucket_col, tiebreak)
 
 
 def bottomk(
@@ -224,13 +153,5 @@ def bottomk(
     value_col: str = "value",
     bucket_col: str = "bucket_ts",
     tiebreak: list[str] | None = None,
-    two_phase: bool | None = None,
-    two_phase_threshold: int = TWO_PHASE_THRESHOLD,
 ) -> DataFrame:
-    tiebreak = tiebreak or [
-        c for c in df.columns if c not in (bucket_col, value_col)
-    ]
-    return _ranked(
-        df, k, True, value_col, bucket_col, tiebreak,
-        two_phase=two_phase, two_phase_threshold=two_phase_threshold,
-    )
+    return _ranked(df, k, True, value_col, bucket_col, tiebreak)

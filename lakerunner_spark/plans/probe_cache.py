@@ -1,90 +1,27 @@
-"""Memoized plan-time probes.
+"""Session-bound memo for deterministic fixture DataFrames.
 
-Several operators route between physical strategies with a small
-bounded "probe" job at plan-construction time (the density gate in
-operators/density.py, the topk phase router in operators/vector_agg.py,
-the percentile-filter router in dataops/sampling.py). Each probe is
-cheap once, but DataFrame-building APIs get called repeatedly on the
-SAME logical plan — every bench iteration, every retry, every
-composition that rebuilds the query — and paying the probe per call
-turns a lazy-feeling API eager on every construction.
-
-This module caches probe results per (logical-plan fingerprint, tag):
-identical child plans reuse the measured answer, so only the FIRST
-construction of a given shape runs jobs. The fingerprint is Catalyst's
-own ``semanticHash`` of the analyzed plan (stable across re-parses of
-the same query, insensitive to alias/exprId renumbering); if the JVM
-handle is unavailable (mocked DataFrames in tests), the probe simply
-runs uncached.
-
-Caching is ONLY for probes that are routing hints, not correctness
-inputs — both routes must return identical rows (property-tested
-where used) — so a stale cache entry after the underlying table grows
-costs at most a suboptimal physical plan for the life of the session,
-never a wrong answer. Probes whose answer affects ROWS must not use
-this cache: the grouped-rank router's window-vs-sketch probe
-(dataops/sampling.py ``_route_mode``) is exact on one route and
-approximate near cutoffs on the other, so a stale entry (or a
-semanticHash collision — 32-bit, so birthday-bounded but not
-impossible) could change which rows near a threshold are kept — it
-therefore re-probes per construction, in auto mode only. The cache is
-bounded and drops wholesale at capacity (probe recomputation is
-cheap; LRU bookkeeping is not worth it).
+``session_memo`` keeps one DataFrame per (Spark application, tag) for
+constants that depend only on the session: the planted oracle fixtures,
+LocalRelation DataFrames built from closed-form generators. Rebuilding
+such a fixture per call re-pays Python byte generation plus
+createDataFrame py4j serialization on every bench iteration; reusing
+the DataFrame re-runs only its embedded local plan, with no new round
+trips. Consumers only read: the data lives in the plan, so mutation is
+not expressible. The memo is bounded and drops wholesale at capacity
+(sessions come and go under pytest).
 """
 
 from __future__ import annotations
 
 from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame
-
 _T = TypeVar("_T")
-
-_CACHE: dict[tuple, object] = {}
-_MAX_ENTRIES = 4096
-
-
-def plan_fingerprint(df: DataFrame) -> str | None:
-    """Semantic fingerprint of the DataFrame's analyzed plan, or None
-    when no JVM plan handle is reachable (then callers skip caching)."""
-    try:
-        return str(df._jdf.queryExecution().analyzed().semanticHash())
-    except Exception:
-        return None
-
-
-def cached_probe(df: DataFrame, tag: str, compute: Callable[[], _T]) -> _T:
-    """Return ``compute()`` memoized on (plan fingerprint, tag)."""
-    fp = plan_fingerprint(df)
-    if fp is None:
-        return compute()
-    key = (fp, tag)
-    if key not in _CACHE:
-        if len(_CACHE) >= _MAX_ENTRIES:
-            _CACHE.clear()
-        _CACHE[key] = compute()
-    return _CACHE[key]  # type: ignore[return-value]
-
-
-def clear_cache() -> None:
-    _CACHE.clear()
-
 
 _SESSION_MEMO: dict[tuple, object] = {}
 
 
 def session_memo(spark, tag: str, build: Callable[[], _T]) -> _T:
-    """Memoize a deterministic, session-bound constant (the planted
-    oracle fixtures: LocalRelation DataFrames built from closed-form
-    generators) per (applicationId, tag) — the probe-cache idea one
-    level up, where the key is the session because there is no child
-    plan to fingerprint. Rebuilding such a fixture per call re-pays
-    Python byte generation plus createDataFrame py4j serialization on
-    every bench iteration; reusing the DataFrame re-runs only its
-    embedded local plan, zero new round-trips. Read-only consumers
-    only — the data lives in the plan, so mutation isn't expressible.
-    Bounded like _CACHE: drops wholesale at capacity (sessions come
-    and go under pytest)."""
+    """Return ``build()`` memoized on (applicationId, tag)."""
     key = (spark.sparkContext.applicationId, tag)
     got = _SESSION_MEMO.get(key)
     if got is None:

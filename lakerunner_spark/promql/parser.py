@@ -124,7 +124,6 @@ AGG_OPS = {"sum", "avg", "min", "max", "count", "topk", "bottomk", "quantile",
            "stddev", "stdvar", "group", "count_values",
            "limitk", "limit_ratio"}
 _CMP_OPS = {">", ">=", "<", "<=", "==", "!="}
-_SET_OPS = {"and", "or", "unless"}
 
 _DUR_UNITS = {"ns": 1e-6, "us": 1e-3, "µs": 1e-3,
               "ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000,

@@ -2110,8 +2110,8 @@ def ds9s_quality_sketch_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank route near the cutoff by the sketch's relative-error contract
     (the documented trade); the oracle replays the identical bucket
     math, so the route itself is exact-verified. ``mode=None``
-    auto-routes between the two on a memoized max-source-rowcount
-    probe (the density-gate/topk-router pattern, third application)."""
+    auto-routes between the two on a max-source-rowcount probe (the
+    density-gate pattern)."""
     return _ds9s_plan(load_table(spark, sf_dir, "documents"))
 
 

@@ -47,7 +47,8 @@ def otel_attr_column(scope: str, key: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Canonical schemas for the three cooked table families (SURVEY §1.1/§1.3)
+# Canonical logs schema and the layout of the three cooked table families
+# (SURVEY §1.1/§1.3)
 # ---------------------------------------------------------------------------
 
 _COMMON_FIELDS = [
@@ -63,42 +64,6 @@ LOGS_BASE_SCHEMA = T.StructType(
         T.StructField("log_level", T.StringType(), True),
         T.StructField("chq_fingerprint", T.LongType(), True),
         T.StructField("service_identifier", T.StringType(), True),
-    ]
-)
-
-METRICS_BASE_SCHEMA = T.StructType(
-    _COMMON_FIELDS
-    + [
-        T.StructField("metric_name", T.StringType(), False),
-        T.StructField("chq_metric_type", T.StringType(), True),  # gauge|count|histogram
-        T.StructField("chq_tid", T.LongType(), True),
-        T.StructField("chq_rollup_sum", T.DoubleType(), True),
-        T.StructField("chq_rollup_count", T.LongType(), True),
-        T.StructField("chq_rollup_avg", T.DoubleType(), True),
-        T.StructField("chq_rollup_min", T.DoubleType(), True),
-        T.StructField("chq_rollup_max", T.DoubleType(), True),
-        T.StructField("chq_rollup_p25", T.DoubleType(), True),
-        T.StructField("chq_rollup_p50", T.DoubleType(), True),
-        T.StructField("chq_rollup_p75", T.DoubleType(), True),
-        T.StructField("chq_rollup_p90", T.DoubleType(), True),
-        T.StructField("chq_rollup_p95", T.DoubleType(), True),
-        T.StructField("chq_rollup_p99", T.DoubleType(), True),
-        T.StructField("chq_sketch", T.BinaryType(), True),
-    ]
-)
-
-SPANS_BASE_SCHEMA = T.StructType(
-    _COMMON_FIELDS
-    + [
-        T.StructField("span_trace_id", T.StringType(), True),
-        T.StructField("span_id", T.StringType(), True),
-        T.StructField("span_parent_span_id", T.StringType(), True),
-        T.StructField("span_name", T.StringType(), True),
-        T.StructField("span_kind", T.StringType(), True),
-        T.StructField("span_status_code", T.StringType(), True),
-        T.StructField("span_status_message", T.StringType(), True),
-        T.StructField("span_duration", T.LongType(), True),  # ns
-        T.StructField("span_end_timestamp", T.LongType(), True),
     ]
 )
 

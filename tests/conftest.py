@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+import time
 
 import pytest
 
@@ -21,3 +23,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+_GROUPS = itertools.count()
+
+
+def jobs_in_group(spark, fn):
+    """Run ``fn()`` under a fresh Spark job group; return its result and
+    the number of jobs the group ran."""
+    sc = spark.sparkContext
+    group = f"jobs-in-group-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(0.5)  # the status listener drains asynchronously
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -9,11 +9,11 @@ sort's sampling pass costs.
 from __future__ import annotations
 
 import math
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import jobs_in_group
 
 from lakerunner_spark.api import QueryAPI
 from lakerunner_spark.catalog import default_log_source, default_metric_catalog
@@ -82,13 +82,6 @@ def test_listings_match_spark_order_by(spark, odd_dir):
 def test_logs_series_runs_two_jobs(spark, sf_dir):
     api = QueryAPI(spark, sf_dir)
     want = api.logs_series({})  # infers the schema outside the group
-    sc = spark.sparkContext
-    group = "logs-series-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        got = api.logs_series({})
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    time.sleep(0.5)  # the status listener drains asynchronously
+    got, jobs = jobs_in_group(spark, lambda: api.logs_series({}))
     assert got == want
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert jobs == 2

@@ -528,7 +528,7 @@ def _scored_docs(spark):
 
 
 def test_percentile_filter_auto_routes(spark):
-    """mode=None routes on the memoized max-per-group rowcount probe:
+    """mode=None routes on the max-per-group rowcount probe:
     small groups take the exact window, groups above the gate take the
     DDSketch threshold route — visible as percent_rank disappearing
     from the plan (the per-source sort of CORPUS rows is gone; the
@@ -536,10 +536,8 @@ def test_percentile_filter_auto_routes(spark):
     only, a bounded few hundred per source). Each auto route returns
     exactly its explicit-mode rows."""
     from lakerunner_spark.dataops.sampling import percentile_filter
-    from lakerunner_spark.plans import probe_cache
 
     df = _scored_docs(spark)
-    probe_cache.clear_cache()
 
     def plan(d):
         return d._jdf.queryExecution().executedPlan().toString()
@@ -557,7 +555,6 @@ def test_percentile_filter_auto_routes(spark):
     sketch = {r.doc_id for r in percentile_filter(
         df, "score", "source", 0.7, mode="sketch").collect()}
     assert {r.doc_id for r in auto_big.collect()} == sketch
-    probe_cache.clear_cache()
 
 
 def test_percentile_filter_routes_agree_off_boundary(spark):

@@ -1,15 +1,17 @@
 """``connected_components`` picks its route with one bounded action.
 
-``e.take(local_threshold + 1)`` both decides between the driver-side
-union-find and the distributed star rounds and, on the local path,
-fetches the edges: no separate ``count()`` job, and never more than
-``local_threshold + 1`` edges on the driver.
+``e.coalesce(1).take(local_threshold + 1)`` both decides between the
+driver-side union-find and the distributed star rounds and, on the
+local path, fetches the edges: no separate ``count()`` job, and never
+more than ``local_threshold + 1`` edges on the driver. The
+``coalesce(1)`` keeps it one job however many partitions the edge
+checkpoint has: a bare ``take`` scans one partition, then 4x, then 20x
+more, and the local path has to read them all.
 """
 
 from __future__ import annotations
 
-import time
-
+from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from lakerunner_spark.dataops import graph
@@ -24,17 +26,6 @@ EDGES = (
 N_EDGES = 33
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    time.sleep(0.5)  # the status listener drains asynchronously
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _labels(df) -> set:
     return {(r.node, r.component) for r in df.collect()}
 
@@ -43,25 +34,49 @@ def _edges(spark):
     return spark.createDataFrame(EDGES, ["src", "dst"])
 
 
-def test_local_route_runs_one_job_beyond_the_checkpoint(spark):
-    edges = _edges(spark)
-    # the checkpoint connected_components materializes before routing
-    _, ckpt_jobs = _jobs_in_group(
-        spark,
-        "cc-checkpoint-only",
-        lambda: edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+def _checkpoint(edges):
+    """The edge checkpoint connected_components materializes before
+    routing."""
+    return (
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .where(F.col("a") != F.col("b"))
         .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True),
+        .localCheckpoint(eager=True)
     )
-    comp, cc_jobs = _jobs_in_group(
-        spark, "cc-local-route", lambda: graph.connected_components(edges)
+
+
+def test_local_route_runs_one_job_beyond_the_checkpoint(spark):
+    edges = _edges(spark)
+    _, ckpt_jobs = jobs_in_group(spark, lambda: _checkpoint(edges))
+    comp, cc_jobs = jobs_in_group(
+        spark, lambda: graph.connected_components(edges)
     )
     # count() + collect() ran 3 jobs here (AQE submits count's shuffle
     # stage as its own job); the bounded take runs one
     assert cc_jobs == ckpt_jobs + 1
     assert len(_labels(comp)) == 31 + 3
+
+
+def test_many_partition_checkpoint_still_routes_in_one_job(spark):
+    # without partition coalescing the distinct leaves the checkpoint
+    # with spark.sql.shuffle.partitions partitions
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    edges = _edges(spark)
+    try:
+        ckpt, ckpt_jobs = jobs_in_group(spark, lambda: _checkpoint(edges))
+        comp, cc_jobs = jobs_in_group(
+            spark, lambda: graph.connected_components(edges)
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert ckpt.rdd.getNumPartitions() >= 4
+    # a bare take ran 2 jobs on 4 partitions and 3 on 8
+    assert cc_jobs == ckpt_jobs + 1
+    pairs = {(max(a, b), min(a, b)) for a, b in EDGES if a != b}
+    assert _labels(comp) == set(graph._local_components(sorted(pairs)))
 
 
 def test_threshold_boundary_picks_the_route(spark, monkeypatch):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from lakerunner_spark.catalog import default_metric_catalog, layout_metric_catalog
@@ -303,8 +304,6 @@ def test_spread_small_scan_rejects_bad_batch_before_any_probe(spark, sf_dir):
     spread looks at the plan: no path may reach the ``.rdd`` partition
     probe without the scan-likeness gate, because building the RDD of
     a broadcast-join plan runs the broadcast."""
-    import time
-
     from lakerunner_spark.operators.skew import spread_small_scan
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -312,16 +311,13 @@ def test_spread_small_scan_rejects_bad_batch_before_any_probe(spark, sf_dir):
     join = docs.select("doc_id", "text").join(
         F.broadcast(ids), "doc_id", "left_semi"
     )
-    sc = spark.sparkContext
-    group = "spread-rejects-bad-batch"
-    sc.setJobGroup(group, group)
-    try:
+
+    def bad_batch():
         with pytest.raises(ValueError, match="rows_per_part"):
             spread_small_scan(join, rows_per_part=0)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    time.sleep(0.5)  # the status listener drains asynchronously
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    _, jobs = jobs_in_group(spark, bad_batch)
+    assert jobs == 0
 
 
 def test_cc_local_path_slices_by_volume(spark):

@@ -3,7 +3,11 @@ the merge identity that makes tiered rollups sound."""
 
 from __future__ import annotations
 
+import math
+import random
+
 import pytest
+from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from lakerunner_spark.operators.sketches import (
@@ -89,104 +93,121 @@ def test_hll_sketch_merge_identity(events):
     assert m == d  # identical sketch state -> identical estimate
 
 
-def test_topk_two_phase_identical(spark):
-    """The opt-in two-phase rank (local top-k per partition, then
-    global) returns exactly the single-window result — the total order
-    from the tiebreak makes the global top-k a subset of the union of
-    local top-ks regardless of partitioning."""
-    import random
+def _random_series(spark, partitions):
+    """5 buckets x 200 series with many value ties, a few NaN and NULL
+    samples, spread over ``partitions`` partitions."""
+    rng = random.Random(11)
 
+    def value():
+        r = rng.random()
+        if r < 0.03:
+            return float("nan")
+        if r < 0.06:
+            return None
+        return float(rng.randint(0, 40))
+
+    rows = [
+        (b * 1000, f"s{i:03d}", value()) for b in range(5) for i in range(200)
+    ]
+    df = spark.createDataFrame(
+        rows, "bucket_ts LONG, series STRING, value DOUBLE"
+    ).repartition(partitions)
+    return rows, df
+
+
+def _ranked_reference(rows, k, descending):
+    """Per bucket, the first k finite samples by value, ties broken by
+    series name."""
+    by_bucket: dict = {}
+    for b, series, v in rows:
+        if v is not None and not math.isnan(v):
+            by_bucket.setdefault(b, []).append((v, series))
+    out = set()
+    for b, samples in by_bucket.items():
+        samples.sort(key=lambda t: (-t[0] if descending else t[0], t[1]))
+        out |= {(b, series, v) for v, series in samples[:k]}
+    return out
+
+
+def test_topk_bottomk_match_a_per_bucket_reference(spark):
+    """The rank does not depend on partitioning: over 16 partitions the
+    rows equal a plain-Python per-bucket sort (NaN and NULL skipped,
+    ties broken by the label columns)."""
     from lakerunner_spark.operators.vector_agg import bottomk, topk
 
-    rng = random.Random(11)
-    rows = [
-        (b * 1000, f"s{i}", rng.random() * 100)
-        for b in range(5)
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows, "bucket_ts LONG, series STRING, value DOUBLE"
-    ).repartition(16)
-    for fn in (topk, bottomk):
-        one = {(r.bucket_ts, r.series) for r in fn(df, 7, two_phase=False).collect()}
-        two = {(r.bucket_ts, r.series) for r in fn(df, 7, two_phase=True).collect()}
-        assert one == two and len(one) == 35
+    rows, df = _random_series(spark, 16)
+    for fn, descending in ((topk, True), (bottomk, False)):
+        got = {(r.bucket_ts, r.series, r.value) for r in fn(df, 7).collect()}
+        assert got == _ranked_reference(rows, 7, descending)
+        assert len(got) == 35
 
 
-def test_topk_auto_routes_by_cardinality(spark):
-    """The phase router (two_phase=None default): per-bucket series
-    count >= threshold flips the plan to two-phase automatically —
-    visible as the spark_partition_id local-rank stage — while
-    low-cardinality inputs keep the single-window plan byte-identical
-    to two_phase=False. Results are identical either way."""
-    import random
+def test_topk_plans_one_exchange_between_window_group_limits(spark):
+    """Catalyst's WindowGroupLimit does the two-phase rank: a Partial
+    limit below the one exchange keeps each partition's first k rows
+    per bucket, a Final one above it; no per-partition salt."""
+    from lakerunner_spark.operators.vector_agg import bottomk, topk
 
-    from lakerunner_spark.operators.vector_agg import topk
-
-    rng = random.Random(7)
-    rows = [
-        (b * 1000, f"s{i}", rng.random() * 100)
-        for b in range(3)
-        for i in range(500)
-    ]
-    df = spark.createDataFrame(
-        rows, "bucket_ts LONG, series STRING, value DOUBLE"
-    ).repartition(8)
-
-    def plan(d):
-        import re
-
-        # strip expression/plan ids — allocation order differs per call
-        s = d._jdf.queryExecution().executedPlan().toString()
-        return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", s))
-
-    # high cardinality relative to the threshold -> auto flips to
-    # two-phase (threshold lowered so the fixture stays test-sized;
-    # the ratio is what the router sees)
-    auto_hi = topk(df, 5, two_phase_threshold=100)
-    assert "SPARK_PARTITION_ID" in plan(auto_hi).upper()
-    # below threshold -> single phase, same plan as the explicit flag
-    auto_lo = topk(df, 5)  # default threshold: 500 << 1M
-    assert "SPARK_PARTITION_ID" not in plan(auto_lo).upper()
-    assert plan(auto_lo) == plan(topk(df, 5, two_phase=False))
-    # identical rows from all three
-    expected = {(r.bucket_ts, r.series) for r in auto_lo.collect()}
-    assert {(r.bucket_ts, r.series) for r in auto_hi.collect()} == expected
-
-
-def test_topk_probe_is_cached_per_plan(spark):
-    """The auto-router's cardinality probe is memoized per (child
-    plan, bucket column): building topk twice over the same child runs
-    the probe jobs once (plans/probe_cache.py). The probe is a routing
-    hint only, so cache staleness can never change result rows — also
-    asserted here by comparing both constructions' output."""
-    from lakerunner_spark.operators.vector_agg import topk
-    from lakerunner_spark.plans import probe_cache
-
-    rows = [(b * 1000, f"s{i}", float(i)) for b in range(2) for i in range(50)]
-    df = spark.createDataFrame(
-        rows, "bucket_ts LONG, series STRING, value DOUBLE"
+    df = spark.range(0, 3000, numPartitions=8).select(
+        ((F.col("id") % 3) * 1000).alias("bucket_ts"),
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("series"),
+        F.rand(7).alias("value"),
     )
-    probe_cache.clear_cache()
-    calls = {"n": 0}
-    orig = probe_cache.cached_probe
+    for fn in (topk, bottomk):
+        plan = fn(df, 5)._jdf.queryExecution().executedPlan().toString()
+        lines = plan.splitlines()
+        exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+        assert len(exchanges) == 1, plan
+        # the tree prints parents first: Final above, Partial below
+        final, partial = [
+            i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln
+        ]
+        assert lines[final].endswith("Final"), plan
+        assert lines[partial].endswith("Partial"), plan
+        assert final < exchanges[0] < partial, plan
+        assert "SPARK_PARTITION_ID" not in plan.upper()
 
-    def counting(d, tag, compute):
-        def wrapped():
-            calls["n"] += 1
-            return compute()
-        return orig(d, tag, wrapped)
 
-    import lakerunner_spark.plans.probe_cache as pc
-    old = pc.cached_probe
-    pc.cached_probe = counting
-    try:
-        a = topk(df, 3).collect()
-        b = topk(df, 3).collect()
-    finally:
-        pc.cached_probe = old
-        probe_cache.clear_cache()
-    assert calls["n"] == 1, f"probe ran {calls['n']} times, expected 1"
-    assert {(r.bucket_ts, r.series) for r in a} == {
-        (r.bucket_ts, r.series) for r in b
-    }
+def test_building_topk_runs_no_job(spark):
+    from lakerunner_spark.operators.vector_agg import bottomk, topk
+
+    _, df = _random_series(spark, 4)
+    for fn in (topk, bottomk):
+        _, jobs = jobs_in_group(spark, lambda: fn(df, 3))
+        assert jobs == 0
+
+
+@pytest.mark.parametrize(
+    "path,inner",
+    [
+        ("/api/v1/query_range",
+         "sum by (event_type) (sum_over_time(events[1h]))"),
+        ("/api/v1/logs/query",
+         'sum by (event_type) (count_over_time({event_type=~".+"}[1h]))'),
+    ],
+    ids=["promql", "logql"],
+)
+def test_topk_request_adds_only_the_rank_shuffle(spark, sf_dir, path, inner):
+    """A topk request runs the jobs of its inner query plus the one
+    shuffle stage of the rank window (AQE submits each shuffle stage as
+    a job); nothing runs to pick a plan."""
+    from lakerunner_spark.api import QueryAPI
+
+    api = QueryAPI(spark, sf_dir)
+    lo, hi = events_stream(spark, sf_dir).agg(
+        F.min("chq_timestamp"), F.max("chq_timestamp")
+    ).first()
+
+    def request(query):
+        out = api.handle(path, {
+            "query": query, "start_ms": int(lo), "end_ms": int(hi) + 1,
+            "step_ms": 3_600_000,
+        })
+        return out["data"]["result"] if "data" in out else out["result"]
+
+    outer = f"topk(2, {inner})"
+    request(inner)  # the table schema is inferred outside the groups
+    inner_out, inner_jobs = jobs_in_group(spark, lambda: request(inner))
+    outer_out, outer_jobs = jobs_in_group(spark, lambda: request(outer))
+    assert inner_out and outer_out
+    assert outer_jobs == inner_jobs + 1

@@ -9,26 +9,15 @@ relation, so requests see changed tables and self-joins resolve.
 from __future__ import annotations
 
 import os
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import jobs_in_group
 
 from lakerunner_spark import testdata
 from lakerunner_spark.api import QueryAPI
 from lakerunner_spark.testdata import _listing, load_table
-
-
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    time.sleep(0.5)  # the status listener drains asynchronously
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _events(sf_dir) -> pa.Table:
@@ -47,11 +36,11 @@ def _logs_series(api) -> list:
 def test_unchanged_table_second_load_runs_no_job(spark, sf_dir, tmp_path):
     pq.write_table(_events(sf_dir), tmp_path / "events.parquet")
     d = str(tmp_path)
-    first, first_jobs = _jobs_in_group(
-        spark, "schema-memo-miss", lambda: load_table(spark, d, "events")
+    first, first_jobs = jobs_in_group(
+        spark, lambda: load_table(spark, d, "events")
     )
-    second, second_jobs = _jobs_in_group(
-        spark, "schema-memo-hit", lambda: load_table(spark, d, "events")
+    second, second_jobs = jobs_in_group(
+        spark, lambda: load_table(spark, d, "events")
     )
     assert first_jobs >= 1  # the inference job the memo saves
     assert second_jobs == 0

@@ -198,13 +198,11 @@ COMMENT = {
         "WindowGroupLimit Partial/Final pair — a map-side top-k "
         "pre-filter before the exchange, so the per-bucket window task "
         "receives at most k rows per upstream partition, not every "
-        "series. On top of that the engine's phase router "
-        "(operators/vector_agg.py) probes one bucket's series count at "
-        "plan time and switches to an explicit two-phase local-rank plan "
-        "above 1M series/bucket, where even the WindowGroupLimit-fed "
-        "single task would straggle. Since r6 the probe is memoized per "
-        "(child plan fingerprint, bucket col) — repeated construction "
-        "pays its two jobs once per session (plans/probe_cache.py)."
+        "series. That is the two-phase rank with no extra shuffle, so "
+        "the engine runs no cardinality probe and has no second route. "
+        "Catalyst inserts the pair for k up to "
+        "spark.sql.optimizer.windowGroupLimitThreshold (1000); above it "
+        "the plan is one full window per bucket."
     ),
     "sp5_trace_rollup": (
         "Trace-tree rollup: the BFS unrolls one join per heap level, "
