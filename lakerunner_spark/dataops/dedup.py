@@ -352,36 +352,6 @@ def neardup_verify(
     )
 
 
-def embedding_neardup(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
-) -> DataFrame:
-    """DEPRECATED corpus-level all-pairs helper: prefer generating
-    candidates (LSH/IVF/MinHash) and verifying with
-    :func:`neardup_verify`. Retained only for candidate-bounded slices
-    that are already small; delegates to neardup_verify over broadcast
-    all-pairs candidates (id_a < id_b)."""
-    import warnings
-
-    warnings.warn(
-        "embedding_neardup is all-pairs; use neardup_verify with bounded "
-        "candidates at corpus scale",
-        DeprecationWarning,
-        stacklevel=2,
-    )
-    return neardup_verify(
-        all_pairs_candidates(df, id_col=id_col),
-        df,
-        threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-        round_dp=round_dp,
-    )
-
-
 def simhash(
     df: DataFrame, text_col: str, id_col: str, bits: int = 16
 ) -> DataFrame:

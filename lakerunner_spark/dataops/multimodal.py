@@ -3,7 +3,7 @@
 Training-data pipelines carry images/audio/video as ``binary`` columns
 with structured metadata. The engine treats the payload as opaque bytes
 end-to-end (Parquet binary columns, no materialization on the driver)
-and runs decode / feature-extract / resize / frame-sample as
+and runs decode / feature-extract / patch / frame-hash as
 Arrow-batched ``mapInPandas`` stages.
 
 The codec libraries (Pillow/ffmpeg/...) are NOT in this environment, so
@@ -473,111 +473,6 @@ def byte_histogram_features(media: DataFrame, buckets: int = 16) -> DataFrame:
         hist.alias("features"),
     )
 
-
-def frame_sample(
-    media: DataFrame,
-    every_ms: int,
-    max_frames: int = 16,
-) -> DataFrame:
-    """Video frame-sampling plan: one row per sampled frame offset.
-
-    The frame *extraction* is part of the stubbed decode; the sampling
-    plan (which offsets, per video, bounded fan-out) is engine logic:
-    explode a bounded sequence — rows stay proportional to frames, not
-    payload bytes.
-    """
-    n_frames = F.least(
-        F.floor(F.col("duration_ms") / every_ms).cast("int") + 1,
-        F.lit(max_frames),
-    )
-    return (
-        media.filter(F.col("media_type") == "video")
-        .withColumn(
-            "frame_offset_ms",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), n_frames - 1),
-                    lambda i: i * every_ms,
-                )
-            ),
-        )
-        .select("media_id", "frame_offset_ms", "duration_ms")
-    )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-# (payload, target_w, target_h) -> resized payload bytes
-Resizer = Callable[[bytes, int, int], bytes]
-
-
-def resize_payload(payload: bytes, width: int, height: int) -> bytes:
-    """Resize an image payload, nearest-neighbor.
-
-    PNG resizes natively (decode -> sample -> re-encode RGB with the
-    stdlib codec; greyscale replicates, alpha drops); other formats need
-    a codec library — inject a resizer or provide one at deployment."""
-    if payload[:8] != PNG_SIGNATURE:
-        raise NotImplementedError(
-            "non-PNG resize needs a codec library; inject resizer=... instead"
-        )
-    w, h, ch, samples = decode_png(payload)
-    out = bytearray(3 * width * height)
-    for ty in range(height):
-        sy = ty * h // height
-        for tx in range(width):
-            sx = tx * w // width
-            src = (sy * w + sx) * ch
-            dst = (ty * width + tx) * 3
-            if ch == 1:
-                out[dst] = out[dst + 1] = out[dst + 2] = samples[src]
-            else:
-                out[dst : dst + 3] = samples[src : src + 3]
-    return encode_png(width, height, bytes(out))
-
-
-def resize_images(
-    media: DataFrame,
-    width: int,
-    height: int,
-    resizer: Resizer | None = None,
-) -> DataFrame:
-    """Resize image payloads partition-parallel (Arrow-batched).
-
-    The output schema records the target dimensions; payloads never
-    touch the driver and each task holds one Arrow batch of them.
-    """
-    rs = resizer or resize_payload
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                rs(bytes(p), width, height) if p is not None else None
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "width": width,
-                    "height": height,
-                    "payload": out,
-                }
-            )
-
-    return (
-        media.filter(F.col("media_type") == "image")
-        .select("media_id", "media_type", "payload")
-        .mapInPandas(run, schema=RESIZED_SCHEMA)
-    )
 
 
 # ------------------------------ AVI (video) --------------------------------

@@ -291,38 +291,6 @@ def chunk_documents(
     )
 
 
-# Max rows in a single group above which the grouped-rank router
-# abandons the exact per-group percent_rank window (one task per
-# group — the textbook straggler when one source IS most of the corpus)
-# for the shuffle-free DDSketch threshold route.
-PERCENTILE_WINDOW_THRESHOLD = 1_000_000
-
-
-def _route_mode(df: DataFrame, by: str, window_threshold: int) -> str:
-    """Shared auto-route gate of the grouped-rank family
-    (:func:`percentile_filter`, :func:`rank_buckets`): the exact
-    per-group window while the largest group fits one task, the
-    DDSketch threshold route above that. UNCACHED by design: the two
-    rank routes differ near cutoffs, so the probe's answer affects
-    ROWS, and memoizing it would let a stale entry silently change
-    kept rows within a session after the table grows. The probe is one
-    bounded aggregation (|groups| intermediate rows, a scalar out),
-    paid only in auto mode; auto callers whose input frame is itself an
-    expensive pipeline should pass a cheaper ``probe_df`` with the same
-    per-group row multiplicity (rank_buckets) so the probe doesn't
-    re-execute the pipeline."""
-    if df.isStreaming:
-        # a batch probe can't run on an unstarted stream
-        return "sketch"
-    row = (
-        df.groupBy(by)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(F.max("_n"))
-        .first()
-    )
-    return "window" if int(row[0] or 0) <= window_threshold else "sketch"
-
-
 def grouped_quantile_thresholds(
     df: DataFrame,
     score_col: str,
@@ -360,12 +328,10 @@ def rank_buckets(
     by: str,
     boundaries: list[float],
     labels: list[str],
-    mode: str | None = None,
-    window_threshold: int = PERCENTILE_WINDOW_THRESHOLD,
+    mode: str,
     relative_accuracy: float = 0.01,
     tiebreak_col: str | None = None,
     out_col: str = "bucket",
-    probe_df: DataFrame | None = None,
 ) -> DataFrame:
     """Assign each row its per-group rank bucket (the CCNet
     head/middle/tail tercile shape, and any per-group quantile binning
@@ -374,8 +340,9 @@ def rank_buckets(
     boundary get ``labels[-1]``. Returns the input columns plus
     ``out_col``.
 
-    Two physical routes, the :func:`percentile_filter` trade applied to
-    bucketing:
+    The caller picks one of two physical routes (the
+    :func:`percentile_filter` trade applied to bucketing); the data
+    never picks it, so a query keeps its route as its corpus grows:
 
     ``mode="window"`` — exact: ``percent_rank() OVER (PARTITION BY by
     ORDER BY score[, tiebreak])`` compared against each boundary. One
@@ -389,18 +356,7 @@ def rank_buckets(
     bucket = first threshold the score does not exceed. No per-group
     sort of corpus rows anywhere; membership near each cutoff differs
     from the exact route by the sketch's relative-error contract (the
-    ds9s trade, property-tested in tests/test_dataprep_ops.py).
-
-    ``mode=None`` — auto-routes on the UNCACHED max-group-rowcount
-    probe (:func:`_route_mode`). ``probe_df``: optional cheaper frame
-    for that probe (same ``by`` column, same per-group row
-    multiplicity) — when ``df`` is itself an expensive pipeline (the
-    txt12 scoring chain), probing it directly would execute the
-    pipeline once per construction; a raw-scan stand-in answers the
-    same routing question at scan cost. Advisory: a multiplicity
-    mismatch can only shift WHERE the gate trips — the same documented
-    window-vs-sketch trade, engaged at a slightly different corpus
-    size — since whichever route wins is applied to ``df`` itself."""
+    ds9s trade, property-tested in tests/test_dataprep_ops.py)."""
     if len(labels) != len(boundaries) + 1:
         raise ValueError(
             "rank_buckets: need len(labels) == len(boundaries) + 1"
@@ -412,17 +368,10 @@ def rank_buckets(
         )
     if boundaries and not (0.0 < boundaries[0] and boundaries[-1] <= 1.0):
         raise ValueError("rank_buckets: boundaries must lie in (0, 1]")
-    if mode not in (None, "window", "sketch"):
-        raise ValueError(f"rank_buckets: unknown mode {mode!r}")
-    if mode is None:
-        if df.isStreaming:  # regardless of what probe_df is
-            mode = "sketch"
-        else:
-            mode = _route_mode(
-                probe_df if probe_df is not None else df,
-                by,
-                window_threshold,
-            )
+    if mode not in ("window", "sketch"):
+        raise ValueError(
+            f"rank_buckets: unknown mode {mode!r} (pass 'window' or 'sketch')"
+        )
     if mode == "window":
         from pyspark.sql import Window
 
@@ -484,8 +433,7 @@ def percentile_filter(
     score_col: str,
     by: str,
     p: float,
-    mode: str | None = None,
-    window_threshold: int = PERCENTILE_WINDOW_THRESHOLD,
+    mode: str,
     relative_accuracy: float = 0.01,
     keep_pct: str | None = None,
 ) -> DataFrame:
@@ -494,7 +442,7 @@ def percentile_filter(
     cutoffs instead of one global threshold). Returns the input columns,
     filtered.
 
-    Two physical routes, identical intent:
+    The caller picks one of two physical routes, identical intent:
 
     ``mode="window"`` — exact: ``percent_rank() OVER (PARTITION BY by
     ORDER BY score)`` and keep ``pct >= p``. One task per group — fine
@@ -511,34 +459,25 @@ def percentile_filter(
     the sketch's relative-error contract: the documented trade of rank
     exactness for removing the per-group sort entirely.
 
-    ``mode=None`` (default) — AUTO, the engine's density-gate
-    pattern: the max-group-rowcount probe (:func:`_route_mode`,
-    shared with :func:`rank_buckets`) routes groups <=
-    ``window_threshold`` to the exact window and anything larger to
-    the sketch route. Because the two routes differ near the cutoff
-    (above), the probe result affects ROWS, so it runs on every
-    construction and is never memoized. Streaming inputs route
-    sketch (a batch probe can't run on an unstarted stream); note that
-    BOTH routes contain analytic windows Structured Streaming can't
-    run directly — end-to-end streaming filtering belongs inside
-    ``foreachBatch`` (where each microbatch is a batch DataFrame and
-    the probe/windows work normally), the same pattern as
+    Both routes contain analytic windows Structured Streaming can't
+    run directly — streaming filtering belongs inside ``foreachBatch``
+    (each microbatch is a batch DataFrame), the same pattern as
     streaming/dedup.py.
 
     ``keep_pct``: window-route-only — also emit the exact percent_rank
-    under this name (callers that report the rank must pin
-    ``mode="window"``; the sketch route has no rank to report and
+    under this name (the sketch route has no rank to report and
     raises).
     """
+    if mode not in ("window", "sketch"):
+        raise ValueError(
+            f"percentile_filter: unknown mode {mode!r} "
+            "(pass 'window' or 'sketch')"
+        )
     if keep_pct and mode != "window":
         raise ValueError(
             "percentile_filter: keep_pct requires mode='window' — the "
             "sketch route computes thresholds, not ranks"
         )
-    if mode not in (None, "window", "sketch"):
-        raise ValueError(f"percentile_filter: unknown mode {mode!r}")
-    if mode is None:
-        mode = _route_mode(df, by, window_threshold)
     if mode == "window":
         from pyspark.sql import Window
 

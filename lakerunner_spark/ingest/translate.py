@@ -22,7 +22,7 @@ from lakerunner_spark.functions.hashing import (
     java_string_hash,
     java_string_hash_fast,
 )
-from lakerunner_spark.schema import dateint, normalize_name, normalize_timestamp_ms
+from lakerunner_spark.schema import normalize_name
 
 
 def normalize_columns(df: DataFrame) -> DataFrame:
@@ -51,12 +51,6 @@ def normalize_columns(df: DataFrame) -> DataFrame:
         quoted = old.replace("`", "``")
         cols.append(F.col(f"`{quoted}`").alias(new))
     return df.select(*cols)
-
-
-def with_timestamp(df: DataFrame, source_col: str, out_col: str = "chq_timestamp") -> DataFrame:
-    """F17: coerce an epoch of unknown unit to ms (+ dateint partition col)."""
-    out = df.withColumn(out_col, normalize_timestamp_ms(F.col(source_col)))
-    return out.withColumn("dateint", dateint(F.col(out_col)))
 
 
 def translate_logs(

@@ -293,7 +293,7 @@ def ddsketch_quantiles(
     n_col: str | None = None,
 ) -> DataFrame:
     """Several quantiles per group from ONE cumulative walk of the
-    sketch (the multi-threshold shape the grouped-rank router needs:
+    sketch (the multi-threshold shape rank_buckets' sketch route needs:
     CCNet terciles read q=1/3 and q=2/3 from the same sketch). One row
     per group with one value column per quantile; same per-quantile
     rule as :func:`ddsketch_quantile` (min bucket whose cumulative

@@ -64,18 +64,6 @@ def _q_label(q: float) -> str:
     return f"p{int(pct)}_{round(pct * 10) % 10}"
 
 
-def hll_cardinality(
-    df: DataFrame,
-    group_cols: list[str],
-    col: str,
-    rsd: float = 0.05,
-) -> DataFrame:
-    """A6 (one-shot): per-group approximate distinct count (HLL++)."""
-    return df.groupBy(*group_cols).agg(
-        F.approx_count_distinct(col, rsd).alias("cardinality")
-    )
-
-
 def hll_sketch_rollup(
     df: DataFrame,
     group_cols: list[str],

@@ -1,13 +1,12 @@
-"""Skew-resistant aggregation: two-phase salted groupBy.
+"""Small-scan spread: give the map work next to a small parquet scan
+more than one task.
 
-AQE's skew-join splitting handles joins, but a groupBy with one giant
-key still funnels that key's rows through a single reducer. Salting
-splits each key into ``salt_n`` subkeys for the first (wide) exchange,
-then merges the tiny per-salt partials — the standard remedy when a
-telemetry tenant or dedup bucket dominates (SURVEY 'skewed keys hurt').
-
-Only algebraic aggregates are offered (sum/count/min/max — the
-engine's rollup core), because they compose across salts exactly.
+Spark plans one task per input split, so a scan of one small file
+runs the expensive per-row work beside it (MinHash signatures, vector
+math, media decodes) on a single core however many the cluster has.
+:func:`spread_small_scan` round-robins such a scan to a partition count
+sized from its parquet footer row count, and leaves every other
+relation alone; :func:`scan_rows` reads that count without a job.
 """
 
 from __future__ import annotations
@@ -15,20 +14,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-_MERGE = {
-    "sum": F.sum,
-    "count": F.sum,  # counts add across salts
-    "min": F.min,
-    "max": F.max,
-}
-_PARTIAL = {
-    "sum": F.sum,
-    "count": lambda c: F.count(c),
-    "min": F.min,
-    "max": F.max,
-}
 
 
 # Rows of scan input that justify one spread task: per-task batch
@@ -142,54 +127,3 @@ def spread_small_scan(
     if target <= 1 or target <= df.rdd.getNumPartitions():
         return df
     return df.repartition(target)
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    salt_n: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation: groupBy(keys + salt) then groupBy(keys).
-
-    ``aggs`` maps output column -> (func, input column), func in
-    {sum, count, min, max}. Result is EXACTLY equal to the direct
-    groupBy (tested), with the first shuffle's key cardinality
-    multiplied by salt_n so no reducer owns a whole hot key.
-
-    The salt is a DETERMINISTIC function of (map partition, row), never
-    ``rand()``: a random salt is a nondeterministic shuffle key, and a
-    fetch-failure map-stage retry would re-salt rows differently —
-    reducers that committed partials from the first attempt then
-    double-count (or drop) rows silently. ``spark_partition_id()`` is
-    retry-deterministic (the same map partition recomputes with the
-    same id) and spreads a hot key across as many salts as the input
-    partitions holding it, independent of value cardinality — hashing
-    the aggregated columns ALONE collapses to a handful of salts when a
-    hot key's values are low-cardinality (e.g. a 0/1 flag under count),
-    silently defeating the mitigation. The value-column hash is mixed
-    in on top so a single giant input partition still fans out.
-    """
-    for func, _ in aggs.values():
-        if func not in _PARTIAL:
-            raise ValueError(f"salted_agg: non-algebraic func {func!r}")
-    in_cols = sorted({col for _, col in aggs.values()})
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(
-            F.xxhash64(F.spark_partition_id(), *[F.col(c) for c in in_cols]),
-            salt_n,
-        ),
-    )
-    partial = salted.groupBy(*keys, "_salt").agg(
-        *[
-            _PARTIAL[func](F.col(col)).alias(out)
-            for out, (func, col) in aggs.items()
-        ]
-    )
-    return partial.groupBy(*keys).agg(
-        *[
-            _MERGE[func](F.col(out)).alias(out)
-            for out, (func, _col) in aggs.items()
-        ]
-    )

@@ -19,10 +19,10 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakerunner_spark.functions.hashing import java_string_hash
+from lakerunner_spark.functions.hashing import java_string_hash, java_string_hash_py
 
 
 def trigrams(value: str) -> list[str]:
@@ -107,7 +107,7 @@ def pruned_scan(
     grams = query_trigrams(needle)
     if not grams:
         return df  # nothing prunable -> full scan (never false-drop)
-    gram_fps = sorted({_java_hash_py(g) for g in grams})
+    gram_fps = sorted({java_string_hash_py(g) for g in grams})
     candidates = (
         index.filter(F.col("fingerprint").isin(gram_fps))
         .groupBy("segment_key")
@@ -115,117 +115,8 @@ def pruned_scan(
         .filter(F.col("_hits") == len(gram_fps))
         .select("segment_key")
     )
-    return _semi_join_candidates(df, segment_col, candidates)
-
-
-def _semi_join_candidates(
-    df: DataFrame, segment_col: str, candidates: DataFrame
-) -> DataFrame:
-    """Shared pruning tail: broadcast the surviving segment keys and
-    left-semi-join the scan against them."""
     return df.join(
         F.broadcast(candidates),
         df[segment_col] == candidates["segment_key"],
         "left_semi",
     )
-
-
-def _java_hash_py(s: str) -> int:
-    from lakerunner_spark.functions.hashing import java_string_hash_py
-
-    return java_string_hash_py(s)
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter variant (SURVEY §7's data-skipping candidate)
-#
-# The exact index above stores one row per (segment, distinct trigram)
-# — exact, but its cardinality grows with content diversity. The Bloom
-# index is FIXED SIZE per segment (BLOOM_WORDS longs), trading false
-# POSITIVES (extra segments scanned — harmless) for size; false
-# negatives are impossible by construction (every contained trigram
-# set its bits), so pruning stays semantics-preserving. At 100 TB the
-# whole Bloom index is segments x 128 bytes — broadcastable even at
-# millions of segments.
-# ---------------------------------------------------------------------------
-
-BLOOM_BITS = 1024
-BLOOM_WORDS = BLOOM_BITS // 64
-BLOOM_HASHES = 2
-
-
-def _bloom_positions_py(fingerprint: int) -> list[int]:
-    """Double hashing from the 32-bit trigram fingerprint; MUST mirror
-    the Spark-side expressions in build_bloom_index bit for bit."""
-    h = fingerprint & 0xFFFFFFFF
-    h1 = h % BLOOM_BITS
-    h2 = ((h >> 13) % BLOOM_BITS) | 1
-    return [(h1 + i * h2) % BLOOM_BITS for i in range(BLOOM_HASHES)]
-
-
-def build_bloom_index(
-    df: DataFrame,
-    segment_col: str,
-    text_col: str,
-) -> DataFrame:
-    """(segment_key, bloom: array<bigint>[BLOOM_WORDS]) — a fixed-size
-    bitset per segment over its trigram fingerprints."""
-    fps = build_fingerprint_index(df, segment_col, text_col)
-    h = F.col("fingerprint").bitwiseAND(F.lit(0xFFFFFFFF))
-    h1 = F.pmod(h, F.lit(BLOOM_BITS))
-    h2 = F.pmod(F.shiftright(h, 13), F.lit(BLOOM_BITS)).bitwiseOR(F.lit(1))
-    pos = F.explode(
-        F.array(
-            *[
-                F.pmod(h1 + F.lit(i) * h2, F.lit(BLOOM_BITS))
-                for i in range(BLOOM_HASHES)
-            ]
-        )
-    ).alias("pos")
-    bits = fps.select("segment_key", pos).select(
-        "segment_key",
-        (F.col("pos") / 64).cast("int").alias("word"),
-        # F.shiftleft takes a literal shift amount; the column-valued
-        # shift needs the SQL form
-        F.expr(
-            "shiftleft(CAST(1 AS BIGINT), CAST(pmod(pos, 64) AS INT))"
-        ).alias("mask"),
-    )
-    words = bits.groupBy("segment_key", "word").agg(
-        F.expr("bit_or(mask)").alias("m")
-    )
-    return words.groupBy("segment_key").agg(
-        F.expr(
-            f"transform(sequence(0, {BLOOM_WORDS - 1}),"
-            " w -> coalesce("
-            "element_at(map_from_entries(collect_list(struct(word, m))), w),"
-            " CAST(0 AS BIGINT)))"
-        ).alias("bloom")
-    )
-
-
-def pruned_scan_bloom(
-    df: DataFrame,
-    bloom_index: DataFrame,
-    segment_col: str,
-    needle: str,
-) -> DataFrame:
-    """Scan only segments whose Bloom filter contains every needle
-    trigram's bits (AND semantics; false positives scan extra segments,
-    false negatives impossible)."""
-    grams = query_trigrams(needle)
-    if not grams:
-        return df  # nothing prunable -> full scan (never false-drop)
-    cond = None
-    for g in sorted(set(grams)):
-        for p in _bloom_positions_py(_java_hash_py(g)):
-            word, bit = divmod(p, 64)
-            hit = (
-                F.element_at("bloom", word + 1).bitwiseAND(
-                    F.shiftleft(F.lit(1).cast("long"), bit)
-                )
-                != 0
-            )
-            cond = hit if cond is None else cond & hit
-    candidates = bloom_index.filter(cond).select("segment_key")
-    return _semi_join_candidates(df, segment_col, candidates)

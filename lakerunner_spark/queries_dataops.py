@@ -1278,33 +1278,21 @@ def txt12_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared against 1/3 and 2/3 as Python-literal doubles. Emits the
     per-(language, bucket) census with mean score.
 
-    The bucketing runs through the shared grouped-rank router
-    (dataops/sampling.py rank_buckets) in AUTO mode (the ds9-style
-    cardinality gate, applied to txt12 itself per the r7 verdict): at
-    every test/gate scale the largest language sits far under the
-    window threshold, so the route is the exact percent_rank this
-    oracle replays rank for rank; past the gate the router switches to
-    the sketch route — at which point results match txt12s's sketch
-    contract rather than this exact oracle, the documented trade. The
-    always-windowless registration is txt12s (same router, pinned
-    sketch mode)."""
+    The bucketing is the exact route of dataops/sampling.py
+    rank_buckets (``mode="window"``), the percent_rank this oracle
+    replays rank for rank; the windowless registration is txt12s (the
+    same operator's ``mode="sketch"`` route)."""
     from lakerunner_spark.dataops.sampling import rank_buckets
     from lakerunner_spark.functions.rounding import portable_round
 
-    j = _txt12_scored(spark, sf_dir)
-    # probe the raw documents scan, not the scoring pipeline: the gate
-    # only needs max docs-per-language, which the scan answers without
-    # executing the vocab/smoothing/scoring chain per construction
-    probe = load_table(spark, sf_dir, "documents").select("lang")
     b = rank_buckets(
-        j,
+        _txt12_scored(spark, sf_dir),
         "score",
         "lang",
         [1 / 3, 2 / 3],
         ["head", "middle", "tail"],
-        mode=None,
+        mode="window",
         tiebreak_col="doc_id",
-        probe_df=probe,
     )
     return b.groupBy("lang", "bucket").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1357,9 +1345,8 @@ def txt12s_ccnet_sketch_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact route by the sketch's relative-error contract (the
     documented ds9s trade; equivalence property-tested); the oracle
     replays the identical bucket algebra, so the route itself is
-    exact-verified. Both routes run through the shared grouped-rank
-    router (dataops/sampling.py rank_buckets); ``mode=None``
-    auto-routes on the max-language-rowcount probe."""
+    exact-verified. Both registrations bucket through
+    dataops/sampling.py rank_buckets, each pinning its route."""
     return _txt12s_plan(_txt12_scored(spark, sf_dir))
 
 
@@ -2032,15 +2019,12 @@ def ds9_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame
     in both engines (percent_rank is rank-based), so no id tiebreak
     is needed for parity.
 
-    This is the EXACT route of dataops/sampling.py's routed
-    ``percentile_filter`` operator, pinned to ``mode="window"``
-    because the output reports the rank itself (``pct``), which only
-    the window route has. The shuffle-free 100 TB route — per-source
-    DDSketch thresholds broadcast back, no per-source sort of corpus
-    rows anywhere — is the SAME operator's ``mode="sketch"`` path,
-    registered as ds9s_quality_sketch_filter; ``mode=None`` auto-routes
-    between them on a memoized max-source-rowcount probe
-    (tests/test_dataprep_ops.py::test_percentile_filter_auto_routes)."""
+    This is the EXACT route of dataops/sampling.py's
+    ``percentile_filter`` operator, ``mode="window"``, the only route
+    that has the rank the output reports (``pct``). The shuffle-free
+    100 TB route — per-source DDSketch thresholds broadcast back, no
+    per-source sort of corpus rows anywhere — is the SAME operator's
+    ``mode="sketch"`` path, registered as ds9s_quality_sketch_filter."""
     from lakerunner_spark.dataops.sampling import percentile_filter
     from lakerunner_spark.dataops.text import quality_score
     from lakerunner_spark.functions.rounding import portable_round
@@ -2109,9 +2093,7 @@ def ds9s_quality_sketch_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     source is most of the data. Kept membership differs from the exact
     rank route near the cutoff by the sketch's relative-error contract
     (the documented trade); the oracle replays the identical bucket
-    math, so the route itself is exact-verified. ``mode=None``
-    auto-routes between the two on a max-source-rowcount probe (the
-    density-gate pattern)."""
+    math, so the route itself is exact-verified."""
     return _ds9s_plan(load_table(spark, sf_dir, "documents"))
 
 
@@ -3415,8 +3397,8 @@ def txt13_ccnet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fastText) -> unigram-LM scoring of the rebuilt text (the txt9
     machinery, vocabulary re-trained on the deduplicated corpus — the
     order CCNet itself specifies: LM after dedup) -> per-predicted-
-    language perplexity terciles through the grouped-rank router's
-    SKETCH mode (the 100 TB route: no per-language sort anywhere).
+    language perplexity terciles through rank_buckets'
+    SKETCH route (the 100 TB route: no per-language sort anywhere).
     Emits the (predicted_lang, bucket) census. Docs whose every
     paragraph was a later duplicate vanish (nothing left to score);
     the oracle replays dedup, rebuild, vote, vocabulary, smoothing,

@@ -91,8 +91,8 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scale factor and a compile-time hint would bypass the size
     check at 100 TB (the ds8/dd10 hazard class; only constant-size
     nation/region keep hints anywhere in this module). The
-    orders⋈lineitem join shuffles on orderkey (its natural co-location
-    key — bucketed layouts make it shuffle-free).
+    orders⋈lineitem join shuffles on orderkey, its natural co-location
+    key.
     """
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"

@@ -515,7 +515,7 @@ def test_chunk_documents_property(spark):
         assert [c["chunk_idx"] for c in out] == list(range(len(out)))
 
 
-# ------------------------- percentile_filter router ------------------------
+# ------------------------- grouped-rank routes -----------------------------
 
 
 def _scored_docs(spark):
@@ -527,34 +527,24 @@ def _scored_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, source string, score double")
 
 
-def test_percentile_filter_auto_routes(spark):
-    """mode=None routes on the max-per-group rowcount probe:
-    small groups take the exact window, groups above the gate take the
-    DDSketch threshold route — visible as percent_rank disappearing
-    from the plan (the per-source sort of CORPUS rows is gone; the
-    sketch's own cumulative walk windows over (source x bucket) rows
-    only, a bounded few hundred per source). Each auto route returns
-    exactly its explicit-mode rows."""
-    from lakerunner_spark.dataops.sampling import percentile_filter
+def test_txt12_build_runs_no_more_jobs_than_txt12s(spark, sf_dir):
+    """txt12 pins the exact route instead of probing the corpus for its
+    largest language, so building it runs exactly the jobs building its
+    sketch twin txt12s runs: none of them choose a route."""
+    from conftest import jobs_in_group
 
-    df = _scored_docs(spark)
-
-    def plan(d):
-        return d._jdf.queryExecution().executedPlan().toString()
-
-    auto_small = percentile_filter(df, "score", "source", 0.7)
-    assert "percent_rank" in plan(auto_small)
-    exact = {r.doc_id for r in percentile_filter(
-        df, "score", "source", 0.7, mode="window").collect()}
-    assert {r.doc_id for r in auto_small.collect()} == exact
-
-    auto_big = percentile_filter(
-        df, "score", "source", 0.7, window_threshold=10
+    from lakerunner_spark.queries_dataops import (
+        txt12_ccnet_buckets,
+        txt12s_ccnet_sketch_buckets,
     )
-    assert "percent_rank" not in plan(auto_big)
-    sketch = {r.doc_id for r in percentile_filter(
-        df, "score", "source", 0.7, mode="sketch").collect()}
-    assert {r.doc_id for r in auto_big.collect()} == sketch
+
+    builds = (txt12_ccnet_buckets, txt12s_ccnet_sketch_buckets)
+    for build in builds:  # warm the per-table schema memo
+        build(spark, sf_dir)
+    exact, sketch = (
+        jobs_in_group(spark, lambda b=b: b(spark, sf_dir))[1] for b in builds
+    )
+    assert exact == sketch, (exact, sketch)
 
 
 def test_percentile_filter_routes_agree_off_boundary(spark):
@@ -575,36 +565,8 @@ def test_percentile_filter_routes_agree_off_boundary(spark):
         assert abs(s - cutoff) <= 0.05 * max(cutoff, 1e-9), (s, cutoff)
 
 
-def test_rank_buckets_auto_routes(spark):
-    """rank_buckets (the grouped-rank router's bucketing face, txt12/
-    txt12s) auto-routes on the same max-group-rowcount probe as
-    percentile_filter: below the gate the exact percent_rank window,
-    above it the DDSketch threshold route with NO rank window — and
-    each auto route returns exactly its explicit-mode rows."""
-    from lakerunner_spark.dataops.sampling import rank_buckets
-
-    df = _scored_docs(spark)
-    args = (df, "score", "source", [1 / 3, 2 / 3],
-            ["head", "middle", "tail"])
-
-    def plan(d):
-        return d._jdf.queryExecution().executedPlan().toString()
-
-    auto_small = rank_buckets(*args, tiebreak_col="doc_id")
-    assert "percent_rank" in plan(auto_small)
-    exact = {(r.doc_id, r.bucket) for r in rank_buckets(
-        *args, mode="window", tiebreak_col="doc_id").collect()}
-    assert {(r.doc_id, r.bucket) for r in auto_small.collect()} == exact
-
-    auto_big = rank_buckets(*args, window_threshold=10)
-    assert "percent_rank" not in plan(auto_big)
-    sketch = {(r.doc_id, r.bucket) for r in rank_buckets(
-        *args, mode="sketch").collect()}
-    assert {(r.doc_id, r.bucket) for r in auto_big.collect()} == sketch
-
-
 def test_rank_buckets_routes_agree_off_boundary(spark):
-    """Router equivalence property (the verdict's 'scale-safe by
+    """Route equivalence property (the verdict's 'scale-safe by
     default' contract): the window and sketch routes assign the SAME
     bucket to every row except within the sketch's relative-error band
     around each boundary threshold. With 1% relative accuracy the band
@@ -646,11 +608,15 @@ def test_rank_buckets_validates_arguments():
     from lakerunner_spark.dataops.sampling import rank_buckets
 
     with pytest.raises(ValueError, match="labels"):
-        rank_buckets(None, "s", "g", [0.5], ["a"])
+        rank_buckets(None, "s", "g", [0.5], ["a"], mode="window")
     with pytest.raises(ValueError, match="ascending"):
-        rank_buckets(None, "s", "g", [0.7, 0.3], ["a", "b", "c"])
+        rank_buckets(None, "s", "g", [0.7, 0.3], ["a", "b", "c"],
+                     mode="window")
     with pytest.raises(ValueError, match="unknown mode"):
         rank_buckets(None, "s", "g", [0.5], ["a", "b"], mode="exact")
+    # no auto route: the caller must pick one
+    with pytest.raises(ValueError, match="unknown mode"):
+        rank_buckets(None, "s", "g", [0.5], ["a", "b"], mode=None)
 
 
 def test_decontaminate_spans_cuts_quote_keeps_rest(spark):
@@ -708,6 +674,9 @@ def test_percentile_filter_keep_pct_requires_window():
     with pytest.raises(ValueError, match="keep_pct"):
         percentile_filter(None, "score", "source", 0.7, mode="sketch",
                           keep_pct="pct")
+    # no auto route: the caller must pick one
+    with pytest.raises(ValueError, match="unknown mode"):
+        percentile_filter(None, "score", "source", 0.7, mode=None)
 
 
 # ------------------------- substring_verify_runs ---------------------------

@@ -60,7 +60,7 @@ def test_merge_equals_direct(absvals):
 
 
 def test_quantiles_one_walk_matches_repeated_single(absvals):
-    """ddsketch_quantiles (the grouped-rank router's multi-threshold
+    """ddsketch_quantiles (rank_buckets' sketch-route multi-threshold
     read: several quantiles from ONE cumulative walk) must return
     bit-identical values to running ddsketch_quantile once per q —
     same rank rule, same mid-bucket estimate, one aggregation."""

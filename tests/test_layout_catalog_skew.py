@@ -1,4 +1,4 @@
-"""Tier-aware layout catalog through the PromQL front-end + salted agg."""
+"""Tier-aware layout catalog through the PromQL front-end + small-scan spread."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from lakerunner_spark.catalog import default_metric_catalog, layout_metric_catalog
-from lakerunner_spark.operators.skew import salted_agg
 from lakerunner_spark.promql.compiler import compile_promql
 from lakerunner_spark.testdata import events_stream
 
@@ -84,40 +83,6 @@ def test_layout_rejects_raw_only_functions(spark, cooked_metrics):
         compile_promql("histogram_quantile(0.9, purchase)", cat, 60_000)
 
 
-def test_salted_agg_equals_direct(spark, sf_dir):
-    e = events_stream(spark, sf_dir)
-    salted = salted_agg(
-        e,
-        ["event_type"],
-        {
-            "s": ("sum", "value"),
-            "c": ("count", "value"),
-            "mn": ("min", "value"),
-            "mx": ("max", "value"),
-        },
-        salt_n=8,
-    )
-    direct = e.groupBy("event_type").agg(
-        F.sum("value").alias("s"),
-        F.count("value").alias("c"),
-        F.min("value").alias("mn"),
-        F.max("value").alias("mx"),
-    )
-    got = {
-        (r.event_type, round(r.s, 6), r.c, r.mn, r.mx) for r in salted.collect()
-    }
-    want = {
-        (r.event_type, round(r.s, 6), r.c, r.mn, r.mx) for r in direct.collect()
-    }
-    assert got == want
-
-
-def test_salted_agg_rejects_non_algebraic(spark, sf_dir):
-    e = events_stream(spark, sf_dir)
-    with pytest.raises(ValueError, match="non-algebraic"):
-        salted_agg(e, ["event_type"], {"a": ("avg", "value")})
-
-
 def test_coarse_tier_routes_to_sparse_semantics(spark, cooked_metrics):
     """When only a tier coarser than the step survives (retention ate the
     fine tiers), the front-end must use the sparse-cadence range path:
@@ -160,62 +125,6 @@ def test_coarse_tier_routes_to_sparse_semantics(spark, cooked_metrics):
     # actually changed the result (sum_over_time is ungated on the fixed
     # path, but the sparse path gates on true coverage)
     assert g != to_map(want_fixed)
-
-
-def test_bloom_prune_sound_and_skips(spark):
-    """Bloom pruning must NEVER drop a segment containing the needle
-    (soundness: every contained trigram set its bits), and must
-    actually skip non-matching segments for selective needles. Results
-    after pruning equal the unpruned filter exactly."""
-    from lakerunner_spark.plans.pruning import (
-        build_bloom_index,
-        build_fingerprint_index,
-        pruned_scan,
-        pruned_scan_bloom,
-    )
-
-    rows = []
-    words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
-             "golf", "hotel"]
-    for seg in range(8):
-        for i in range(20):
-            rows.append((f"seg{seg}", f"{words[seg]} line {i} common tail"))
-    rows.append(("seg7", "the rare zebra quake token"))
-    df = spark.createDataFrame(rows, ["segment_key", "line"])
-
-    bloom = build_bloom_index(df, "segment_key", "line").cache()
-    assert bloom.count() == 8
-    # fixed size: every segment's bitset has exactly BLOOM_WORDS longs
-    from lakerunner_spark.plans.pruning import BLOOM_WORDS
-
-    assert all(len(r.bloom) == BLOOM_WORDS for r in bloom.collect())
-
-    for needle in ["zebra quake", "charlie", "common tail", "absent needle"]:
-        exact = df.filter(F.lower("line").contains(needle)).collect()
-        got = pruned_scan_bloom(df, bloom, "segment_key", needle).filter(
-            F.lower("line").contains(needle)
-        ).collect()
-        assert sorted(map(tuple, got)) == sorted(map(tuple, exact)), needle
-
-    # selectivity: the rare needle's scan touches only seg7
-    pruned = pruned_scan_bloom(df, bloom, "segment_key", "zebra quake")
-    assert {r.segment_key for r in pruned.select("segment_key").distinct().collect()} == {"seg7"}
-
-    # agreement with the exact index on surviving segment sets (bloom
-    # may keep extra segments, never fewer)
-    idx = build_fingerprint_index(df, "segment_key", "line")
-    for needle in ["charlie", "zebra", "line"]:
-        exact_segs = {
-            r.segment_key
-            for r in pruned_scan(df, idx, "segment_key", needle)
-            .select("segment_key").distinct().collect()
-        }
-        bloom_segs = {
-            r.segment_key
-            for r in pruned_scan_bloom(df, bloom, "segment_key", needle)
-            .select("segment_key").distinct().collect()
-        }
-        assert exact_segs <= bloom_segs, needle
 
 
 def test_zipf_fixture_and_dd14_shape_equivalence(spark, tmp_path):

@@ -12,7 +12,6 @@ from lakerunner_spark.dataops.multimodal import (
     MEDIA_SCHEMA,
     byte_histogram_features,
     extract_features,
-    frame_sample,
 )
 from lakerunner_spark.dataops.similarity import cosine_topk, ivf_topk, lsh_bucket_topk
 from lakerunner_spark.testdata import load_table
@@ -96,16 +95,6 @@ def test_byte_histogram_matches_numpy_bincount(spark, buckets):
         assert out[mid].features == want.tolist(), mid
 
 
-def test_frame_sample_bounded(media):
-    frames = frame_sample(media, every_ms=1_000, max_frames=4).collect()
-    by_id = {}
-    for r in frames:
-        by_id.setdefault(r.media_id, []).append(r.frame_offset_ms)
-    # 5s video at 1s cadence capped at 4 frames
-    assert sorted(by_id[3]) == [0, 1_000, 2_000, 3_000]
-    assert set(by_id) == {3}  # only videos
-
-
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").cache()
@@ -162,29 +151,6 @@ def test_lsh_candidates_bucket_cap(spark, sf_dir):
     u = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
     c = {(r.doc_a, r.doc_b) for r in capped.collect()}
     assert c <= u  # capping never invents pairs
-
-
-def test_resize_images_with_injected_resizer(media):
-    from lakerunner_spark.dataops.multimodal import resize_images
-
-    def fake_resize(payload: bytes, w: int, h: int) -> bytes:
-        return payload[: w * h]  # deterministic stand-in
-
-    out = {
-        r.media_id: r
-        for r in resize_images(media, 2, 3, resizer=fake_resize).collect()
-    }
-    assert set(out) == {1, 2}  # images only
-    assert out[1].width == 2 and out[1].height == 3
-    assert bytes(out[1].payload) == bytes(range(6))
-    assert bytes(out[2].payload) == bytes([255] * 6)
-
-
-def test_resize_without_codec_raises(media):
-    from lakerunner_spark.dataops.multimodal import resize_images
-
-    with pytest.raises(Exception, match="(?i)codec|NotImplemented"):
-        resize_images(media, 2, 2).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -264,7 +230,7 @@ def test_decode_image_dispatch():
 
 
 # ---------------------------------------------------------------------------
-# stdlib WAV codec + native PNG resize (round-3 continuation)
+# stdlib WAV codec (round-3 continuation)
 # ---------------------------------------------------------------------------
 
 
@@ -311,47 +277,6 @@ def test_wav_truncated_data_chunk_raises():
     # a short fmt chunk is equally malformed
     with _pytest.raises(ValueError, match="truncated|short fmt"):
         decode_wav(wav[:20])
-
-
-def test_png_native_resize_nearest_neighbor():
-    from lakerunner_spark.dataops.multimodal import (
-        decode_png,
-        encode_png,
-        resize_payload,
-    )
-
-    # 4x4 image with per-pixel distinct red channel
-    rgb = bytes(
-        v for y in range(4) for x in range(4) for v in (y * 4 + x, 0, 255)
-    )
-    png = encode_png(4, 4, rgb)
-    out = resize_payload(png, 2, 2)
-    w, h, ch, samples = decode_png(out)
-    assert (w, h, ch) == (2, 2, 3)
-    # nearest neighbor picks source pixels (0,0),(0,2),(2,0),(2,2)
-    reds = [samples[i * 3] for i in range(4)]
-    assert reds == [0, 2, 8, 10]
-    assert all(samples[i * 3 + 2] == 255 for i in range(4))
-
-
-def test_resize_images_native_png(spark):
-    from lakerunner_spark.dataops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_png,
-        encode_png,
-        resize_images,
-    )
-
-    rows = [
-        (1, "image", 4, 4, None,
-         bytearray(encode_png(4, 4, bytes(48 * [7])))),
-        (2, "audio", None, None, 10, bytearray(b"RIFF1234WAVE")),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = resize_images(media, 2, 2).collect()
-    assert len(out) == 1  # audio row filtered by media_type
-    w, h, ch, samples = decode_png(bytes(out[0]["payload"]))
-    assert (w, h) == (2, 2) and set(samples) == {7}
 
 
 def test_quantize_roundtrip_bounds(spark):
@@ -715,11 +640,11 @@ def test_rank_buckets_rejects_degenerate_boundaries(spark):
 
     df = spark.createDataFrame([(1, "a", 0.5)], "id long, g string, score double")
     with _pytest.raises(ValueError, match="strictly ascending"):
-        rank_buckets(df, "score", "g", [0.5, 0.5], ["x", "y", "z"])
+        rank_buckets(df, "score", "g", [0.5, 0.5], ["x", "y", "z"], "window")
     with _pytest.raises(ValueError, match=r"\(0, 1\]"):
-        rank_buckets(df, "score", "g", [0.0, 0.5], ["x", "y", "z"])
+        rank_buckets(df, "score", "g", [0.0, 0.5], ["x", "y", "z"], "window")
     with _pytest.raises(ValueError, match=r"\(0, 1\]"):
-        rank_buckets(df, "score", "g", [0.5, 1.5], ["x", "y", "z"])
+        rank_buckets(df, "score", "g", [0.5, 1.5], ["x", "y", "z"], "window")
 
 
 def test_video_neardup_temporal_runs_planted(spark):

@@ -1,6 +1,5 @@
 """Property-based tests (hypothesis) for the engine's pure kernels:
-bucket math, duration parsing, type promotion, hashing, and trigram
-pruning soundness."""
+bucket math, duration parsing, hashing, and trigram pruning soundness."""
 
 from __future__ import annotations
 
@@ -10,8 +9,6 @@ from hypothesis import strategies as st
 from lakerunner_spark.functions.hashing import fnv64a_py, java_string_hash_py
 from lakerunner_spark.plans.pruning import query_trigrams, trigrams
 from lakerunner_spark.promql.parser import parse_duration_ms
-from lakerunner_spark.schema import promote_types
-from pyspark.sql import types as T
 
 
 # -- bucket math -------------------------------------------------------------
@@ -42,28 +39,6 @@ def test_duration_parse_is_sum_of_parts(parts):
                "d": 86_400_000, "w": 604_800_000}
     text = "".join(f"{n}{u}" for n, u in parts)
     assert parse_duration_ms(text) == sum(n * unit_ms[u] for n, u in parts)
-
-
-# -- type promotion ----------------------------------------------------------
-
-_TYPES = [T.BooleanType(), T.LongType(), T.DoubleType(), T.StringType()]
-
-
-@given(a=st.sampled_from(_TYPES), b=st.sampled_from(_TYPES))
-def test_promotion_commutative(a, b):
-    assert promote_types(a, b) == promote_types(b, a)
-
-
-@given(a=st.sampled_from(_TYPES), b=st.sampled_from(_TYPES), c=st.sampled_from(_TYPES))
-def test_promotion_associative(a, b, c):
-    assert promote_types(promote_types(a, b), c) == promote_types(
-        a, promote_types(b, c)
-    )
-
-
-@given(a=st.sampled_from(_TYPES))
-def test_promotion_idempotent(a):
-    assert promote_types(a, a) == a
 
 
 # -- hashing -----------------------------------------------------------------
@@ -250,23 +225,6 @@ def test_batch_hash_kernels_match_python(s):
     assert fb[0] == fnv64a_py(s) and jb[0] == java_string_hash_py(s)
     assert fb[1] is pd.NA and jb[1] is pd.NA
     assert fb[2] == fnv64a_py(s + "x")
-
-
-@given(s=st.text(alphabet=st.sampled_from("abcdefghij0123 "), min_size=3,
-                 max_size=30))
-@settings(max_examples=150, deadline=None)
-def test_bloom_positions_in_range_and_deterministic(s):
-    from lakerunner_spark.plans.pruning import (
-        BLOOM_BITS,
-        BLOOM_HASHES,
-        _bloom_positions_py,
-        _java_hash_py,
-    )
-
-    pos = _bloom_positions_py(_java_hash_py(s))
-    assert len(pos) == BLOOM_HASHES
-    assert all(0 <= p < BLOOM_BITS for p in pos)
-    assert pos == _bloom_positions_py(_java_hash_py(s))
 
 
 @given(s=st.text(alphabet=st.sampled_from(
@@ -462,7 +420,7 @@ def test_parsers_fail_closed_on_raw_text(s):
 )
 @settings(max_examples=300, deadline=None)
 def test_grouped_rank_sketch_contract(scores, q):
-    """The grouped-rank router's correctness CONTRACT, as algebra (the
+    """The grouped-rank routes' correctness CONTRACT, as algebra (the
     Spark tests check the implementation matches this math; this checks
     the math itself over random inputs): the DDSketch threshold route
     (bucket = ceil(ln s / ln gamma), cum walk to rank floor(q*(n-1)),

@@ -1,22 +1,13 @@
-"""Schema + translator tests (P14/P15/F16/F17 glue)."""
+"""Schema + translator tests (P15/F16 glue)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lakerunner_spark.ingest.translate import (
     normalize_columns,
     translate_logs,
     translate_metrics,
-    with_timestamp,
 )
-from lakerunner_spark.schema import (
-    LOGS_BASE_SCHEMA,
-    conform,
-    normalize_name,
-    otel_attr_column,
-)
+from lakerunner_spark.schema import normalize_name
 
 
 def test_normalize_name_rules():
@@ -24,38 +15,12 @@ def test_normalize_name_rules():
     assert normalize_name("HTTP-Status!!") == "http_status"
     assert normalize_name("__weird__") == "weird"
     assert normalize_name("...") == "_"
-    assert otel_attr_column("resource", "K8s.Pod.Name") == "resource_k8s_pod_name"
-
-
-def test_conform_casts_and_fills(spark):
-    df = spark.createDataFrame(
-        [(1_700_000_000_000, "hello", "extra")],
-        ["chq_timestamp", "log_message", "custom_attr"],
-    )
-    out = conform(df, LOGS_BASE_SCHEMA)
-    # declared columns exist with declared types, missing -> nulls
-    assert out.schema["chq_tsns"].dataType == T.LongType()
-    assert out.schema["log_level"].dataType == T.StringType()
-    row = out.first()
-    assert row.chq_tsns is None and row.log_level is None
-    # extra attribute columns pass through (wide sparse model)
-    assert row.custom_attr == "extra"
 
 
 def test_normalize_columns(spark):
     df = spark.createDataFrame([(1, 2)], ["User.Id", "HTTP-Code"])
     out = normalize_columns(df)
     assert out.columns == ["user_id", "http_code"]
-
-
-def test_with_timestamp_units(spark):
-    df = spark.createDataFrame(
-        [(1_700_000_000,), (1_700_000_000_000,), (1_700_000_000_000_000,)],
-        ["ts"],
-    )
-    out = with_timestamp(df, "ts").select("chq_timestamp", "dateint").collect()
-    assert {r.chq_timestamp for r in out} == {1_700_000_000_000}
-    assert {r.dateint for r in out} == {20231114}
 
 
 def test_translate_logs_fingerprint_groups_templates(spark):

@@ -11,7 +11,6 @@ from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from lakerunner_spark.operators.sketches import (
-    hll_cardinality,
     hll_estimate,
     hll_sketch_merge,
     hll_sketch_rollup,
@@ -70,7 +69,9 @@ def test_quantile_sketch_close_to_exact(events):
 def test_hll_cardinality_close_to_exact(events):
     approx = {
         r.event_type: r.cardinality
-        for r in hll_cardinality(events, ["event_type"], "user_id", rsd=0.02).collect()
+        for r in hll_estimate(
+            hll_sketch_rollup(events, ["event_type"], "user_id")
+        ).collect()
     }
     exact = {
         r.event_type: r.n

@@ -279,7 +279,7 @@ def test_streaming_image_patches_match_batch(spark, tmp_path):
 
 
 def test_rank_buckets_in_foreachbatch_matches_batch(spark, tmp_path):
-    """The grouped-rank router's documented streaming contract
+    """rank_buckets' documented streaming contract
     (dataops/sampling.py): BOTH routes contain analytic windows
     Structured Streaming can't run directly, so streaming filtering
     runs inside foreachBatch, where each microbatch is a plain batch

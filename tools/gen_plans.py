@@ -156,9 +156,8 @@ COMMENT = {
         "hundred sketch rows per source), joined back as a one-row-per-"
         "source table. NO per-source sort of corpus rows anywhere — the "
         "one-task-per-source straggler the exact percent_rank route "
-        "(ds9) hits when one source dominates is gone; mode=None "
-        "auto-routes between the two on a memoized max-source-count "
-        "probe."
+        "(ds9) hits when one source dominates is gone. The caller "
+        "picks the route; nothing probes the corpus to choose it."
     ),
     "dd11v_substring_verify": (
         "Exact-substring verification: grams materialize ONLY for docs "
@@ -259,9 +258,8 @@ COMMENT = {
         "size — joined back unhinted (one row per language; AQE "
         "broadcasts). NO percent_rank anywhere in the plan "
         "(plan-guarded): the majority language of a real crawl never "
-        "sorts in one task. Shares the grouped-rank router "
-        "(rank_buckets) with ds9s; mode=None auto-routes on the "
-        "uncached max-language-rowcount probe."
+        "sorts in one task. Shares rank_buckets' sketch route with "
+        "txt13; txt12 pins the exact window route."
     ),
     "dd17_decontaminate_spans": (
         "Span-level decontamination (dd13 x dd16): the benchmark "
