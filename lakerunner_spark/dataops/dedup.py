@@ -71,17 +71,17 @@ def shingles(
     )
 
 
-def _shingle_array_expr(n: int, tokens_col: str = "tokens") -> str:
+def _shingle_array_expr(n: int) -> str:
     """SQL expr: token array -> word n-gram shingle array (per row)."""
-    concat_args = ", ' ', ".join(f"{tokens_col}[i+{j}]" for j in range(n))
+    concat_args = ", ' ', ".join(f"tokens[i+{j}]" for j in range(n))
     return (
-        f"transform(sequence(0, size({tokens_col})-{n}),"
+        f"transform(sequence(0, size(tokens)-{n}),"
         f" i -> concat({concat_args}))"
     )
 
 
 def minhash_signatures(
-    shingle_df: DataFrame, id_col: str, num_hashes: int = DEFAULT_NUM_HASHES
+    shingle_df: DataFrame, id_col: str
 ) -> DataFrame:
     """Per-doc MinHash signature from md5 chunks (exploded-shingle form).
 
@@ -92,7 +92,7 @@ def minhash_signatures(
     corpus — it computes the same values with no explode and no shuffle.
     """
     aggs = []
-    for i in range(num_hashes):
+    for i in range(DEFAULT_NUM_HASHES):
         seed, chunk = divmod(i, 4)
         digest = F.md5(F.concat(F.lit(f"{seed}|"), F.col("shingle")))
         aggs.append(F.min(F.substring(digest, chunk * 8 + 1, 8)).alias(f"h{i}"))
@@ -157,16 +157,8 @@ def lsh_candidates(
     id_col: str,
     num_hashes: int = DEFAULT_NUM_HASHES,
     band_rows: int = DEFAULT_BAND_ROWS,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Band the signatures and self-join: pairs sharing >= 1 band bucket.
-
-    ``max_bucket_size`` drops buckets with more members ("template
-    spam" — a bucket of B docs emits B² pairs; at corpus scale one
-    boilerplate cluster can dominate the join). Capping trades those
-    pairs away; production pipelines dedup such clusters by exact hash
-    instead.
-    """
+    """Band the signatures and self-join: pairs sharing >= 1 band bucket."""
     n_bands = num_hashes // band_rows
     band_structs = [
         F.struct(
@@ -180,15 +172,6 @@ def lsh_candidates(
     bands = sig_df.select(
         F.col(id_col), F.explode(F.array(*band_structs)).alias("bs")
     ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        sizes = Window.partitionBy("band", "sig")
-        bands = (
-            bands.withColumn("_bn", F.count(F.lit(1)).over(sizes))
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -284,18 +267,15 @@ def jaccard_verify(
 
 def all_pairs_candidates(
     df: DataFrame,
-    id_col: str = "vec_id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
 ) -> DataFrame:
     """Explicit all-pairs candidate generator (id_a < id_b) for a
     BOUNDED slice — the candidate half of the candidates->verify split
     when the slice is small enough that all pairs are acceptable. At
     corpus scale use the LSH/IVF/MinHash generators instead."""
-    ids = df.select(F.col(id_col))
-    return ids.select(F.col(id_col).alias(a_col)).join(
-        F.broadcast(ids.select(F.col(id_col).alias(b_col))),
-        F.col(a_col) < F.col(b_col),
+    ids = df.select(F.col("vec_id"))
+    return ids.select(F.col("vec_id").alias("id_a")).join(
+        F.broadcast(ids.select(F.col("vec_id").alias("id_b"))),
+        F.col("id_a") < F.col("id_b"),
     )
 
 
@@ -303,17 +283,12 @@ def neardup_verify(
     candidates: DataFrame,
     corpus: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Verify candidate near-dup pairs by exact embedding cosine — the
     verify stage of the candidates->verify split, mirroring
     :func:`jaccard_verify`.
 
-    Requires an EXPLICIT candidate-pair DataFrame (``a_col``/``b_col``)
+    Requires an EXPLICIT candidate-pair DataFrame (``id_a``/``id_b``)
     produced by a bounded generator (``similarity.lsh_bucket_topk`` /
     ``ivf_topk`` buckets, MinHash bands, a sampled slice); there is
     deliberately no corpus-level entry point on this path, so an
@@ -324,30 +299,30 @@ def neardup_verify(
     from lakerunner_spark.dataops.similarity import _dot, _norm
 
     a = corpus.select(
-        F.col(id_col).alias(a_col),
-        F.col(vec_col).alias("_va"),
-        _norm(vec_col).alias("_na"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("_va"),
+        _norm("embedding").alias("_na"),
     )
     b = corpus.select(
-        F.col(id_col).alias(b_col),
-        F.col(vec_col).alias("_vb"),
-        _norm(vec_col).alias("_nb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("_vb"),
+        _norm("embedding").alias("_nb"),
     )
     # zero-norm guard makes the cosine finite by construction (0/0 is
     # NaN and the engines disagree on NaN >= threshold — the
     # semantic_dedup convention), which licenses the branchless round:
     # the dot fold must stay out of portable_round's NaN when-branch
     pairs = (
-        candidates.select(a_col, b_col)
-        .join(a, a_col)
-        .join(b, b_col)
+        candidates.select("id_a", "id_b")
+        .join(a, "id_a")
+        .join(b, "id_b")
         .filter((F.col("_na") > 0) & (F.col("_nb") > 0))
     )
     cos = portable_round_finite(
-        _dot("_va", "_vb") / (F.col("_na") * F.col("_nb")), round_dp
+        _dot("_va", "_vb") / (F.col("_na") * F.col("_nb")), 4
     )
     return (
-        pairs.select(a_col, b_col, cos.alias("cosine"))
+        pairs.select("id_a", "id_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -552,8 +527,6 @@ def semantic_dedup(
     n_clusters: int = 8,
     iters: int = 3,
     threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -586,10 +559,8 @@ def semantic_dedup(
     see PLANS.md dd12)."""
     from lakerunner_spark.dataops.similarity import kmeans_assign
 
-    assign = kmeans_assign(corpus, n_clusters, iters, id_col, vec_col)
-    return _pairs_within_clusters(
-        corpus, assign, threshold, id_col, vec_col, checkpoint_dir
-    )
+    assign = kmeans_assign(corpus, n_clusters, iters)
+    return _pairs_within_clusters(corpus, assign, threshold, checkpoint_dir)
 
 
 def _pair_scan_fn(threshold: float):
@@ -681,8 +652,6 @@ def _pairs_within_clusters(
     corpus: DataFrame,
     assign: DataFrame,
     threshold: float,
-    id_col: str,
-    vec_col: str,
     checkpoint_dir: str | None,
     engine: str = "arrow",
 ) -> DataFrame:
@@ -703,12 +672,12 @@ def _pairs_within_clusters(
     ``engine="jvm"`` keeps the fold join (the equivalence witness)."""
     if engine == "arrow":
         vecs = corpus.select(
-            F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vec")
+            F.col("vec_id").alias("_vid"), F.col("embedding").alias("_vec")
         ).join(
-            assign.select(F.col(id_col).alias("_vid"), "cluster"), "_vid"
+            assign.select(F.col("vec_id").alias("_vid"), "cluster"), "_vid"
         )
         cluster_t = dict(assign.dtypes)["cluster"]
-        id_t = dict(corpus.dtypes)[id_col]
+        id_t = dict(corpus.dtypes)["vec_id"]
         schema = (
             f"cluster {cluster_t}, keep_id {id_t},"
             f" drop_id {id_t}, cosine double"
@@ -717,17 +686,17 @@ def _pairs_within_clusters(
             _pair_scan_fn(threshold), schema
         )
     vecs = corpus.select(
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_vec"),
+        F.col("vec_id").alias("_vid"),
+        F.col("embedding").alias("_vec"),
         F.sqrt(
             F.aggregate(
-                F.transform(vec_col, lambda x: x.cast("double") * x),
+                F.transform("embedding", lambda x: x.cast("double") * x),
                 F.lit(0.0),
                 lambda s, v: s + v,
             )
         ).alias("_nrm"),
     ).join(
-        assign.select(F.col(id_col).alias("_vid"), "cluster"), "_vid"
+        assign.select(F.col("vec_id").alias("_vid"), "cluster"), "_vid"
     )
     # Materialize the clustered table ONCE before the self-join: Spark's
     # exchange reuse misses aliased branches, so an unmaterialized
@@ -792,8 +761,6 @@ def semantic_dedup_sampled(
     sample_mod: int = 4,
     iters: int = 3,
     threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     checkpoint_dir: str | None = None,
     engine: str = "arrow",
 ) -> DataFrame:
@@ -846,7 +813,7 @@ def semantic_dedup_sampled(
         )
     if sample_mod < 1:
         raise ValueError("semantic_dedup_sampled: sample_mod >= 1")
-    train = corpus.filter(F.col(id_col) % sample_mod == 0)
+    train = corpus.filter(F.col("vec_id") % sample_mod == 0)
     # fail LOUDLY on an empty train slice (ids all nonzero mod
     # sample_mod): empty centroids would silently return an empty pair
     # set — every duplicate missed — instead of an error. One bounded
@@ -857,7 +824,7 @@ def semantic_dedup_sampled(
     if train.limit(1).count() == 0:
         raise ValueError(
             f"semantic_dedup_sampled: train slice is empty — no "
-            f"{id_col} satisfies {id_col} % {sample_mod} == 0; pick a "
+            f"vec_id satisfies vec_id % {sample_mod} == 0; pick a "
             f"sample_mod that intersects the id domain (or use "
             f"semantic_dedup for exact flat training)"
         )
@@ -869,14 +836,12 @@ def semantic_dedup_sampled(
             spread_small_scan,
         )
 
-        crows = kmeans_cents_arrow(
-            train, n_clusters, iters, id_col, vec_col
-        ).collect()
+        crows = kmeans_cents_arrow(train, n_clusters, iters).collect()
         cents_ix = KM.CentIndex.from_rows(
             [(r["cluster"], r["pos"], r["cval"]) for r in crows], n_clusters
         )
         cmap_arr = KM.coarse_map(cents_ix, coarse_cells)
-        id_t = dict(corpus.dtypes)[id_col]
+        id_t = dict(corpus.dtypes)["vec_id"]
         C, CP, CM = cents_ix.C, cents_ix.CP, cents_ix.CM
         cells = coarse_cells
 
@@ -900,7 +865,7 @@ def semantic_dedup_sampled(
                 cl, has = KM.two_level_assign(block, cix, cmap_arr, cells)
                 yield pa.RecordBatch.from_pydict(
                     {
-                        id_col: pa.array(block.ids[has]).cast(ids.type),
+                        "vec_id": pa.array(block.ids[has]).cast(ids.type),
                         "cluster": pa.array(
                             cl[has].astype("int32"), type=pa.int32()
                         ),
@@ -908,15 +873,13 @@ def semantic_dedup_sampled(
                 )
 
         proj = corpus.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
+            F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")
         )
         assign = spread_small_scan(
             proj, rows_per_part=VEC_ROWS_PER_PART
-        ).mapInArrow(assign_fn, f"{id_col} {id_t}, cluster int")
-        return _pairs_within_clusters(
-            corpus, assign, threshold, id_col, vec_col, checkpoint_dir
-        )
-    _, cents = _kmeans_trajectory(train, n_clusters, iters, id_col, vec_col)
+        ).mapInArrow(assign_fn, f"vec_id {id_t}, cluster int")
+        return _pairs_within_clusters(corpus, assign, threshold, checkpoint_dir)
+    _, cents = _kmeans_trajectory(train, n_clusters, iters)
     # materialize the trained centroids ONCE: cseed/cdist/fine all
     # branch off this plan and exchange reuse misses aliased branches
     # (the dd11 lesson) — without this the whole sample-Lloyd
@@ -951,8 +914,8 @@ def semantic_dedup_sampled(
         .select("cluster", F.col("_b.cell").alias("cell"))
     )
     long = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.col("vec_id").alias("_id"),
+        F.posexplode(F.col("embedding")).alias("pos", "val"),
     )
     # coarse pass: n*d*c rows inside one codegen pipeline, map-side
     # partial agg collapses the shuffle to n*c rows (the long-form
@@ -995,12 +958,10 @@ def semantic_dedup_sampled(
         fdist.groupBy("_id")
         .agg(F.min(F.struct("dist", "cluster")).alias("_b"))
         .select(
-            F.col("_id").alias(id_col), F.col("_b.cluster").alias("cluster")
+            F.col("_id").alias("vec_id"), F.col("_b.cluster").alias("cluster")
         )
     )
-    return _pairs_within_clusters(
-        corpus, assign, threshold, id_col, vec_col, checkpoint_dir
-    )
+    return _pairs_within_clusters(corpus, assign, threshold, checkpoint_dir)
 
 
 def substring_verify_runs(
@@ -1206,7 +1167,6 @@ def hamming_neardup_pairs(
     words: DataFrame,
     id_col: str = "media_id",
     max_hamming: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Banded Hamming near-duplicate join over per-id band words (the
     simhash/MinHash banding trade applied to perceptual hashes —
@@ -1239,10 +1199,8 @@ def hamming_neardup_pairs(
     # times. localCheckpoint is the dd12/dd12s remedy: the words table
     # is a few small rows per id (for dHash, 4 band words), so
     # materializing it is exactly the "persist the hash index" step a
-    # production pipeline runs anyway. Pass materialize=False when the
-    # caller has already persisted/checkpointed it.
-    if materialize:
-        words = words.localCheckpoint(eager=True)
+    # production pipeline runs anyway.
+    words = words.localCheckpoint(eager=True)
     a = words.select(F.col(id_col).alias("id_a"), "band", "word")
     b = words.select(F.col(id_col).alias("id_b"), "band", "word")
     cand = (

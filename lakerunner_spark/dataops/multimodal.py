@@ -406,7 +406,6 @@ def decode_image(payload: bytes) -> list[float]:
 def extract_features(
     media: DataFrame,
     decoder: ImageDecoder | None = None,
-    feature_dim: int = 8,
 ) -> DataFrame:
     """Decode payloads to feature vectors, partition-parallel.
 

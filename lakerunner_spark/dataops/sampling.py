@@ -73,7 +73,7 @@ def id_hash_sql(id_expr: str, salt: int = 0) -> str:
 
 
 def hash_split(
-    id_col: Column, weights: Iterable[tuple[str, float]], salt: int = 0
+    id_col: Column, weights: Iterable[tuple[str, float]]
 ) -> Column:
     """Assign each id to a named split with the given weights.
 
@@ -81,7 +81,7 @@ def hash_split(
     boundary thresholds are integer cutoffs on the 32-bit hash, so
     assignment is exact and stable under re-runs and data growth.
     """
-    h = id_hash(id_col, salt)
+    h = id_hash(id_col)
     expr = None
     acc = 0.0
     items = list(weights)
@@ -94,8 +94,8 @@ def hash_split(
     return F.lit(last) if expr is None else expr.otherwise(F.lit(last))
 
 
-def hash_split_sql(id_expr: str, weights: Iterable[tuple[str, float]], salt: int = 0) -> str:
-    h = id_hash_sql(id_expr, salt)
+def hash_split_sql(id_expr: str, weights: Iterable[tuple[str, float]]) -> str:
+    h = id_hash_sql(id_expr)
     items = list(weights)
     parts = []
     acc = 0.0
@@ -182,8 +182,6 @@ def token_budget_cap(
     group_col: str,
     tokens_col: str,
     budget: int,
-    id_col: str = "doc_id",
-    salt: int = 0,
 ) -> DataFrame:
     """Deterministic per-group token-budget capping: within each group
     (domain/source), keep documents in id-hash order until the running
@@ -205,10 +203,10 @@ def token_budget_cap(
     greedy accumulate-then-stop reading of "cap at N")."""
     from pyspark.sql import Window
 
-    h = id_hash(F.col(id_col), salt)
+    h = id_hash(F.col("doc_id"))
     w = (
         Window.partitionBy(group_col)
-        .orderBy(h.asc(), F.col(id_col).asc())
+        .orderBy(h.asc(), F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prior = F.coalesce(F.sum(tokens_col).over(w), F.lit(0))
@@ -222,17 +220,15 @@ def token_budget_cap_sql(
     group_col: str,
     tokens_expr: str,
     budget: int,
-    id_col: str = "doc_id",
-    salt: int = 0,
 ) -> str:
     """DuckDB oracle twin of :func:`token_budget_cap` (same hash, same
     exclusive cumulative window, same keep rule)."""
-    h = id_hash_sql(id_col, salt)
+    h = id_hash_sql("doc_id")
     return f"""
     SELECT * EXCLUDE (_prior) FROM (
       SELECT *, coalesce(sum({tokens_expr}) OVER (
         PARTITION BY {group_col}
-        ORDER BY {h} ASC, {id_col} ASC
+        ORDER BY {h} ASC, doc_id ASC
         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS _prior
       FROM ({base_sql})
     ) WHERE _prior < {budget}
@@ -296,14 +292,12 @@ def grouped_quantile_thresholds(
     score_col: str,
     by: str,
     qs: list[float],
-    relative_accuracy: float = 0.01,
-    prefix: str = "_th",
 ) -> DataFrame:
     """Per-group score thresholds at each quantile in ``qs`` from the
     engine's DDSketch bucket algebra (operators/ddsketch.py): one
     groupBy-count sketch build over log buckets, ONE cumulative walk,
     every quantile read from it. Output is one row per group —
-    (by, {prefix}0..{prefix}N) — bounded by the group-label
+    (by, _th0.._thN) — bounded by the group-label
     cardinality, not the corpus; callers join it back unhinted (AQE
     broadcasts it when small) and compare scores against thresholds,
     which is what removes the per-group sort entirely."""
@@ -312,13 +306,9 @@ def grouped_quantile_thresholds(
         ddsketch_quantiles,
     )
 
-    sk = ddsketch_agg(df, [by], score_col, relative_accuracy)
+    sk = ddsketch_agg(df, [by], score_col)
     return ddsketch_quantiles(
-        sk,
-        [by],
-        qs,
-        relative_accuracy=relative_accuracy,
-        out_cols=[f"{prefix}{i}" for i in range(len(qs))],
+        sk, [by], qs, out_cols=[f"_th{i}" for i in range(len(qs))]
     )
 
 
@@ -329,16 +319,14 @@ def rank_buckets(
     boundaries: list[float],
     labels: list[str],
     mode: str,
-    relative_accuracy: float = 0.01,
     tiebreak_col: str | None = None,
-    out_col: str = "bucket",
 ) -> DataFrame:
     """Assign each row its per-group rank bucket (the CCNet
     head/middle/tail tercile shape, and any per-group quantile binning
     generally): a row whose within-group rank position first satisfies
     ``rank <= boundaries[i]`` gets ``labels[i]``; rows above every
     boundary get ``labels[-1]``. Returns the input columns plus
-    ``out_col``.
+    ``bucket``.
 
     The caller picks one of two physical routes (the
     :func:`percentile_filter` trade applied to bucketing); the data
@@ -383,9 +371,9 @@ def rank_buckets(
         expr = F.lit(labels[-1])
         for b, lab in zip(reversed(boundaries), reversed(labels[:-1])):
             expr = F.when(rank <= F.lit(b), lab).otherwise(expr)
-        return df.withColumn(out_col, expr)
+        return df.withColumn("bucket", expr)
     th = grouped_quantile_thresholds(
-        df, score_col, by, list(boundaries), relative_accuracy
+        df, score_col, by, list(boundaries)
     )
     j = _nullsafe_attach(df, th, by)
     expr = F.lit(labels[-1])
@@ -408,7 +396,7 @@ def rank_buckets(
     # non-NULL scores; NULL-heavy corpora should filter or impute
     # scores before bucketing.
     expr = F.when(F.col(score_col).isNull(), F.lit(labels[0])).otherwise(expr)
-    return j.withColumn(out_col, expr).drop(
+    return j.withColumn("bucket", expr).drop(
         *[f"_th{i}" for i in range(len(boundaries))]
     )
 
@@ -434,7 +422,6 @@ def percentile_filter(
     by: str,
     p: float,
     mode: str,
-    relative_accuracy: float = 0.01,
     keep_pct: str | None = None,
 ) -> DataFrame:
     """Keep rows at or above the ``p`` quantile of ``score_col`` WITHIN
@@ -489,7 +476,7 @@ def percentile_filter(
             return out.withColumnRenamed("_pct", keep_pct)
         return out.drop("_pct")
     th = grouped_quantile_thresholds(
-        df, score_col, by, [p], relative_accuracy
+        df, score_col, by, [p]
     )
     return (
         _nullsafe_attach(df, th, by)

@@ -60,9 +60,6 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector (brute force).
 
@@ -75,19 +72,19 @@ def cosine_topk(
     )
 
     q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("_qv"),
-        _norm(vec_col).alias("_qn"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("_qv"),
+        _norm("embedding").alias("_qn"),
     )
     # the per-pair HOF dot products are corpus-scan-adjacent; spread a
     # low-partition corpus across the cores first (r12, guide §2.5 —
     # no-op when the scan is already parallel)
     c = spread_small_scan(
-        corpus.select(id_col, vec_col), rows_per_part=VEC_ROWS_PER_PART
+        corpus.select("vec_id", "embedding"), rows_per_part=VEC_ROWS_PER_PART
     ).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("_cv"),
-        _norm(vec_col).alias("_cn"),
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("_cv"),
+        _norm("embedding").alias("_cn"),
     )
     # queries side is small -> broadcast; corpus scan streams once
     pairs = c.crossJoin(F.broadcast(q))
@@ -99,7 +96,7 @@ def cosine_topk(
         # disagree on half-boundary doubles, which would flip
         # k-th-place ties (finite per the module rounding convention)
         portable_round_finite(
-            _dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")), round_dp
+            _dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")), 4
         ).alias("cosine"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
@@ -130,8 +127,6 @@ def _dot_const_sql(vec_col: str, vals) -> str:
 def lsh_bucket_signature(
     df: DataFrame,
     tables: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-table random-hyperplane LSH: sign bits of <v, plane_i> form
     a bucket id per hash table; one (table, bucket) row per table —
@@ -154,7 +149,7 @@ def lsh_bucket_signature(
         # bit CAST to BIGINT, and the same sig*2+bit accumulation.
         sig_sql = None
         for p in planes:
-            dot = _dot_const_sql(vec_col, p)
+            dot = _dot_const_sql("embedding", p)
             bit = (
                 f"CAST(CASE WHEN {pround_sql(dot, 12)} >= 0"
                 " THEN 1 ELSE 0 END AS BIGINT)"
@@ -168,10 +163,10 @@ def lsh_bucket_signature(
             )
         )
     return df.select(
-        F.col(id_col), F.col(vec_col), F.explode(F.array(*entries)).alias("tb")
+        F.col("vec_id"), F.col("embedding"), F.explode(F.array(*entries)).alias("tb")
     ).select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         F.col("tb.table").alias("table"),
         F.col("tb.bucket").alias("bucket"),
     )
@@ -183,10 +178,6 @@ def ivf_topk(
     k: int,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF ANN: centroid cells + multi-probe.
 
@@ -200,29 +191,18 @@ def ivf_topk(
     At scale the cell assignment is one broadcast pass over the corpus
     (centroids are tiny), the probe join shuffles on cell id — bounded
     cardinality, uniform by construction.
-
-    ``centroids``: optional trained cell centers as (cell, centroid
-    array<double>) — e.g. :func:`kmeans_centroids` output; when None,
-    the deterministic lowest-id seeding applies.
     """
-    if centroids is not None:
-        cents = centroids.select(
-            F.col("cell"),
-            F.col("centroid").alias("_cent"),
-            _norm("centroid").alias("_centn"),
+    cents = (
+        corpus.orderBy(F.col("vec_id").asc())
+        .limit(n_cells)
+        .select(
+            F.col("vec_id").alias("cell"),
+            F.col("embedding").alias("_cent"),
+            _norm("embedding").alias("_centn"),
         )
-    else:
-        cents = (
-            corpus.orderBy(F.col(id_col).asc())
-            .limit(n_cells)
-            .select(
-                F.col(id_col).alias("cell"),
-                F.col(vec_col).alias("_cent"),
-                _norm(vec_col).alias("_centn"),
-            )
-        )
+    )
 
-    def assign(df: DataFrame, idc: str, out: str, top: int) -> DataFrame:
+    def assign(df: DataFrame, idc: str, top: int) -> DataFrame:
 
         # 12-dp rounding before the argmax: double summation ORDER
         # differs between engines (and between partitions), so ranking
@@ -232,15 +212,15 @@ def ivf_topk(
         # Norm computed ONCE per row before the centroid cross join (not
         # once per centroid) and carried through for the scoring stage.
         base = df.select(
-            df[idc], df[vec_col], _norm(vec_col).alias("_n")
+            df[idc], df["embedding"], _norm("embedding").alias("_n")
         )
         scored = base.crossJoin(F.broadcast(cents)).select(
             idc,
-            vec_col,
+            "embedding",
             "_n",
             "cell",
             portable_round_finite(
-                _dot(vec_col, "_cent") / (F.col("_centn") * F.col("_n")),
+                _dot("embedding", "_cent") / (F.col("_centn") * F.col("_n")),
                 12,
             ).alias("_sim"),
         )
@@ -250,7 +230,7 @@ def ivf_topk(
         return (
             scored.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= top)
-            .select(idc, vec_col, "_n", "cell")
+            .select(idc, "embedding", "_n", "cell")
         )
 
     from lakerunner_spark.operators.skew import (
@@ -261,17 +241,17 @@ def ivf_topk(
     # corpus-side cell assignment is scan-adjacent HOF work (r12,
     # guide §2.5); the tiny queries side is left alone
     corpus = spread_small_scan(
-        corpus.select(id_col, vec_col), rows_per_part=VEC_ROWS_PER_PART
+        corpus.select("vec_id", "embedding"), rows_per_part=VEC_ROWS_PER_PART
     )
-    cb = assign(corpus, id_col, "cell", 1).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("_cv"),
+    cb = assign(corpus, "vec_id", 1).select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("_cv"),
         F.col("_n").alias("_cn"),
         "cell",
     )
-    qb = assign(queries, id_col, "cell", n_probe).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("_qv"),
+    qb = assign(queries, "vec_id", n_probe).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("_qv"),
         F.col("_n").alias("_qn"),
         "cell",
     )
@@ -285,7 +265,7 @@ def ivf_topk(
         "cid",
         portable_round_finite(
             _dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")),
-            round_dp,
+            4,
         ).alias("cosine"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
@@ -301,9 +281,6 @@ def lsh_bucket_topk(
     corpus: DataFrame,
     tables: list[list[list[float]]],
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
 ) -> DataFrame:
     """ANN top-k over candidates sharing any (table, bucket).
 
@@ -321,13 +298,13 @@ def lsh_bucket_topk(
     # the per-plane sign folds and the pair dot products are corpus-
     # scan-adjacent (r12, guide §2.5); queries side stays tiny
     corpus = spread_small_scan(
-        corpus.select(id_col, vec_col), rows_per_part=VEC_ROWS_PER_PART
+        corpus.select("vec_id", "embedding"), rows_per_part=VEC_ROWS_PER_PART
     )
-    qsig = lsh_bucket_signature(queries, tables, id_col, vec_col).select(
-        F.col(id_col).alias("qid"), "table", "bucket"
+    qsig = lsh_bucket_signature(queries, tables).select(
+        F.col("vec_id").alias("qid"), "table", "bucket"
     )
-    csig = lsh_bucket_signature(corpus, tables, id_col, vec_col).select(
-        F.col(id_col).alias("cid"), "table", "bucket"
+    csig = lsh_bucket_signature(corpus, tables).select(
+        F.col("vec_id").alias("cid"), "table", "bucket"
     )
     pair_ids = (
         csig.join(F.broadcast(qsig), ["table", "bucket"])
@@ -335,14 +312,14 @@ def lsh_bucket_topk(
         .distinct()
     )
     qv = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("_qv"),
-        _norm(vec_col).alias("_qn"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("_qv"),
+        _norm("embedding").alias("_qn"),
     )
     cv = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("_cv"),
-        _norm(vec_col).alias("_cn"),
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("_cv"),
+        _norm("embedding").alias("_cn"),
     )
     pairs = pair_ids.join(F.broadcast(qv), "qid").join(cv, "cid")
 
@@ -351,7 +328,7 @@ def lsh_bucket_topk(
         "cid",
         portable_round_finite(
             _dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")),
-            round_dp,
+            4,
         ).alias("cosine"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
@@ -367,8 +344,6 @@ def lsh_bucket_topk(
 
 def quantize_embeddings(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization: (id, scale, qvec).
 
@@ -381,37 +356,33 @@ def quantize_embeddings(
     banker's rounding). A zero vector quantizes to zeros (scale 0).
     """
     withmax = df.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         (
             F.expr(
-                f"array_max(transform({vec_col},"
+                "array_max(transform(embedding,"
                 " x -> abs(CAST(x AS DOUBLE))))"
             )
             / F.lit(127.0)
         ).alias("scale"),
     )
     qvec = F.expr(
-        f"transform({vec_col}, x -> CAST(CASE WHEN scale = 0D THEN 0D ELSE"
+        "transform(embedding, x -> CAST(CASE WHEN scale = 0D THEN 0D ELSE"
         " greatest(-127D, least(127D,"
         " floor(CAST(x AS DOUBLE) / scale + 0.5D))) END AS INT))"
     )
-    return withmax.select(id_col, "scale", qvec.alias("qvec"))
+    return withmax.select("vec_id", "scale", qvec.alias("qvec"))
 
 
 def dequantize_embeddings(
     df: DataFrame,
-    id_col: str = "vec_id",
-    qvec_col: str = "qvec",
-    scale_col: str = "scale",
-    out_col: str = "embedding",
 ) -> DataFrame:
     """Inverse map: x̂_i = q_i * scale (array<double>)."""
     return df.select(
-        id_col,
+        "vec_id",
         F.expr(
-            f"transform({qvec_col}, q -> CAST(q AS DOUBLE) * {scale_col})"
-        ).alias(out_col),
+            "transform(qvec, q -> CAST(q AS DOUBLE) * scale)"
+        ).alias("embedding"),
     )
 
 
@@ -419,17 +390,14 @@ def _kmeans_trajectory(
     corpus: DataFrame,
     n_clusters: int,
     iters: int,
-    id_col: str,
-    vec_col: str,
 ) -> "tuple[DataFrame, DataFrame]":
     """Shared unrolled-Lloyd plan builder: returns (assigned, cents)
     where ``assigned`` is the final (_id, cluster, dist) assignment and
     ``cents`` the 9-dp-rounded per-dim means over that FINAL assignment
-    (cluster, pos, cval) — the single source of truth both
-    :func:`kmeans_assign` and :func:`kmeans_centroids` derive from, so
-    the trained-centroid table is guaranteed to be the one the
-    assignments were computed against (and the trajectory is built
-    once, not twice)."""
+    (cluster, pos, cval) — the single source of truth
+    :func:`kmeans_assign` and the sampled semantic dedup derive from,
+    so a trained-centroid table is the one the assignments were
+    computed against."""
     if iters < 1:
         raise ValueError(f"kmeans: iters must be >= 1, got {iters}")
     from lakerunner_spark.functions.rounding import portable_round
@@ -443,15 +411,15 @@ def _kmeans_trajectory(
     # of those posexplode map stages on one task (r12, guide §2.5) —
     # no-op when the corpus scan is already parallel
     long = spread_small_scan(
-        corpus.select(id_col, vec_col), rows_per_part=VEC_ROWS_PER_PART
+        corpus.select("vec_id", "embedding"), rows_per_part=VEC_ROWS_PER_PART
     ).select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.col("vec_id").alias("_id"),
+        F.posexplode(F.col("embedding")).alias("pos", "val"),
     )
     seeds = (
-        corpus.orderBy(F.col(id_col).asc())
+        corpus.orderBy(F.col("vec_id").asc())
         .limit(n_clusters)
-        .select(F.col(id_col).alias("_sid"))
+        .select(F.col("vec_id").alias("_sid"))
     )
     from pyspark.sql import Window
 
@@ -501,8 +469,6 @@ def kmeans_cents_arrow(
     train: DataFrame,
     n_clusters: int,
     iters: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The :func:`_kmeans_trajectory` centroid table as ONE numpy task
     (guide §4.2): the JVM trajectory unrolls each Lloyd iteration into
@@ -562,7 +528,7 @@ def kmeans_cents_arrow(
 
     return (
         train.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
+            F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")
         )
         .repartition(1)
         .mapInArrow(fn, "cluster int, pos int, cval double")
@@ -573,8 +539,6 @@ def kmeans_assign(
     corpus: DataFrame,
     n_clusters: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd's k-means over an embedding column, fully declarative:
     the fixed iteration count unrolls into one DataFrame plan (no
@@ -593,7 +557,7 @@ def kmeans_assign(
       distance with cluster-asc tiebreak (the IVF 12-dp argmax
       pattern; 1e-9 grid is far above the ~1e-12 summation jitter).
 
-    Returns (id_col, cluster, dist) — dist is the final rounded
+    Returns (vec_id, cluster, dist) — dist is the final rounded
     squared distance to the assigned centroid.
 
     Scale: the corpus-long table is rows x dims; every join against
@@ -601,38 +565,9 @@ def kmeans_assign(
     shuffle on (id, cluster) for distances + one on (cluster, pos) for
     means. Empty clusters drop out of the centroid table (both engines
     drop them identically)."""
-    assigned, _ = _kmeans_trajectory(corpus, n_clusters, iters, id_col, vec_col)
+    assigned, _ = _kmeans_trajectory(corpus, n_clusters, iters)
     return assigned.select(
-        F.col("_id").alias(id_col), "cluster", "dist"
-    )
-
-
-def kmeans_centroids(
-    corpus: DataFrame,
-    n_clusters: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Final k-means centroids as (cell, centroid array<double>) —
-    the shape :func:`ivf_topk` takes as trained cell centers. Reuses
-    the SAME unrolled trajectory plan as :func:`kmeans_assign` (the
-    post-final-assignment per-dim means `_kmeans_trajectory` already
-    derives, rather than rebuilding the trajectory a second time) and
-    re-assembles per-dim rows into arrays (sort_array over (pos, val)
-    structs)."""
-    _, per_dim = _kmeans_trajectory(corpus, n_clusters, iters, id_col, vec_col)
-    return (
-        per_dim.groupBy("cluster")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "cval"))
-            ).alias("_pv")
-        )
-        .select(
-            F.col("cluster").alias("cell"),
-            F.expr("transform(_pv, e -> e.cval)").alias("centroid"),
-        )
+        F.col("_id").alias("vec_id"), "cluster", "dist"
     )
 
 
@@ -662,13 +597,11 @@ def random_projection(
     in_dim: int,
     out_dim: int,
     seed: int = 0,
-    vec_col: str = "embedding",
-    out_col: str = "rp",
 ) -> Column:
-    """Project ``vec_col`` (length ``in_dim``) to ``out_dim`` dims with
+    """Project ``embedding`` (length ``in_dim``) to ``out_dim`` dims with
     the deterministic ±1 matrix — returns the projected array<double>
     column (caller attaches it with .withColumn / .select; the column
-    is built purely from ``vec_col``, so no DataFrame parameter —
+    is built purely from ``embedding``, so no DataFrame parameter —
     length mismatches surface as NULL components from zip_with, and
     callers own the in_dim contract).
 
@@ -682,9 +615,9 @@ def random_projection(
     # doubles) — the per-element lit() form cost ~1.6s of py4j round
     # trips per plan construction (r13 #3, see _dot_const_sql)
     comps = [
-        F.expr(_dot_const_sql(vec_col, signs[j])) for j in range(out_dim)
+        F.expr(_dot_const_sql("embedding", signs[j])) for j in range(out_dim)
     ]
-    return F.array(*comps).alias(out_col)
+    return F.array(*comps).alias("rp")
 
 
 def pq_topk(
@@ -694,9 +627,6 @@ def pq_topk(
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
     shortlist: int = 0,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011): vectors split into
@@ -712,7 +642,7 @@ def pq_topk(
     Engine determinism: subdistances fold left-to-right over the
     subspace (both engines), are rounded to 12 dp BEFORE the argmin
     (the ivf_topk lesson — a last-ulp difference must not flip a code
-    assignment), and the final ADC sum rounds to ``round_dp`` before
+    assignment), and the final ADC sum rounds to 6 dp before
     ranking with an id tiebreak.
 
     ``shortlist > 0`` adds the standard second stage: ADC ranks a
@@ -731,16 +661,12 @@ def pq_topk(
     shuffle and a per-query top-k window over k-bounded groups. The
     re-rank touches shortlist*n_queries raw vectors — a point-lookup
     join, unhinted (AQE broadcasts the query-proportional side)."""
-    ranked, corpus = _pq_ranked(
-        queries, corpus, m, n_codes, dim, id_col, vec_col, round_dp
-    )
+    ranked, corpus = _pq_ranked(queries, corpus, m, n_codes, dim)
     if not shortlist:
         return ranked.filter(F.col("_rn") <= k).select(
             "qid", "cid", "pq_dist"
         )
-    return _pq_rerank(
-        ranked, queries, corpus, shortlist, k, id_col, vec_col, round_dp
-    )
+    return _pq_rerank(ranked, queries, corpus, shortlist, k)
 
 
 def _pq_ranked(
@@ -749,9 +675,6 @@ def _pq_ranked(
     m: int,
     n_codes: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ):
     """The shared head of :func:`pq_topk` — codebook, corpus encode,
     ADC scoring, per-query ranking — returning the ADC-ranked
@@ -768,18 +691,18 @@ def _pq_ranked(
         return df.select(
             F.col(idc).alias(out),
             F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
-            F.col(vec_col),
+            F.col("embedding"),
         ).select(
             out,
             "s",
             F.expr(
-                f"transform(slice({vec_col}, s * {sub} + 1, {sub}),"
+                f"transform(slice(embedding, s * {sub} + 1, {sub}),"
                 f" x -> CAST(x AS DOUBLE))"
             ).alias("_sv"),
         )
 
-    cents = corpus.orderBy(F.col(id_col).asc()).limit(n_codes)
-    ksub = subrows(cents, id_col, "code").withColumnRenamed("_sv", "_kv")
+    cents = corpus.orderBy(F.col("vec_id").asc()).limit(n_codes)
+    ksub = subrows(cents, "vec_id", "code").withColumnRenamed("_sv", "_kv")
 
     l2 = F.expr(
         "aggregate(zip_with(_sv, _kv, (x, y) -> (x - y) * (x - y)),"
@@ -794,9 +717,9 @@ def _pq_ranked(
     # corpus encode (subspace explode + codeword argmin) is scan-
     # adjacent (r12, guide §2.5); cents above keeps the raw relation
     corpus = spread_small_scan(
-        corpus.select(id_col, vec_col), rows_per_part=VEC_ROWS_PER_PART
+        corpus.select("vec_id", "embedding"), rows_per_part=VEC_ROWS_PER_PART
     )
-    csub = subrows(corpus, id_col, "cid")
+    csub = subrows(corpus, "vec_id", "cid")
     cdist = csub.join(F.broadcast(ksub), "s").select(
         "cid", "s", "code", portable_round_finite(l2, 12).alias("_d")
     )
@@ -806,7 +729,7 @@ def _pq_ranked(
         .select("cid", "s", F.col("_m.code").alias("code"))
     )
 
-    qsub = subrows(queries, id_col, "qid")
+    qsub = subrows(queries, "vec_id", "qid")
     qtab = qsub.join(F.broadcast(ksub), "s").select(
         "qid", "s", "code", portable_round_finite(l2, 12).alias("_d")
     )
@@ -814,7 +737,7 @@ def _pq_ranked(
     adc = (
         codes.join(F.broadcast(qtab), ["s", "code"])
         .groupBy("qid", "cid")
-        .agg(portable_round(F.sum("_d"), round_dp).alias("pq_dist"))
+        .agg(portable_round(F.sum("_d"), 6).alias("pq_dist"))
     )
     w = Window.partitionBy("qid").orderBy(
         F.col("pq_dist").asc(), F.col("cid").asc()
@@ -828,19 +751,16 @@ def _pq_rerank(
     corpus: DataFrame,
     shortlist: int,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """The exact-L2 re-rank tail of :func:`pq_topk` over an ADC-ranked
     relation from :func:`_pq_ranked` (see there for the r13 split
     rationale)."""
     short = ranked.filter(F.col("_rn") <= shortlist).select("qid", "cid")
     qv = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("_qv")
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("_qv")
     )
     cv = corpus.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("_cv")
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("_cv")
     )
     exact_l2 = F.expr(
         "aggregate(zip_with(_qv, _cv, (x, y) ->"
@@ -851,7 +771,7 @@ def _pq_rerank(
     rer = (
         short.join(cv, "cid")
         .join(qv, "qid")
-        .select("qid", "cid", portable_round_finite(exact_l2, round_dp).alias("l2_dist"))
+        .select("qid", "cid", portable_round_finite(exact_l2, 6).alias("l2_dist"))
     )
     w2 = Window.partitionBy("qid").orderBy(
         F.col("l2_dist").asc(), F.col("cid").asc()
@@ -867,9 +787,6 @@ def l2_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Exact top-k by squared L2 for each query (brute force) — the
     ground-truth twin of :func:`cosine_topk` for the L2-metric ANN
@@ -880,10 +797,10 @@ def l2_topk(
     Same 100 TB shape as cosine_topk: the query set broadcasts, the
     corpus streams once; the distance is an index-ordered fold."""
     q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("_qv")
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("_qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("_cv")
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("_cv")
     )
     pairs = c.crossJoin(F.broadcast(q))
     l2 = F.expr(
@@ -893,7 +810,7 @@ def l2_topk(
         " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
     )
     scored = pairs.select(
-        "qid", "cid", portable_round_finite(l2, round_dp).alias("l2_dist")
+        "qid", "cid", portable_round_finite(l2, 6).alias("l2_dist")
     )
     w = Window.partitionBy("qid").orderBy(
         F.col("l2_dist").asc(), F.col("cid").asc()

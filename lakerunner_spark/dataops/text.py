@@ -523,8 +523,6 @@ def bm25_rank(
     query_terms: list[str],
     text_col: str = "text",
     id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
     topk: int = 20,
 ) -> DataFrame:
     """BM25 ranked retrieval (Robertson/Spärck Jones; the Lucene
@@ -589,8 +587,9 @@ def bm25_rank(
         ).alias("n_matched"),
         F.expr(
             f"aggregate(zip_with(array({', '.join(repr(t) for t in query_terms)}),"
-            f" _tf, (t, tf) -> _idf[t] * tf * {k1 + 1.0}"
-            f" / (tf + {k1} * (1.0 - {b} + {b} * _dl / _avgdl))),"
+            # the Lucene defaults k1 = 1.2, b = 0.75
+            " _tf, (t, tf) -> _idf[t] * tf * 2.2"
+            " / (tf + 1.2 * (1.0 - 0.75 + 0.75 * _dl / _avgdl))),"
             f" 0.0D, (a, v) -> a + v)"
         ).alias("_score"),
     )
@@ -608,29 +607,24 @@ def bm25_rank(
     )
 
 
-def paragraph_dedup(text: Column, sep: str = "\n\n") -> Column:
+def paragraph_dedup(text: Column) -> Column:
     """Intra-document repeated-paragraph removal (the MassiveText/
     Gopher cleaning step: crawl boilerplate repeats whole paragraphs
-    inside one document): split on the paragraph separator, keep each
-    paragraph's FIRST occurrence in order, rejoin. Pure array
+    inside one document): split on the blank-line paragraph separator,
+    keep each paragraph's FIRST occurrence in order, rejoin. Pure array
     expressions — array_distinct preserves first-occurrence order in
     Spark; the DuckDB oracle states the same semantics with an
     index-position filter (its list_distinct does NOT preserve order).
-
-    ``sep`` is treated as a LITERAL separator on both sides: F.split
-    takes a Java regex, so the separator is \\Q..\\E-quoted for the
-    split (any metacharacters, e.g. "||" or ". ", split correctly) and
-    passed verbatim to the literal concat_ws rejoin.
+    F.split takes a Java regex, so the separator is \\Q..\\E-quoted
+    there and passed verbatim to the literal concat_ws rejoin.
     """
-    # java.util.regex.Pattern.quote: \Q..\E with embedded \E split out
-    quoted = "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-    parts = F.split(text, quoted)
-    return F.concat_ws(sep, F.array_distinct(parts))
+    parts = F.split(text, "\\Q\n\n\\E")
+    return F.concat_ws("\n\n", F.array_distinct(parts))
 
 
-def paragraph_dedup_sql(text_sql: str, sep_sql: str = "chr(10) || chr(10)") -> str:
+def paragraph_dedup_sql(text_sql: str) -> str:
     """DuckDB twin of :func:`paragraph_dedup` (first-occurrence order
     via list_position index filter)."""
-    ps = f"string_split({text_sql}, {sep_sql})"
+    ps = f"string_split({text_sql}, chr(10) || chr(10))"
     kept = f"list_filter({ps}, (x, i) -> list_position({ps}, x) = i)"
-    return f"array_to_string({kept}, {sep_sql})"
+    return f"array_to_string({kept}, chr(10) || chr(10))"

@@ -38,7 +38,6 @@ def cook_metrics(
     attr_cols: list[str] | None = None,
     value_col: str = "value",
     tiers_ms: list[int] | None = None,
-    max_records_per_file: int = 2_000_000,
     extra_dims: list[str] | None = None,
     write_mode: str = "append",
     sketch_accuracy: float | None = None,
@@ -226,9 +225,7 @@ def cook_metrics(
                 if "pairs" in wout.columns:
                     wout = wout.drop("pairs")
             write_segments(
-                wout, f"{base_path}/metrics", "metrics",
-                max_records_per_file=max_records_per_file,
-                mode=write_mode,
+                wout, f"{base_path}/metrics", "metrics", mode=write_mode
             )
             if len(persisted) > 1:
                 # this write materialized the CURRENT tier's cache from
@@ -253,10 +250,6 @@ def cook_logs(
     df: DataFrame,
     base_path: str,
     org_id: str = "default",
-    message_col: str = "log_message",
-    service_col: str = "service_identifier",
-    level_col: str = "log_level",
-    max_records_per_file: int = 2_000_000,
     incremental: bool = False,
 ) -> dict[str, str]:
     """Cook raw log rows into segments + planner companion tables.
@@ -275,7 +268,7 @@ def cook_logs(
     and overwrites — O(total), but self-healing if a previous companion
     write was lost.
     """
-    cooked = translate_logs(df, message_col=message_col, service_col=service_col)
+    cooked = translate_logs(df)
     cooked = cooked.withColumn("org_id", F.lit(org_id)).withColumn(
         "dateint", dateint(F.col("chq_timestamp"))
     )
@@ -289,20 +282,17 @@ def cook_logs(
         # the scan, the OTLP decode and the fingerprint hash run once
         cooked = cooked.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        write_segments(
-            cooked, paths["segments"], "logs",
-            max_records_per_file=max_records_per_file,
-        )
+        write_segments(cooked, paths["segments"], "logs")
         if incremental:
             src, mode = cooked, "append"
         else:
             src = cooked.sparkSession.read.parquet(paths["segments"])
             mode = "overwrite"
-        dims = [c for c in (level_col, "chq_fingerprint") if c in src.columns]
+        dims = [c for c in ("log_level", "chq_fingerprint") if c in src.columns]
         build_agg_table(src, dims).write.mode(mode).parquet(paths["agg"])
-        build_fingerprint_index(src, service_col, message_col).write.mode(
-            mode
-        ).parquet(paths["index"])
+        build_fingerprint_index(
+            src, "service_identifier", "log_message"
+        ).write.mode(mode).parquet(paths["index"])
     finally:
         if incremental:
             cooked.unpersist()

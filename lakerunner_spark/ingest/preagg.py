@@ -22,15 +22,13 @@ from lakerunner_spark.schema import dateint
 
 PERCENTILES = [0.25, 0.50, 0.75, 0.90, 0.95, 0.99]
 _P_NAMES = ["p25", "p50", "p75", "p90", "p95", "p99"]
+GRAIN_MS = 10_000  # the ingest tier: raw samples land in 10s buckets
 
 
 def preaggregate_metrics(
     df: DataFrame,
     dims: list[str],
-    ts_col: str = "chq_timestamp",
     value_col: str = "value",
-    grain_ms: int = 10_000,
-    accuracy: int = 10_000,
     sketch_gamma: float | None = None,
     percentiles: bool = True,
 ) -> DataFrame:
@@ -65,7 +63,7 @@ def preaggregate_metrics(
     ]
     if percentiles:
         aggs.append(
-            F.percentile_approx(value_col, PERCENTILES, accuracy).alias(
+            F.percentile_approx(value_col, PERCENTILES, accuracy=10_000).alias(
                 "_pcts"
             )
         )
@@ -82,13 +80,13 @@ def preaggregate_metrics(
             )
         )
     agg = df.groupBy(
-        bucket_ts(ts_col, grain_ms).alias("chq_timestamp"), *dims
+        bucket_ts("chq_timestamp", GRAIN_MS).alias("chq_timestamp"), *dims
     ).agg(*aggs)
     if percentiles:
         for i, name in enumerate(_P_NAMES):
             agg = agg.withColumn(f"chq_rollup_{name}", F.col("_pcts")[i])
         agg = agg.drop("_pcts")
     return (
-        agg.withColumn("frequency_ms", F.lit(grain_ms))
+        agg.withColumn("frequency_ms", F.lit(GRAIN_MS))
         .withColumn("dateint", dateint(F.col("chq_timestamp")))
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakerunner_spark.functions.timeops import ROLLUP_CHAIN_MS, bucket_ts
+from lakerunner_spark.functions.timeops import bucket_ts
 
 
 def rollup_tier(
@@ -66,14 +66,3 @@ def rollup_tier(
         )
         .withColumn("frequency_ms", F.lit(target_grain_ms))
     )
-
-
-def rollup_chain(df_10s: DataFrame, dims: list[str]) -> dict[int, DataFrame]:
-    """Produce every tier of the cascade from the 10s ingest grain."""
-    tiers: dict[int, DataFrame] = {ROLLUP_CHAIN_MS[0]: df_10s}
-    prev = df_10s
-    for grain in ROLLUP_CHAIN_MS[1:]:
-        cur = rollup_tier(prev, dims, grain)
-        tiers[grain] = cur
-        prev = cur
-    return tiers

@@ -17,11 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lakerunner_spark.dataops.text import structural_fingerprint
-from lakerunner_spark.functions.hashing import (
-    compute_tid,
-    java_string_hash,
-    java_string_hash_fast,
-)
+from lakerunner_spark.functions.hashing import compute_tid, java_string_hash_fast
 from lakerunner_spark.schema import normalize_name
 
 
@@ -55,26 +51,23 @@ def normalize_columns(df: DataFrame) -> DataFrame:
 
 def translate_logs(
     df: DataFrame,
-    message_col: str = "log_message",
-    service_col: str = "service_identifier",
-    fast: bool = True,
 ) -> DataFrame:
     """Logs family: structural fingerprint of the message template
     (F16; trie-cluster stand-in: mask variable parts -> hash) as the
     stream identity used for sorting and index pruning.
 
-    ``fast=True`` (default) hashes via the vectorized Arrow kernel —
-    same bits, ~200x/core — which needs pandas/pyarrow/numpy on the
-    executors; ``fast=False`` selects the pure-JVM expression hash for
-    clusters without Python dependencies."""
-    masked = structural_fingerprint(F.col(message_col))
-    hasher = java_string_hash_fast if fast else java_string_hash
+    Hashes via the vectorized Arrow kernel — the same bits as the JVM
+    expression hash, ~200x/core — so the executors need
+    pandas/pyarrow/numpy."""
+    masked = structural_fingerprint(F.col("log_message"))
     return df.withColumn(
-        "chq_fingerprint", hasher(masked).cast("long")
+        "chq_fingerprint", java_string_hash_fast(masked).cast("long")
     ).withColumn(
-        service_col,
+        "service_identifier",
         F.coalesce(
-            F.col(service_col) if service_col in df.columns else F.lit(None),
+            F.col("service_identifier")
+            if "service_identifier" in df.columns
+            else F.lit(None),
             F.lit("unknown"),
         ),
     )
@@ -84,13 +77,11 @@ def translate_metrics(
     df: DataFrame,
     metric_col: str = "metric_name",
     attr_cols: list[str] | None = None,
-    fast: bool = True,
 ) -> DataFrame:
     """Metrics family: TID = fnv64a over sorted k=v attribute pairs.
 
-    ``fast=True`` (default) uses the vectorized Arrow kernel —
-    identical bits to the expression path, measured ~200x per-core —
-    which needs pandas/pyarrow/numpy on the executors; ``fast=False``
-    selects the pure-JVM expression for Python-free clusters."""
+    Uses the vectorized Arrow kernel — identical bits to the expression
+    path, measured ~200x per-core — so the executors need
+    pandas/pyarrow/numpy."""
     attrs = attr_cols or [c for c in df.columns if c.startswith("attr_")]
-    return df.withColumn("chq_tid", compute_tid(metric_col, *attrs, fast=fast))
+    return df.withColumn("chq_tid", compute_tid(metric_col, *attrs, fast=True))

@@ -36,7 +36,6 @@ from lakerunner_spark.logql.parser import (
     LabelFilter,
     LabelFilterOr,
     LabelFormatStage,
-    LabelMatcher,
     LineFilter,
     LineFormatStage,
     LogfmtStage,
@@ -46,6 +45,7 @@ from lakerunner_spark.logql.parser import (
     RegexpStage,
     parse_logql,
 )
+from lakerunner_spark.operators.density import quantile_over_time
 from lakerunner_spark.operators.range_agg import range_agg
 from lakerunner_spark.operators.step_agg import step_agg_raw
 from lakerunner_spark.operators.vector_agg import bottomk, topk, vector_agg
@@ -220,12 +220,7 @@ def _apply_pipeline(df: DataFrame, leaf: LogLeaf, src: LogSource) -> tuple[DataF
     return df, stream + [c for c in extracted if c not in stream]
 
 
-def compile_logql_lines(
-    query,
-    source: LogSource,
-    start_ms: int | None = None,
-    end_ms: int | None = None,
-) -> DataFrame:
+def compile_logql_lines(query, source: LogSource) -> DataFrame:
     """Line mode: the selector+pipeline applied with no ordering or
     limit — the building block under exemplar mode, exposed for callers
     that aggregate the parsed lines themselves."""
@@ -234,12 +229,7 @@ def compile_logql_lines(
         raise ValueError("logql: line mode takes a selector+pipeline query")
     if leaf.range_ms is not None:
         raise ValueError("logql: line query cannot have a [range]")
-    rows = source.df
-    if start_ms is not None:
-        rows = rows.filter(F.col(source.ts_col) >= start_ms)
-    if end_ms is not None:
-        rows = rows.filter(F.col(source.ts_col) < end_ms)
-    df, _labels = _apply_pipeline(rows, leaf, source)
+    df, _labels = _apply_pipeline(source.df, leaf, source)
     return df
 
 
@@ -248,7 +238,6 @@ def compile_logql_exemplar(
     source: LogSource,
     limit: int = 100,
     descending: bool = True,
-    fields: list[str] | None = None,
     tiebreak: list[str] | None = None,
     start_ms: int | None = None,
     end_ms: int | None = None,
@@ -272,10 +261,7 @@ def compile_logql_exemplar(
     df, _labels = _apply_pipeline(rows, leaf, source)
     cols = [source.ts_col, *(tiebreak or [])]
     order = [F.col(c).desc() if descending else F.col(c).asc() for c in cols]
-    out = df.orderBy(*order).limit(limit)
-    if fields:
-        out = out.select(*fields)
-    return out
+    return df.orderBy(*order).limit(limit)
 
 
 def compile_logql(
@@ -369,59 +355,17 @@ def _compile_range(
         fn = node.fn
         if fn == "quantile_over_time":
             # extension: quantile over the RAW unwrapped samples in the
-            # window (Loki semantics), with the same range-size routing
-            # as the PromQL path — large ranges go through the DDSketch
-            # bucket algebra so no per-row raw-value array is ever
-            # unbounded; short ranges use the exact interpolated path
-            from lakerunner_spark.promql.compiler import (
-                QUANTILE_SKETCH_MIN_BUCKETS,
-            )
-            from lakerunner_spark.operators.density import (
-                QUANTILE_EXACT_MAX_SAMPLES,
-                estimate_range_samples,
-            )
-
-            use_sketch = leaf.range_ms // step_ms > QUANTILE_SKETCH_MIN_BUCKETS
-            if not use_sketch:
-                # bucket count bounds the window span, not the samples
-                # per bucket — dense log streams route to the sketch too
-                use_sketch = (
-                    estimate_range_samples(
-                        df, labels, leaf.range_ms, source.ts_col, "_v",
-                        probe_before_ms=(
-                            None if start_ms is None
-                            else start_ms + leaf.range_ms
-                        ),
-                    )
-                    > QUANTILE_EXACT_MAX_SAMPLES
-                )
-            if use_sketch:
-                from lakerunner_spark.operators.ddsketch import (
-                    ddsketch_quantile_over_time,
-                )
-
-                out = ddsketch_quantile_over_time(
-                    df,
-                    labels,
-                    leaf.range_ms,
-                    step_ms,
-                    node.param,
-                    ts_col=source.ts_col,
-                    value_col="_v",
-                )
-                return out, labels
-            from lakerunner_spark.operators.range_agg import (
-                exact_quantile_over_time,
-            )
-
-            out = exact_quantile_over_time(
+            # window (Loki semantics), on the PromQL path's route
+            out = quantile_over_time(
                 df,
                 labels,
                 leaf.range_ms,
                 step_ms,
                 node.param,
-                ts_col=source.ts_col,
-                value_col="_v",
+                source.ts_col,
+                "_v",
+                None if start_ms is None else start_ms + leaf.range_ms,
+                raw_samples=True,
             )
             return out, labels
 

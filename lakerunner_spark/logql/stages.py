@@ -19,10 +19,15 @@ from pyspark.sql import functions as F
 
 from lakerunner_spark.functions.unwrap import bytes_to_bytes, duration_to_seconds
 
+# Rows ``| json``/``| logfmt``/``| unpack`` auto mode samples to discover
+# keys: the bound on that discovery's driver-side collect.
+KEY_SAMPLE_ROWS = 1000
 
-def time_range(df: DataFrame, start_ms: int, end_ms: int, ts_col: str = "chq_timestamp") -> DataFrame:
+
+def time_range(df: DataFrame, start_ms: int, end_ms: int) -> DataFrame:
     """P3: ``ts >= start AND ts < end`` — pushed to partition/row-group pruning."""
-    return df.filter((F.col(ts_col) >= start_ms) & (F.col(ts_col) < end_ms))
+    ts = F.col("chq_timestamp")
+    return df.filter((ts >= start_ms) & (ts < end_ms))
 
 
 def label_matcher(df: DataFrame, label: str, op: str, value: str) -> DataFrame:
@@ -128,7 +133,7 @@ def json_parser(df: DataFrame, keys: dict[str, str], line_col: str = "log_messag
 
 
 def discover_json_keys(
-    df: DataFrame, line_col: str = "log_message", sample_rows: int = 1000
+    df: DataFrame, line_col: str = "log_message"
 ) -> list[str]:
     """Auto-discover top-level JSON keys from a row sample.
 
@@ -138,7 +143,7 @@ def discover_json_keys(
     (one tiny job), then extraction compiles to static columns.
     """
     rows = (
-        df.limit(sample_rows)
+        df.limit(KEY_SAMPLE_ROWS)
         .select(F.explode(F.json_object_keys(F.col(line_col))).alias("k"))
         .distinct()
         .collect()
@@ -147,12 +152,12 @@ def discover_json_keys(
 
 
 def json_parser_auto(
-    df: DataFrame, line_col: str = "log_message", sample_rows: int = 1000
+    df: DataFrame, line_col: str = "log_message"
 ) -> tuple[DataFrame, list[str]]:
     """P7 auto mode: discover keys, then extract each (normalized names)."""
     from lakerunner_spark.schema import normalize_name
 
-    keys = discover_json_keys(df, line_col, sample_rows)
+    keys = discover_json_keys(df, line_col)
     mappings = {normalize_name(k): f"$.{k}" for k in keys}
     return json_parser(df, mappings, line_col=line_col), sorted(mappings)
 
@@ -172,11 +177,11 @@ def logfmt_parser(df: DataFrame, keys: list[str], line_col: str = "log_message")
 
 
 def discover_logfmt_keys(
-    df: DataFrame, line_col: str = "log_message", sample_rows: int = 1000
+    df: DataFrame, line_col: str = "log_message"
 ) -> list[str]:
     """Auto-discover logfmt keys (``key=``) from a row sample."""
     rows = (
-        df.limit(sample_rows)
+        df.limit(KEY_SAMPLE_ROWS)
         .select(
             F.explode(
                 F.expr(
@@ -192,10 +197,10 @@ def discover_logfmt_keys(
 
 
 def logfmt_parser_auto(
-    df: DataFrame, line_col: str = "log_message", sample_rows: int = 1000
+    df: DataFrame, line_col: str = "log_message"
 ) -> tuple[DataFrame, list[str]]:
     """P8 auto mode: discover keys then extract each."""
-    keys = discover_logfmt_keys(df, line_col, sample_rows)
+    keys = discover_logfmt_keys(df, line_col)
     return logfmt_parser(df, keys, line_col=line_col), keys
 
 
@@ -632,7 +637,7 @@ def label_filter_or(
 
 
 def json_error_label(
-    df: DataFrame, line_col: str = "log_message", out_col: str = "__error__"
+    df: DataFrame, line_col: str = "log_message"
 ) -> DataFrame:
     """Loki ``__error__`` label for the JSON parser: lines that are not
     valid JSON get ``__error__="JSONParserErr"`` (Loki's errJSON), valid
@@ -640,7 +645,7 @@ def json_error_label(
     lines and ``| __error__ != ""`` selects them. Validity via
     try_parse_json (variant parse, NULL on malformed) — JVM-side."""
     return df.withColumn(
-        out_col,
+        "__error__",
         F.when(
             F.try_parse_json(F.col(line_col).cast("string")).isNull(),
             F.lit("JSONParserErr"),
@@ -649,7 +654,7 @@ def json_error_label(
 
 
 def logfmt_error_label(
-    df: DataFrame, line_col: str = "log_message", out_col: str = "__error__"
+    df: DataFrame, line_col: str = "log_message"
 ) -> DataFrame:
     """Loki ``__error__`` label for the logfmt parser: lines whose
     logfmt syntax is malformed get ``__error__="LogfmtParserErr"``
@@ -669,13 +674,13 @@ def logfmt_error_label(
     bare = F.regexp_replace(line, r"\\.", "")
     quotes = F.length(bare) - F.length(F.regexp_replace(bare, '"', ""))
     return df.withColumn(
-        out_col,
+        "__error__",
         F.when(quotes % 2 == 1, F.lit("LogfmtParserErr")).otherwise(F.lit("")),
     )
 
 
 def unpack(
-    df: DataFrame, line_col: str = "log_message", sample_rows: int = 1000
+    df: DataFrame, line_col: str = "log_message"
 ) -> "tuple[DataFrame, list[str]]":
     """Loki ``| unpack`` (promtail pack format): the line is a JSON
     object; ``_entry`` holds the original line and replaces the body,
@@ -684,7 +689,7 @@ def unpack(
     static get_json_object columns. Lines that are not valid pack
     objects keep their body and yield NULL labels (Loki leaves
     non-packed lines untouched)."""
-    keys = [k for k in discover_json_keys(df, line_col, sample_rows) if k != "_entry"]
+    keys = [k for k in discover_json_keys(df, line_col) if k != "_entry"]
     out = df
     for k in keys:
         out = out.withColumn(k, F.get_json_object(F.col(line_col), f"$.{k}"))

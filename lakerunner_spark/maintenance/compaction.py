@@ -29,12 +29,10 @@ TARGET_SEGMENT_BYTES = 768 * 1024 * 1024  # mid of the 512MB-1GB band
 
 def plan_compaction(
     partition_dir: str,
-    target_bytes: int = TARGET_SEGMENT_BYTES,
-    min_mean_fraction: float = 0.5,
 ) -> dict | None:
     """Inspect one partition directory; return a compaction task or None.
 
-    Eligible when mean parquet file size < min_mean_fraction * target
+    Eligible when mean parquet file size < half the target segment size
     and there is more than one file (OVERVIEW.md:82 'optimal segment
     size' heuristic).
     """
@@ -46,20 +44,18 @@ def plan_compaction(
     if len(files) <= 1:
         return None
     total = sum(os.path.getsize(f) for f in files)
-    if total / len(files) >= min_mean_fraction * target_bytes:
+    if total / len(files) >= 0.5 * TARGET_SEGMENT_BYTES:
         return None
     return {
         "dir": partition_dir,
         "files": sorted(files),
         "total_bytes": total,
-        "target_files": max(1, math.ceil(total / target_bytes)),
+        "target_files": max(1, math.ceil(total / TARGET_SEGMENT_BYTES)),
     }
 
 
 def plan_table_compaction(
     table_path: str,
-    target_bytes: int = TARGET_SEGMENT_BYTES,
-    min_mean_fraction: float = 0.5,
     stale_after_s: float = 6 * 3600,
     strict: bool = False,
     damaged_out: list[tuple[str, str]] | None = None,
@@ -97,7 +93,7 @@ def plan_table_compaction(
             except RuntimeError as e:
                 damaged.append((root, str(e)))
                 continue  # never plan over an undecided transaction
-            task = plan_compaction(root, target_bytes, min_mean_fraction)
+            task = plan_compaction(root)
             if task:
                 tasks.append(task)
     if damaged and strict:
@@ -396,7 +392,6 @@ def compact_segments(
     spark: SparkSession,
     task: dict,
     family: str,
-    compression: str = "zstd",
     stale_after_s: float = 6 * 3600,
 ) -> int:
     """Execute one compaction task; returns the output file count.
@@ -460,7 +455,7 @@ def compact_segments(
             out = df.repartition(task["target_files"])
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
-        out.write.mode("overwrite").option("compression", compression).parquet(
+        out.write.mode("overwrite").option("compression", "zstd").parquet(
             staging
         )
         if not os.path.exists(os.path.join(staging, "_SUCCESS")):

@@ -42,11 +42,10 @@ def sweep_retention(
     table_path: str,
     retention_days: int,
     now_ms: int | None = None,
-    dry_run: bool = False,
 ) -> list[str]:
-    """Delete expired dateint partitions; returns the removed paths."""
+    """Delete expired dateint partitions; returns the removed paths
+    (:func:`expired_partitions` lists them without deleting)."""
     doomed = expired_partitions(table_path, retention_days, now_ms)
-    if not dry_run:
-        for path in doomed:
-            shutil.rmtree(path)
+    for path in doomed:
+        shutil.rmtree(path)
     return doomed

@@ -88,20 +88,18 @@ def vector_match(
     right: DataFrame,
     op: str,
     match_labels: list[str],
-    bucket_col: str = "bucket_ts",
-    value_col: str = "value",
     bool_mode: bool = False,
 ) -> DataFrame:
     """vector <op> vector: inner join on (bucket, match key) (J1)."""
-    keys = [bucket_col, *match_labels]
-    lhs = left.select(*keys, F.col(value_col).alias("_lv")).alias("_l")
-    rhs = right.select(*keys, F.col(value_col).alias("_rv")).alias("_r")
+    keys = ["bucket_ts", *match_labels]
+    lhs = left.select(*keys, F.col("value").alias("_lv")).alias("_l")
+    rhs = right.select(*keys, F.col("value").alias("_rv")).alias("_r")
     joined = lhs.join(rhs, _null_safe_cond(keys), "inner")
     value, keep = _apply_op(op, F.col("_lv"), F.col("_rv"), bool_mode)
-    out = joined.withColumn(value_col, value)
+    out = joined.withColumn("value", value)
     if keep is not None:
         out = out.filter(keep)
-    return out.select(*[F.col(f"_l.{k}").alias(k) for k in keys], value_col)
+    return out.select(*[F.col(f"_l.{k}").alias(k) for k in keys], "value")
 
 
 def vector_match_grouped(
@@ -112,8 +110,6 @@ def vector_match_grouped(
     many_labels: list[str],
     group: str,
     extra_labels: list[str] | None = None,
-    bucket_col: str = "bucket_ts",
-    value_col: str = "value",
     bool_mode: bool = False,
 ) -> DataFrame:
     """Many-to-one vector matching (extension: the reference rejects
@@ -130,10 +126,10 @@ def vector_match_grouped(
     post-aggregation tiny, so the extra exchange is negligible).
     """
     extra_labels = extra_labels or []
-    keys = [bucket_col, *match_labels]
+    keys = ["bucket_ts", *match_labels]
     many_df, one_df = (left, right) if group == "left" else (right, left)
 
-    one_cols = [*keys, F.col(value_col).alias("_ov")]
+    one_cols = [*keys, F.col("value").alias("_ov")]
     for lbl in extra_labels:
         col = F.col(lbl) if lbl in one_df.columns else F.lit(None).cast("string")
         one_cols.append(col.alias(f"_x_{lbl}"))
@@ -147,7 +143,7 @@ def vector_match_grouped(
     many_keep = [c for c in many_labels if c not in extra_labels]
     many = many_df.select(
         *dict.fromkeys([*keys, *many_keep]),
-        F.col(value_col).alias("_mv"),
+        F.col("value").alias("_mv"),
     ).alias("_l")
 
     joined = many.join(one, _null_safe_cond(keys), "inner").filter(
@@ -167,13 +163,13 @@ def vector_match_grouped(
         else (F.col("_ov"), F.col("_mv"))
     )
     value, keep = _apply_op(op, lv, rv, bool_mode)
-    out = joined.withColumn(value_col, value)
+    out = joined.withColumn("value", value)
     if keep is not None:
         out = out.filter(keep)
     out_cols = [F.col(f"_l.{k}").alias(k) for k in keys]
     out_cols += [F.col(f"_l.{c}").alias(c) for c in many_keep if c not in keys]
     out_cols += [F.col(f"_x_{lbl}").alias(lbl) for lbl in extra_labels]
-    return out.select(*out_cols, value_col)
+    return out.select(*out_cols, "value")
 
 
 def vector_scalar(
@@ -181,7 +177,6 @@ def vector_scalar(
     op: str,
     scalar: float | Column,
     scalar_on_left: bool = False,
-    value_col: str = "value",
     bool_mode: bool = False,
 ) -> DataFrame:
     """vector <op> scalar (J5): broadcast the scalar to every series.
@@ -190,14 +185,14 @@ def vector_scalar(
     compiler passes ``time()`` expressions as bucket_ts-derived columns
     so scalar semantics stay per-bucket without a join."""
     s = scalar if isinstance(scalar, Column) else F.lit(scalar)
-    lv = s if scalar_on_left else F.col(value_col)
-    rv = F.col(value_col) if scalar_on_left else s
+    lv = s if scalar_on_left else F.col("value")
+    rv = F.col("value") if scalar_on_left else s
     value, keep = _apply_op(op, lv, rv, bool_mode)
     if scalar_on_left and op in _CMP and not bool_mode:
         # filter comparisons keep the VECTOR element's value; _apply_op
         # returns `left`, which here is the scalar constant
-        value = F.col(value_col)
-    out = df.withColumn(value_col, value)
+        value = F.col("value")
+    out = df.withColumn("value", value)
     if keep is not None:
         out = out.filter(keep)
     return out
@@ -207,13 +202,11 @@ def vector_or(
     left: DataFrame,
     right: DataFrame,
     match_labels: list[str],
-    bucket_col: str = "bucket_ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """LHS ∪ RHS preferring LHS on key collision (J2)."""
-    keys = [bucket_col, *match_labels]
-    lhs = left.select(*keys, F.col(value_col).alias("_lv")).alias("_l")
-    rhs = right.select(*keys, F.col(value_col).alias("_rv")).alias("_r")
+    keys = ["bucket_ts", *match_labels]
+    lhs = left.select(*keys, F.col("value").alias("_lv")).alias("_l")
+    rhs = right.select(*keys, F.col("value").alias("_rv")).alias("_r")
     joined = lhs.join(rhs, _null_safe_cond(keys), "full_outer")
     # matched rows have null-safely-equal keys, so coalesce picks the
     # same identity from whichever side is present (a both-NULL matched
@@ -222,7 +215,7 @@ def vector_or(
         F.coalesce(F.col(f"_l.{k}"), F.col(f"_r.{k}")).alias(k) for k in keys
     ]
     return joined.select(
-        *out_keys, F.coalesce("_lv", "_rv").alias(value_col)
+        *out_keys, F.coalesce("_lv", "_rv").alias("value")
     )
 
 
@@ -230,11 +223,9 @@ def vector_and(
     left: DataFrame,
     right: DataFrame,
     match_labels: list[str],
-    bucket_col: str = "bucket_ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """LHS rows whose (bucket, key) exists in RHS (J3) — left_semi."""
-    keys = [bucket_col, *match_labels]
+    keys = ["bucket_ts", *match_labels]
     lhs = left.alias("_l")
     rhs = right.select(*keys).distinct().alias("_r")
     return lhs.join(rhs, _null_safe_cond(keys), "left_semi")
@@ -244,11 +235,9 @@ def vector_unless(
     left: DataFrame,
     right: DataFrame,
     match_labels: list[str],
-    bucket_col: str = "bucket_ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """LHS rows whose (bucket, key) is absent from RHS (J4) — left_anti."""
-    keys = [bucket_col, *match_labels]
+    keys = ["bucket_ts", *match_labels]
     lhs = left.alias("_l")
     rhs = right.select(*keys).distinct().alias("_r")
     return lhs.join(rhs, _null_safe_cond(keys), "left_anti")

@@ -199,7 +199,6 @@ def ddsketch_agg(
     df: DataFrame,
     group_cols: list[str],
     value_col: str = "value",
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
 ) -> DataFrame:
     """Build per-group sketches: (group_cols..., bucket, count) rows.
 
@@ -207,7 +206,7 @@ def ddsketch_agg(
     NULL bucket row would sort nulls-first in Spark's cumulative walk
     but nulls-last in DuckDB's, silently shifting every quantile.
     """
-    gamma = gamma_for(relative_accuracy)
+    gamma = gamma_for(DEFAULT_RELATIVE_ACCURACY)
     return (
         df.filter(F.col(value_col).isNotNull())
         .withColumn("bucket", bucket_index(value_col, gamma))
@@ -226,7 +225,6 @@ def ddsketch_quantile(
     sketch: DataFrame,
     group_cols: list[str],
     q: float,
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
     out_col: str = "value",
 ) -> DataFrame:
     """Quantile per group from sketch rows.
@@ -236,7 +234,7 @@ def ddsketch_quantile(
     estimated as 2*gamma^i/(gamma+1) (mid-bucket, relative-error bound).
     Implemented as a cumulative-sum window + first matching row.
     """
-    gamma = gamma_for(relative_accuracy)
+    gamma = gamma_for(DEFAULT_RELATIVE_ACCURACY)
     w = (
         Window.partitionBy(*group_cols)
         .orderBy("bucket")
@@ -288,7 +286,6 @@ def ddsketch_quantiles(
     sketch: DataFrame,
     group_cols: list[str],
     qs: list[float],
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
     out_cols: list[str] | None = None,
     n_col: str | None = None,
 ) -> DataFrame:
@@ -308,7 +305,7 @@ def ddsketch_quantiles(
     out_cols = out_cols or [f"q{i}" for i in range(len(qs))]
     if len(out_cols) != len(qs):
         raise ValueError("ddsketch_quantiles: len(out_cols) != len(qs)")
-    gamma = gamma_for(relative_accuracy)
+    gamma = gamma_for(DEFAULT_RELATIVE_ACCURACY)
     w = (
         Window.partitionBy(*group_cols)
         .orderBy("bucket")
@@ -346,7 +343,6 @@ def ddsketch_quantiles_sql(
     group_cols: list[str],
     value_sql: str,
     qs: list[float],
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
     out_cols: list[str] | None = None,
 ) -> str:
     """DuckDB oracle twin of :func:`ddsketch_quantiles` — build +
@@ -354,7 +350,7 @@ def ddsketch_quantiles_sql(
     if not qs:
         raise ValueError("ddsketch_quantiles_sql: need at least one quantile")
     out_cols = out_cols or [f"q{i}" for i in range(len(qs))]
-    gamma = gamma_for(relative_accuracy)
+    gamma = gamma_for(DEFAULT_RELATIVE_ACCURACY)
     keys = ", ".join(group_cols)
     b = bucket_index_sql(value_sql, gamma)
     hits = ",\n             ".join(
@@ -409,8 +405,6 @@ def ddsketch_quantile_over_time(
     q: float,
     ts_col: str = "chq_timestamp",
     value_col: str = "value",
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
-    out_col: str = "value",
 ) -> DataFrame:
     """Sliding-range quantile served from the DDSketch bucket algebra.
 
@@ -447,7 +441,7 @@ def ddsketch_quantile_over_time(
     dense-series regime is unchanged (grid_s x in-range sketch rows =
     the surviving contribution volume either way).
     """
-    gamma = gamma_for(relative_accuracy)
+    gamma = gamma_for(DEFAULT_RELATIVE_ACCURACY)
     k = max(1, range_ms // step_ms)
     # NO spread_small_scan here (r12, measured): the log-bucket math is
     # cheap columnar compute and the groupBy's map-side partial
@@ -516,13 +510,7 @@ def ddsketch_quantile_over_time(
     merged = contrib.groupBy("bucket_ts", *labels, "bucket").agg(
         F.sum("count").alias("count")
     )
-    return ddsketch_quantile(
-        merged,
-        ["bucket_ts", *labels],
-        q,
-        relative_accuracy=relative_accuracy,
-        out_col=out_col,
-    )
+    return ddsketch_quantile(merged, ["bucket_ts", *labels], q)
 
 
 def ddsketch_quantile_over_time_sql(
@@ -531,19 +519,15 @@ def ddsketch_quantile_over_time_sql(
     range_ms: int,
     step_ms: int,
     q: float,
-    ts_sql: str = "chq_timestamp",
-    value_sql: str = "value",
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
-    out_col: str = "value",
 ) -> str:
     """DuckDB oracle twin of :func:`ddsketch_quantile_over_time`."""
-    gamma = gamma_for(relative_accuracy)
+    gamma = gamma_for(DEFAULT_RELATIVE_ACCURACY)
     k = max(1, range_ms // step_ms)
     keys = ", ".join(labels)
     return f"""
     WITH rows_v AS (
-      SELECT {ts_sql} - {ts_sql} % {step_ms} AS _bts, {keys}, {value_sql} AS _v
-      FROM ({base_sql}) WHERE {value_sql} IS NOT NULL
+      SELECT chq_timestamp - chq_timestamp % {step_ms} AS _bts, {keys}, value AS _v
+      FROM ({base_sql}) WHERE value IS NOT NULL
     ),
     sk AS (
       SELECT _bts, {keys}, {bucket_index_sql('_v', gamma)} AS bucket,
@@ -578,7 +562,7 @@ def ddsketch_quantile_over_time_sql(
                 THEN 2.0 * power({gamma!r}, bucket) / ({gamma!r} + 1)
                 WHEN bucket = {_ZERO_BUCKET} THEN 0.0
                 ELSE -2.0 * power({gamma!r}, {_NEG_BASE} - bucket)
-                     / ({gamma!r} + 1) END AS {out_col}
+                     / ({gamma!r} + 1) END AS value
     FROM hit
     """
 
@@ -586,44 +570,40 @@ def ddsketch_quantile_over_time_sql(
 def with_sketch_column(
     df: DataFrame,
     group_cols: list[str],
-    value_col: str = "value",
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
-    out_col: str = "chq_sketch",
 ) -> DataFrame:
     """Attach a map<bucket,count> DDSketch column per group — the
     engine's ``chq_sketch`` analogue as a TYPED column (no opaque
     bytes): rollup rows carry their distribution and coarser tiers
     merge exactly with :func:`merge_sketch_column`."""
-    gamma = gamma_for(relative_accuracy)
+    gamma = gamma_for(DEFAULT_RELATIVE_ACCURACY)
     per_bucket = (
-        df.filter(F.col(value_col).isNotNull())  # sketches count values
-        .withColumn("_b", bucket_index(value_col, gamma))
+        df.filter(F.col("value").isNotNull())  # sketches count values
+        .withColumn("_b", bucket_index("value", gamma))
         .groupBy(*group_cols, "_b")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     return per_bucket.groupBy(*group_cols).agg(
         F.map_from_entries(
             F.collect_list(F.struct(F.col("_b"), F.col("_c")))
-        ).alias(out_col)
+        ).alias("chq_sketch")
     )
 
 
 def merge_sketch_column(
     df: DataFrame,
     group_cols: list[str],
-    sketch_col: str = "chq_sketch",
 ) -> DataFrame:
     """Merge map-typed sketches to a coarser grouping: explode entries,
     sum counts per bucket, re-assemble — exact DDSketch merge (A2's
     percentile path without raw rescans)."""
     exploded = df.select(
-        *group_cols, F.explode(F.col(sketch_col)).alias("_b", "_c")
+        *group_cols, F.explode(F.col("chq_sketch")).alias("_b", "_c")
     )
     summed = exploded.groupBy(*group_cols, "_b").agg(F.sum("_c").alias("_c"))
     return summed.groupBy(*group_cols).agg(
         F.map_from_entries(
             F.collect_list(F.struct(F.col("_b"), F.col("_c")))
-        ).alias(sketch_col)
+        ).alias("chq_sketch")
     )
 
 
@@ -631,17 +611,12 @@ def sketch_column_quantile(
     df: DataFrame,
     group_cols: list[str],
     q: float,
-    sketch_col: str = "chq_sketch",
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
-    out_col: str = "value",
 ) -> DataFrame:
     """Quantile from a map-typed sketch column."""
     rows = df.select(
-        *group_cols, F.explode(F.col(sketch_col)).alias("bucket", "count")
+        *group_cols, F.explode(F.col("chq_sketch")).alias("bucket", "count")
     )
-    return ddsketch_quantile(
-        rows, group_cols, q, relative_accuracy=relative_accuracy, out_col=out_col
-    )
+    return ddsketch_quantile(rows, group_cols, q)
 
 
 def ddsketch_quantile_sql(
@@ -649,11 +624,10 @@ def ddsketch_quantile_sql(
     group_cols: list[str],
     value_sql: str,
     q: float,
-    relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY,
     out_col: str = "value",
 ) -> str:
     """DuckDB oracle for build+quantile over ``base_sql`` rows."""
-    gamma = gamma_for(relative_accuracy)
+    gamma = gamma_for(DEFAULT_RELATIVE_ACCURACY)
     keys = ", ".join(group_cols)
     b = bucket_index_sql(value_sql, gamma)
     return f"""

@@ -33,42 +33,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_NON_LABELS = ("bucket_ts", "le", "value")
 
-def cumulate_buckets(
-    df: DataFrame,
-    le_col: str = "le",
-    value_col: str = "value",
-    bucket_col: str = "bucket_ts",
-) -> DataFrame:
+
+def cumulate_buckets(df: DataFrame) -> DataFrame:
     """Per-bucket counts -> cumulative counts (running sum by ``le``).
 
     OTLP histograms carry NON-cumulative bucket_counts (sources/otel.py
     explodes them one row per bound); Prometheus le-bucket semantics —
     and :func:`histogram_quantile_buckets` — expect cumulative counts.
     One narrow window pass per series converts between the two."""
-    keys = [c for c in df.columns if c not in (bucket_col, le_col, value_col)]
+    keys = [c for c in df.columns if c not in _NON_LABELS]
     w = (
-        Window.partitionBy(bucket_col, *keys)
-        .orderBy(F.col(le_col).cast("double"))
+        Window.partitionBy("bucket_ts", *keys)
+        .orderBy(F.col("le").cast("double"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    return df.withColumn(value_col, F.sum(value_col).over(w))
+    return df.withColumn("value", F.sum("value").over(w))
 
 
 def histogram_quantile_buckets(
     df: DataFrame,
     q: float,
-    le_col: str = "le",
-    value_col: str = "value",
-    bucket_col: str = "bucket_ts",
-    cumulative: bool = True,
 ) -> DataFrame:
     """``histogram_quantile(q, v)`` for a vector carrying an ``le``
-    label with cumulative bucket counts (``cumulative=False`` first
-    runs :func:`cumulate_buckets` — the OTLP per-bucket shape).
+    label with cumulative bucket counts (the OTLP per-bucket shape
+    goes through :func:`cumulate_buckets` first).
 
-    Input columns: ``bucket_col``, the label columns (including
-    ``le_col``), ``value_col``. Output: the same labels WITHOUT ``le``,
+    Input columns: ``bucket_ts``, the label columns (including
+    ``le``), ``value``. Output: the same labels WITHOUT ``le``,
     plus ``value``. Prometheus-rule guards, all yielding ABSENT rows
     where Prometheus yields NaN:
 
@@ -82,21 +75,17 @@ def histogram_quantile_buckets(
     """
     if not 0.0 <= q <= 1.0:
         raise ValueError("histogram_quantile q must be in [0, 1]")
-    if not cumulative:
-        df = cumulate_buckets(
-            df, le_col=le_col, value_col=value_col, bucket_col=bucket_col
-        )
-    keys = [c for c in df.columns if c not in (bucket_col, le_col, value_col)]
+    keys = [c for c in df.columns if c not in _NON_LABELS]
     # "+Inf"/"inf" cast to Infinity in both Spark and DuckDB
-    le_num = F.col(le_col).cast("double")
+    le_num = F.col("le").cast("double")
     d = df.withColumn("_le", le_num).filter(F.col("_le").isNotNull())
 
     inf = float("inf")
-    wp = Window.partitionBy(bucket_col, *keys)
+    wp = Window.partitionBy("bucket_ts", *keys)
     w = wp.orderBy("_le")
     wrun = w.rowsBetween(Window.unboundedPreceding, 0)
     # ensureMonotonic: running max over the le-ordered cumulative counts
-    d = d.withColumn("_cum", F.max(value_col).over(wrun))
+    d = d.withColumn("_cum", F.max("value").over(wrun))
     has_inf = F.max(F.when(F.col("_le") == inf, 1).otherwise(0)).over(wp)
     total = F.max("_cum").over(wp)  # monotone -> the +Inf bucket's count
     rank = F.lit(q) * total
@@ -128,17 +117,12 @@ def histogram_quantile_buckets(
         # a lone +Inf bucket has no finite bound to report (Prometheus
         # NaN) -> absent row in this engine's model
         .filter(F.col("_q").isNotNull())
-        .select(bucket_col, *keys, F.col("_q").alias("value"))
+        .select("bucket_ts", *keys, F.col("_q").alias("value"))
     )
     return out
 
 
-def with_inf_bucket(
-    df: DataFrame,
-    le_col: str = "le",
-    value_col: str = "value",
-    bucket_col: str = "bucket_ts",
-) -> DataFrame:
+def with_inf_bucket(df: DataFrame) -> DataFrame:
     """Append an empty ``+Inf`` bucket per series group.
 
     OTLP exponential histograms carry no +Inf bucket (the decode
@@ -148,12 +132,12 @@ def with_inf_bucket(
     shape: one distinct-keys pass, union of a single zero-count row per
     (bucket, labels) group. Adding zero to the cumulative top keeps
     total == observed count exactly."""
-    keys = [c for c in df.columns if c not in (bucket_col, le_col, value_col)]
+    keys = [c for c in df.columns if c not in _NON_LABELS]
     inf_rows = (
-        df.select(bucket_col, *keys)
+        df.select("bucket_ts", *keys)
         .distinct()
-        .withColumn(le_col, F.lit(float("inf")))
-        .withColumn(value_col, F.lit(0.0))
+        .withColumn("le", F.lit(float("inf")))
+        .withColumn("value", F.lit(0.0))
         .select(df.columns)
     )
     return df.unionByName(inf_rows)

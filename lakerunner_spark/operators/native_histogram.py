@@ -194,10 +194,9 @@ def nh_downscale(
 def native_histogram_merge_mixed(
     df: DataFrame,
     group_cols: list[str],
-    schema_col: str = "schema",
     target_schema: int | None = None,
 ) -> DataFrame:
-    """Merge bucket rows whose per-row ``schema_col`` may differ within
+    """Merge bucket rows whose per-row ``schema`` may differ within
     a group: resolve each group to its COARSEST schema (upstream
     merges mixed-schema series by reducing resolution to the lowest
     schema present), downscale every row by its own schema gap, and
@@ -219,17 +218,17 @@ def native_histogram_merge_mixed(
     groupBy, same as the same-schema merge. With ``target_schema`` the
     join disappears entirely (the gap is a per-row expression)."""
     if target_schema is not None:
-        k = (F.col(schema_col) - F.lit(target_schema)).cast("int")
+        k = (F.col("schema") - F.lit(target_schema)).cast("int")
         mapped = df.withColumn(
             "bucket",
             F.when(
-                F.col(schema_col) < target_schema,
+                F.col("schema") < target_schema,
                 F.raise_error(
                     F.concat(
                         F.lit(
                             "native_histogram_merge_mixed: row schema "
                         ),
-                        F.col(schema_col).cast("string"),
+                        F.col("schema").cast("string"),
                         F.lit(f" is coarser than target {target_schema}"),
                     )
                 ).cast("long"),
@@ -243,9 +242,9 @@ def native_histogram_merge_mixed(
             )
             .agg(F.sum("count").alias("count"))
         )
-    tgt = df.groupBy(*group_cols).agg(F.min(schema_col).alias("_tgt"))
+    tgt = df.groupBy(*group_cols).agg(F.min("schema").alias("_tgt"))
     j = df.join(tgt, group_cols)
-    k = (F.col(schema_col) - F.col("_tgt")).cast("int")
+    k = (F.col("schema") - F.col("_tgt")).cast("int")
     return (
         j.withColumn("bucket", _downscaled_bucket(F.col("bucket"), k))
         .groupBy(*group_cols, F.col("_tgt").alias("schema"), "bucket")
@@ -278,7 +277,6 @@ def histogram_quantile_native(
     group_cols: list[str],
     q: float,
     schema: int = DEFAULT_SCHEMA,
-    out_col: str = "value",
 ) -> DataFrame:
     """Native-histogram quantile per group from bucket rows.
 
@@ -292,15 +290,15 @@ def histogram_quantile_native(
     outside [0, 1] follows upstream: -Inf / +Inf; NaN propagates."""
     if math.isnan(q):
         return sketch.groupBy(*group_cols).agg(
-            F.lit(float("nan")).alias(out_col)
+            F.lit(float("nan")).alias("value")
         )
     if q < 0:
         return sketch.groupBy(*group_cols).agg(
-            F.lit(float("-inf")).alias(out_col)
+            F.lit(float("-inf")).alias("value")
         )
     if q > 1:
         return sketch.groupBy(*group_cols).agg(
-            F.lit(float("inf")).alias(out_col)
+            F.lit(float("inf")).alias("value")
         )
     gamma = gamma_for_schema(schema)
     w = (
@@ -332,7 +330,7 @@ def histogram_quantile_native(
         .when(b > _ZERO_BUCKET, F.pow(F.lit(gamma), b - 1 + frac))
         .otherwise(-F.pow(F.lit(gamma), (F.lit(_NEG_BASE) - b) - frac))
     )
-    return first.select(*group_cols, value.alias(out_col))
+    return first.select(*group_cols, value.alias("value"))
 
 
 def histogram_fraction(
@@ -340,7 +338,6 @@ def histogram_fraction(
     group_cols: list[str],
     lo: float,
     hi: float,
-    schema: int = DEFAULT_SCHEMA,
     out_col: str = "fraction",
 ) -> DataFrame:
     """Estimated fraction of observations in [lo, hi] per group
@@ -360,7 +357,7 @@ def histogram_fraction(
         return sketch.groupBy(*group_cols).agg(
             F.lit(float("nan")).alias(out_col)
         )
-    gamma = gamma_for_schema(schema)
+    gamma = gamma_for_schema(DEFAULT_SCHEMA)
     if lo > hi:
         overlap = F.lit(0.0)
     else:
@@ -424,7 +421,6 @@ def native_histogram_quantile_from_rows_sql(
     group_cols: list[str],
     q: float,
     schema: int = DEFAULT_SCHEMA,
-    out_col: str = "value",
 ) -> str:
     """Native quantile over a query producing one row per OBSERVATION
     as (group..., bucket) — the seam that lets oracles feed
@@ -456,7 +452,7 @@ def native_histogram_quantile_from_rows_sql(
                   THEN power({gamma!r}, bucket - 1 + ((rank - pcum) / cnt))
                 ELSE -power({gamma!r},
                             ({_NEG_BASE} - bucket) - ((rank - pcum) / cnt))
-           END AS {out_col}
+           END AS value
     FROM hit
     """
 
@@ -466,20 +462,16 @@ def native_histogram_quantile_sql(
     group_cols: list[str],
     value_sql: str,
     q: float,
-    schema: int = DEFAULT_SCHEMA,
-    out_col: str = "value",
 ) -> str:
     """DuckDB oracle for build + native quantile over ``base_sql``."""
-    gamma = gamma_for_schema(schema)
+    gamma = gamma_for_schema(DEFAULT_SCHEMA)
     keys = ", ".join(group_cols)
     b = nh_bucket_index_sql(value_sql, gamma)
     rows = (
         f"SELECT {keys}, {b} AS bucket FROM ({base_sql})"
         f" WHERE {value_sql} IS NOT NULL"
     )
-    return native_histogram_quantile_from_rows_sql(
-        rows, group_cols, q, schema, out_col
-    )
+    return native_histogram_quantile_from_rows_sql(rows, group_cols, q)
 
 
 def histogram_fraction_sql(
@@ -488,14 +480,13 @@ def histogram_fraction_sql(
     value_sql: str,
     lo: float,
     hi: float,
-    schema: int = DEFAULT_SCHEMA,
     out_col: str = "fraction",
 ) -> str:
     """DuckDB oracle for build + fraction-in-[lo, hi] over ``base_sql``
     (exponential overlap, arithmetic-identical to
     :func:`histogram_fraction` — same clamp form, same Python-literal
     bound logs)."""
-    gamma = gamma_for_schema(schema)
+    gamma = gamma_for_schema(DEFAULT_SCHEMA)
     keys = ", ".join(group_cols)
     b = nh_bucket_index_sql(value_sql, gamma)
     if lo > hi:
@@ -545,7 +536,6 @@ def histogram_stddev_stdvar(
     sketch: DataFrame,
     stats: DataFrame,
     group_cols: list[str],
-    schema: int = DEFAULT_SCHEMA,
 ) -> DataFrame:
     """histogram_stddev / histogram_stdvar (upstream funcHistogramStdDev/
     StdVar): every observation in a bucket is assumed at the bucket's
@@ -562,7 +552,7 @@ def histogram_stddev_stdvar(
     Returns (group..., h_stdvar, h_stddev). Joins the one-row-per-group
     stats table back to the bucket rows — the join side is bounded by
     group cardinality, never corpus rows."""
-    gamma = gamma_for_schema(schema)
+    gamma = gamma_for_schema(DEFAULT_SCHEMA)
     b = F.col("bucket")
     mid = (
         F.when(b == _ZERO_BUCKET, F.lit(0.0))
@@ -583,12 +573,11 @@ def histogram_stddev_sql(
     base_sql: str,
     group_cols: list[str],
     value_sql: str,
-    schema: int = DEFAULT_SCHEMA,
 ) -> str:
     """DuckDB oracle: build + stddev/stdvar over ``base_sql`` rows
     (geometric midpoint, arithmetic-identical to
     :func:`histogram_stddev_stdvar`)."""
-    gamma = gamma_for_schema(schema)
+    gamma = gamma_for_schema(DEFAULT_SCHEMA)
     keys = ", ".join(group_cols)
     b = nh_bucket_index_sql(value_sql, gamma)
     mid = (

@@ -75,7 +75,6 @@ def range_agg(
     range_ms: int,
     step_ms: int,
     series_labels: list[str],
-    coverage_gate: bool = True,
     param: float | None = None,
 ) -> DataFrame:
     """Apply a PromQL range function over step_agg output.
@@ -88,11 +87,11 @@ def range_agg(
     if func == "holt_winters":
         sf, tf = param
         return holt_winters_range_agg(
-            df, range_ms, step_ms, series_labels, sf, tf, coverage_gate
+            df, range_ms, step_ms, series_labels, sf, tf
         )
     if func in _STEP_VALUE_FUNCS:
         return _step_value_range_agg(
-            df, func, range_ms, step_ms, series_labels, coverage_gate, param
+            df, func, range_ms, step_ms, series_labels, param
         )
 
     w = (
@@ -160,7 +159,7 @@ def range_agg(
     # (leaf_node.go:357,394) — so tier/path choice can't change results.
     # irate/idelta stay ungated (per-pair guard above; the reference
     # has no true instant-pair path to mirror).
-    if coverage_gate and func not in ("irate", "idelta"):
+    if func not in ("irate", "idelta"):
         first_bucket = F.min("bucket_ts").over(
             Window.partitionBy(*series_labels)
             .orderBy("bucket_ts")
@@ -178,7 +177,6 @@ def _step_value_range_agg(
     range_ms: int,
     step_ms: int,
     series_labels: list[str],
-    coverage_gate: bool,
     param: float | None,
 ) -> DataFrame:
     """Extension range functions over the per-step series values.
@@ -283,10 +281,9 @@ def _step_value_range_agg(
         value = F.sqrt(var) if func == "stddev_over_time" else var
 
     out = out.withColumn("value", value)
-    if coverage_gate:
-        first_bucket = F.min("bucket_ts").over(wseries)
-        covered = (F.col("bucket_ts") - first_bucket) >= F.lit(range_ms - step_ms)
-        out = out.withColumn("value", F.when(covered, F.col("value")))
+    first_bucket = F.min("bucket_ts").over(wseries)
+    covered = (F.col("bucket_ts") - first_bucket) >= F.lit(range_ms - step_ms)
+    out = out.withColumn("value", F.when(covered, F.col("value")))
     return out.select("bucket_ts", *series_labels, "value")
 
 
@@ -390,7 +387,6 @@ def holt_winters_range_agg(
     series_labels: list[str],
     sf: float,
     tf: float,
-    coverage_gate: bool = True,
 ) -> DataFrame:
     """holt_winters / double_exponential_smoothing (extension beyond
     the reference): Prometheus's trend-aware exponential smoothing fold
@@ -451,10 +447,9 @@ def holt_winters_range_agg(
     )
     value = F.when(F.size("_vals") >= 2, F.expr(fold))
     out = out.withColumn("value", value)
-    if coverage_gate:
-        first_bucket = F.min("bucket_ts").over(wseries)
-        covered = (F.col("bucket_ts") - first_bucket) >= F.lit(range_ms - step_ms)
-        out = out.withColumn("value", F.when(covered, F.col("value")))
+    first_bucket = F.min("bucket_ts").over(wseries)
+    covered = (F.col("bucket_ts") - first_bucket) >= F.lit(range_ms - step_ms)
+    out = out.withColumn("value", F.when(covered, F.col("value")))
     return out.select("bucket_ts", *series_labels, "value")
 
 

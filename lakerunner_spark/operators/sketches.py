@@ -36,7 +36,6 @@ def quantile_sketch_agg(
     group_cols: list[str],
     value_col: str = "value",
     quantiles: list[float] | None = None,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """A5: per-group approximate quantiles from a mergeable sketch.
 
@@ -46,7 +45,7 @@ def quantile_sketch_agg(
     """
     qs = quantiles or DEFAULT_QUANTILES
     aggs = [
-        F.percentile_approx(value_col, q, accuracy).alias(_q_label(q))
+        F.percentile_approx(value_col, q, accuracy=10_000).alias(_q_label(q))
         for q in qs
     ]
     return df.groupBy(*group_cols).agg(*aggs)
@@ -68,7 +67,6 @@ def hll_sketch_rollup(
     df: DataFrame,
     group_cols: list[str],
     col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """A6/X4 (tiered): per-group Datasketches HLL sketch **bytes**.
 
@@ -77,23 +75,22 @@ def hll_sketch_rollup(
     coarser tiers with :func:`hll_sketch_merge` — no raw-data rescan.
     """
     return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(col), F.lit(lg_k)).alias("hll_sketch")
+        F.hll_sketch_agg(F.col(col), F.lit(12)).alias("hll_sketch")
     )
 
 
 def hll_sketch_merge(
     df: DataFrame,
     group_cols: list[str],
-    sketch_col: str = "hll_sketch",
 ) -> DataFrame:
     """Merge stored HLL sketches to a coarser grouping (rollup chain A2)."""
     return df.groupBy(*group_cols).agg(
-        F.hll_union_agg(F.col(sketch_col)).alias(sketch_col)
+        F.hll_union_agg(F.col("hll_sketch")).alias("hll_sketch")
     )
 
 
-def hll_estimate(df: DataFrame, sketch_col: str = "hll_sketch") -> DataFrame:
+def hll_estimate(df: DataFrame) -> DataFrame:
     """Decode sketch bytes -> cardinality estimate."""
     return df.withColumn(
-        "cardinality", F.hll_sketch_estimate(F.col(sketch_col))
-    ).drop(sketch_col)
+        "cardinality", F.hll_sketch_estimate(F.col("hll_sketch"))
+    ).drop("hll_sketch")

@@ -28,19 +28,15 @@ def step_agg(
     step_ms: int,
     labels: list[str],
     ts_col: str = "chq_timestamp",
-    sum_col: str = "chq_rollup_sum",
-    count_col: str = "chq_rollup_count",
-    min_col: str = "chq_rollup_min",
-    max_col: str = "chq_rollup_max",
 ) -> DataFrame:
     """Per-(bucket_ts, labels): sum/count/min/max partial aggregates."""
     return (
         df.groupBy(bucket_ts(ts_col, step_ms).alias("bucket_ts"), *labels)
         .agg(
-            F.sum(sum_col).alias("sum"),
-            F.sum(F.coalesce(F.col(count_col), F.lit(0))).alias("count"),
-            F.min(min_col).alias("min"),
-            F.max(max_col).alias("max"),
+            F.sum("chq_rollup_sum").alias("sum"),
+            F.sum(F.coalesce(F.col("chq_rollup_count"), F.lit(0))).alias("count"),
+            F.min("chq_rollup_min").alias("min"),
+            F.max("chq_rollup_max").alias("max"),
         )
     )
 
@@ -68,10 +64,9 @@ def count_only_agg(
     df: DataFrame,
     step_ms: int,
     labels: list[str],
-    ts_col: str = "chq_timestamp",
 ) -> DataFrame:
     """Count-only densified aggregation (A4; sql_builder.go:629-750)."""
     return (
-        df.groupBy(bucket_ts(ts_col, step_ms).alias("bucket_ts"), *labels)
+        df.groupBy(bucket_ts("chq_timestamp", step_ms).alias("bucket_ts"), *labels)
         .agg(F.count(F.lit(1)).alias("count"))
     )

@@ -67,27 +67,13 @@ def vector_agg(
     df: DataFrame,
     func: str,
     by: list[str] | None = None,
-    without: list[str] | None = None,
-    value_col: str = "value",
-    bucket_col: str = "bucket_ts",
 ) -> DataFrame:
-    """PromQL ``<func> by (labels) (vector)`` at each bucket.
-
-    ``without`` resolves to the complement of the df's label columns
-    (everything except bucket/value), matching agg_node.go:335-360.
-    """
+    """PromQL ``<func> by (labels) (vector)`` at each bucket."""
     if func not in _AGG_FUNCS:
         raise ValueError(f"unsupported vector aggregation: {func}")
-    all_labels = [c for c in df.columns if c not in (bucket_col, value_col)]
-    if without is not None:
-        keys = [c for c in all_labels if c not in set(without)]
-    elif by is not None:
-        keys = list(by)
-    else:
-        keys = []
     return (
-        df.groupBy(bucket_col, *keys)
-        .agg(_AGG_FUNCS[func](F.col(value_col)).alias(value_col))
+        df.groupBy("bucket_ts", *(by or []))
+        .agg(_AGG_FUNCS[func](F.col("value")).alias("value"))
     )
 
 
@@ -95,8 +81,6 @@ def _ranked(
     df: DataFrame,
     k: int,
     ascending: bool,
-    value_col: str,
-    bucket_col: str,
     tiebreak: list[str] | None,
 ) -> DataFrame:
     """Per-bucket rank-and-keep-k: one ``row_number`` window per bucket.
@@ -113,14 +97,14 @@ def _ranked(
     # slot: the reference collects "scalar, finite entries only"
     # (top_k_node.go Eval skips NaN); without this, Spark's ASC NULLS
     # FIRST would hand bottomk's k slots to warm-up NULLs
-    df = df.filter(F.col(value_col).isNotNull() & ~F.isnan(value_col))
-    order = [F.col(value_col).asc() if ascending else F.col(value_col).desc()]
+    df = df.filter(F.col("value").isNotNull() & ~F.isnan("value"))
+    order = [F.col("value").asc() if ascending else F.col("value").desc()]
     # deterministic tiebreak so results are stable across engines/runs
     tiebreak = tiebreak or [
-        c for c in df.columns if c not in (bucket_col, value_col)
+        c for c in df.columns if c not in ("bucket_ts", "value")
     ]
     order += [F.col(c).asc() for c in tiebreak]
-    w = Window.partitionBy(bucket_col).orderBy(*order)
+    w = Window.partitionBy("bucket_ts").orderBy(*order)
     return (
         df.withColumn("_rank", F.row_number().over(w))
         .filter(F.col("_rank") <= k)
@@ -131,8 +115,6 @@ def _ranked(
 def topk(
     df: DataFrame,
     k: int,
-    value_col: str = "value",
-    bucket_col: str = "bucket_ts",
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Per-bucket top-k series by value (top_k_node.go:25-100).
@@ -144,14 +126,12 @@ def topk(
     reference-faithful, diverging from upstream Prometheus's per-group
     ranking by design.
     """
-    return _ranked(df, k, False, value_col, bucket_col, tiebreak)
+    return _ranked(df, k, False, tiebreak)
 
 
 def bottomk(
     df: DataFrame,
     k: int,
-    value_col: str = "value",
-    bucket_col: str = "bucket_ts",
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
-    return _ranked(df, k, True, value_col, bucket_col, tiebreak)
+    return _ranked(df, k, True, tiebreak)

@@ -27,11 +27,10 @@ AGG_GRAIN_MS = 10_000  # 10s, matching ingest pre-aggregation (A1)
 def build_agg_table(
     df: DataFrame,
     dims: list[str],
-    ts_col: str = "chq_timestamp",
 ) -> DataFrame:
     """Companion aggregate: counts per (10s bucket, dims)."""
     return (
-        df.groupBy(bucket_ts(ts_col, AGG_GRAIN_MS).alias("agg_bucket"), *dims)
+        df.groupBy(bucket_ts("chq_timestamp", AGG_GRAIN_MS).alias("agg_bucket"), *dims)
         .agg(F.count(F.lit(1)).alias("agg_count"))
     )
 
@@ -55,7 +54,6 @@ def route_count_query(
     query_dims: list[str],
     filters: list | None = None,
     filter_dims: list[str] | None = None,
-    ts_col: str = "chq_timestamp",
 ) -> tuple[DataFrame, bool]:
     """Answer ``count by (query_dims) per step bucket``, from the agg
     table when eligible, else from raw. Returns (df, used_agg).
@@ -82,7 +80,7 @@ def route_count_query(
     for f in filters or []:
         src = src.filter(f)
     out = (
-        src.groupBy(bucket_ts(ts_col, step_ms).alias("bucket_ts"), *query_dims)
+        src.groupBy(bucket_ts("chq_timestamp", step_ms).alias("bucket_ts"), *query_dims)
         .agg(F.count(F.lit(1)).alias("count"))
     )
     return out, False

@@ -41,6 +41,11 @@ from lakerunner_spark.operators.binary import (
     vector_scalar,
     vector_unless,
 )
+from lakerunner_spark.operators.density import (
+    QUANTILE_EXACT_MAX_SAMPLES,
+    exact_too_dense,
+    quantile_over_time,
+)
 from lakerunner_spark.operators.range_agg import (
     SPARSE_FUNCS,
     range_agg,
@@ -91,15 +96,6 @@ class MetricCatalog:
         if metric not in self._sources:
             raise KeyError(f"unknown metric: {metric!r}")
         return self._sources[metric]
-
-
-# quantile_over_time routing: ranges spanning more than this many step
-# buckets are served from the DDSketch bucket algebra (merge in
-# O(occupied buckets), no raw-value arrays — the reference's contract,
-# promql/quantile_node.go:35-114); smaller ranges use the exact
-# interpolated path, whose per-row array is bounded by
-# samples-per-series within the short range.
-QUANTILE_SKETCH_MIN_BUCKETS = 60
 
 
 def step_for_duration(span_ms: int) -> int:
@@ -350,7 +346,18 @@ class _Compiler:
                 raise ValueError(
                     "promql: quantile_over_time needs raw samples, not a rollup tier"
                 )
-            return self._quantile_over_time(df, src, sel.range_ms, q)
+            out = quantile_over_time(
+                df,
+                src.labels,
+                sel.range_ms,
+                self.step,
+                q,
+                src.ts_col,
+                src.value_col,
+                None if self.start is None else self.start + sel.range_ms,
+                raw_samples=True,
+            )
+            return _Vec(out, src.labels)
         s = self._step(df, src)
         if (
             src.pre_aggregated
@@ -467,37 +474,17 @@ class _Compiler:
         # NULL inner samples (coverage warm-ups) are absent, not zero
         df = inner.df.filter(F.col("value").isNotNull())
         if fn == "quantile_over_time":
-            # the inner grid yields at most one value per substep per
-            # series, so samples-per-window == range/substep buckets —
-            # the bucket-count gate IS the density gate here
-            if sub.range_ms // substep > QUANTILE_SKETCH_MIN_BUCKETS:
-                from lakerunner_spark.operators.ddsketch import (
-                    ddsketch_quantile_over_time,
-                )
-
-                out = ddsketch_quantile_over_time(
-                    df.withColumnRenamed("bucket_ts", "_sts"),
-                    inner.labels,
-                    sub.range_ms,
-                    substep,
-                    q,
-                    ts_col="_sts",
-                    value_col="value",
-                )
-            else:
-                from lakerunner_spark.operators.range_agg import (
-                    exact_quantile_over_time,
-                )
-
-                out = exact_quantile_over_time(
-                    df.withColumnRenamed("bucket_ts", "_sts"),
-                    inner.labels,
-                    sub.range_ms,
-                    substep,
-                    q,
-                    ts_col="_sts",
-                    value_col="value",
-                )
+            out = quantile_over_time(
+                df.withColumnRenamed("bucket_ts", "_sts"),
+                inner.labels,
+                sub.range_ms,
+                substep,
+                q,
+                "_sts",
+                "value",
+                None,
+                raw_samples=False,
+            )
         elif fn == "mad_over_time":
             from lakerunner_spark.operators.range_agg import (
                 exact_mad_over_time,
@@ -526,76 +513,6 @@ class _Compiler:
         if substep != self.step:
             out = out.filter(F.col("bucket_ts") % F.lit(self.step) == 0)
         return _Vec(out, inner.labels)
-
-    def _quantile_over_time(
-        self, df: DataFrame, src: LeafSource, range_ms: int, q: float
-    ) -> _Vec:
-        """Quantile over a sliding range window, route chosen by range size.
-
-        Short ranges (<= QUANTILE_SKETCH_MIN_BUCKETS step buckets):
-        exact interpolated quantile — per-bucket raw values kept as
-        arrays, the window flattens the trailing range's arrays, and the
-        quantile is computed with array expressions (sort + linear
-        interpolation), identical to quantile_cont so DuckDB can oracle
-        it. The per-row array is bounded by samples-per-series within
-        the short range.
-
-        Large ranges: the array would hold every raw sample of the
-        trailing range per row — unbounded. Those route through the
-        DDSketch bucket algebra (operators/ddsketch.py), merging in
-        O(occupied buckets) exactly as the reference serves quantiles
-        from stored sketches (quantile_node.go:35-114), within the
-        sketch's relative-error contract.
-
-        The bucket count alone doesn't bound the arrays — a dense raw
-        series (100 Hz under a 10 s step) packs ~1,000 samples per
-        bucket — so short ranges additionally run a one-pass density
-        estimate (operators/density.py) and route to the sketch when
-        the estimated samples-per-series-per-window exceeds
-        QUANTILE_EXACT_MAX_SAMPLES.
-        """
-        use_sketch = range_ms // self.step > QUANTILE_SKETCH_MIN_BUCKETS
-        if not use_sketch:
-            from lakerunner_spark.operators.density import (
-                QUANTILE_EXACT_MAX_SAMPLES,
-                estimate_range_samples,
-            )
-
-            probe = None if self.start is None else self.start + range_ms
-            use_sketch = (
-                estimate_range_samples(
-                    df, src.labels, range_ms, src.ts_col, src.value_col,
-                    probe_before_ms=probe,
-                )
-                > QUANTILE_EXACT_MAX_SAMPLES
-            )
-        if use_sketch:
-            from lakerunner_spark.operators.ddsketch import (
-                ddsketch_quantile_over_time,
-            )
-
-            out = ddsketch_quantile_over_time(
-                df,
-                src.labels,
-                range_ms,
-                self.step,
-                q,
-                ts_col=src.ts_col,
-                value_col=src.value_col,
-            )
-            return _Vec(out, src.labels)
-        from lakerunner_spark.operators.range_agg import exact_quantile_over_time
-
-        out = exact_quantile_over_time(
-            df,
-            src.labels,
-            range_ms,
-            self.step,
-            q,
-            ts_col=src.ts_col,
-            value_col=src.value_col,
-        )
-        return _Vec(out, src.labels)
 
     # -- nodes -------------------------------------------------------------
 
@@ -737,19 +654,11 @@ class _Compiler:
                         "promql: mad_over_time needs raw samples, not a "
                         "rollup tier"
                     )
-                from lakerunner_spark.operators.density import (
-                    QUANTILE_EXACT_MAX_SAMPLES,
-                    estimate_range_samples,
-                )
-
-                est = estimate_range_samples(
+                est = exact_too_dense(
                     df, src.labels, sel.range_ms, src.ts_col, src.value_col,
-                    probe_before_ms=(
-                        None if self.start is None
-                        else self.start + sel.range_ms
-                    ),
+                    None if self.start is None else self.start + sel.range_ms,
                 )
-                if est > QUANTILE_EXACT_MAX_SAMPLES:
+                if est is not None:
                     # MAD's inner re-centering is not servable from a
                     # mergeable sketch, so there is no bounded-memory
                     # route for dense series — fail closed rather than

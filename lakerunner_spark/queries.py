@@ -19,14 +19,13 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakerunner_spark.functions.timeops import bucket_ts
 from lakerunner_spark.functions.unwrap import (
     bytes_to_bytes,
     bytes_to_bytes_sql,
-    duration_to_seconds,
     duration_to_seconds_sql,
 )
 from lakerunner_spark.logql import stages
@@ -38,7 +37,7 @@ from lakerunner_spark.operators.binary import (
     vector_unless,
 )
 from lakerunner_spark.operators.range_agg import range_agg
-from lakerunner_spark.operators.step_agg import count_only_agg, step_agg, step_agg_raw
+from lakerunner_spark.operators.step_agg import count_only_agg, step_agg_raw
 from lakerunner_spark.operators.vector_agg import topk, vector_agg
 from lakerunner_spark.ingest.preagg import preaggregate_metrics
 from lakerunner_spark.ingest.rollup import rollup_tier

@@ -15,7 +15,6 @@ from lakerunner_spark.dataops.dedup import (
     jaccard_verify_narrow,
     lsh_candidates,
     minhash_signatures_narrow,
-    shingles,
     simhash,
 )
 from lakerunner_spark.dataops.similarity import cosine_topk
@@ -26,7 +25,7 @@ from lakerunner_spark.dataops.text import (
     token_count,
 )
 from lakerunner_spark.queries import register
-from lakerunner_spark.testdata import EVENTS_MS_SQL, load_table
+from lakerunner_spark.testdata import load_table
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (mirror the Spark builders exactly)
@@ -1093,12 +1092,12 @@ def _kmeans_cte(n_clusters: int = 8, iters: int = 3) -> str:
     return head + "," + ",".join(stages)
 
 
-def _sim5_oracle(n_clusters: int = 8, iters: int = 3) -> str:
+def _sim5_oracle() -> str:
     return f"""
-    {_kmeans_cte(n_clusters, iters)}
+    {_kmeans_cte(8, 3)}
     SELECT cluster, CAST(count(*) AS BIGINT) AS n,
            pround(avg(dist), 6) AS avg_dist
-    FROM a{iters} GROUP BY cluster
+    FROM a3 GROUP BY cluster
     """
 
 
@@ -1370,16 +1369,15 @@ def _txt12s_plan(j: DataFrame) -> DataFrame:
     )
 
 
-def _dd12_oracle(n_clusters: int = 8, iters: int = 3,
-                 threshold: float = 0.3) -> str:
+def _dd12_oracle() -> str:
     """SemDeDup oracle: the shared unrolled-Lloyd CTE for the cluster
     assignment, then within-cluster pairwise cosine in long form and
     the lowest-keep-id pick per duplicate."""
     return f"""
-    {_kmeans_cte(n_clusters, iters)},
+    {_kmeans_cte(8, 3)},
     v AS (
       SELECT a.cluster, l._id, l.pos, CAST(l.val AS DOUBLE) AS val
-      FROM long l JOIN a{iters} a USING (_id)
+      FROM long l JOIN a3 a USING (_id)
     ),
     nrm AS (SELECT _id, sqrt(sum(val * val)) AS nrm FROM v
             GROUP BY _id HAVING sqrt(sum(val * val)) > 0),
@@ -1394,7 +1392,7 @@ def _dd12_oracle(n_clusters: int = 8, iters: int = 3,
       SELECT cluster, ida, idb,
              pround(dot / (na.nrm * nb.nrm), 4) AS cos
       FROM p JOIN nrm na ON na._id = ida JOIN nrm nb ON nb._id = idb
-      WHERE pround(dot / (na.nrm * nb.nrm), 4) >= {threshold}
+      WHERE pround(dot / (na.nrm * nb.nrm), 4) >= 0.3
     )
     SELECT cluster, keep_id, drop_id, cosine FROM (
       SELECT cluster, ida AS keep_id, idb AS drop_id, cos AS cosine,
@@ -1627,15 +1625,14 @@ def ds6_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("chunk_idx", F.col("chunk_idx").cast("long"))
 
 
-def _sim6_oracle(in_dim: int = 64, out_dim: int = 24, seed: int = 0,
-                 shortlist: int = 64, k: int = 5) -> str:
+def _sim6_oracle() -> str:
     """Random-projection shortlist -> exact re-rank. The ±1 matrix is
     regenerated from the same md5 rule both engines share; every dot
     product is an index-ordered list_reduce so the doubles are
     bit-identical to Spark's zip_with/aggregate folds."""
     from lakerunner_spark.dataops.similarity import rp_sign_matrix
 
-    mtx = rp_sign_matrix(in_dim, out_dim, seed)
+    mtx = rp_sign_matrix(64, 24, 0)
     mtx_sql = (
         "[" + ", ".join(
             "[" + ", ".join(f"{s}.0" for s in row) + "]" for row in mtx
@@ -1647,16 +1644,16 @@ def _sim6_oracle(in_dim: int = 64, out_dim: int = 24, seed: int = 0,
     c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 3),
     qp AS (
       SELECT vec_id, embedding,
-             list_transform(range(1, {out_dim + 1}),
-                 j -> list_reduce(list_transform(range(1, {in_dim + 1}),
+             list_transform(range(1, 25),
+                 j -> list_reduce(list_transform(range(1, 65),
                           i -> CAST(embedding[i] AS DOUBLE) * mtx[j][i]),
                       (a, b) -> a + b)) AS rp
       FROM q, m
     ),
     cp AS (
       SELECT vec_id, embedding,
-             list_transform(range(1, {out_dim + 1}),
-                 j -> list_reduce(list_transform(range(1, {in_dim + 1}),
+             list_transform(range(1, 25),
+                 j -> list_reduce(list_transform(range(1, 65),
                           i -> CAST(embedding[i] AS DOUBLE) * mtx[j][i]),
                       (a, b) -> a + b)) AS rp
       FROM c, m
@@ -1668,37 +1665,37 @@ def _sim6_oracle(in_dim: int = 64, out_dim: int = 24, seed: int = 0,
                row_number() OVER (
                  PARTITION BY q.vec_id
                  ORDER BY pround(
-                   list_reduce(list_transform(range(1, {out_dim + 1}),
+                   list_reduce(list_transform(range(1, 25),
                        i -> q.rp[i] * c.rp[i]), (a, b) -> a + b)
-                   / (sqrt(list_reduce(list_transform(range(1, {out_dim + 1}),
+                   / (sqrt(list_reduce(list_transform(range(1, 25),
                         i -> q.rp[i] * q.rp[i]), (a, b) -> a + b))
-                    * sqrt(list_reduce(list_transform(range(1, {out_dim + 1}),
+                    * sqrt(list_reduce(list_transform(range(1, 25),
                         i -> c.rp[i] * c.rp[i]), (a, b) -> a + b))), 4
                  ) DESC, c.vec_id ASC) AS rn
         FROM qp q CROSS JOIN cp c
-      ) WHERE rn <= {shortlist}
+      ) WHERE rn <= 64
     )
     SELECT qid, cid, cosine FROM (
       SELECT qid, cid,
              pround(
-               list_reduce(list_transform(range(1, {in_dim + 1}),
+               list_reduce(list_transform(range(1, 65),
                    i -> CAST(qe[i] AS DOUBLE) * ce[i]), (a, b) -> a + b)
-               / (sqrt(list_reduce(list_transform(range(1, {in_dim + 1}),
+               / (sqrt(list_reduce(list_transform(range(1, 65),
                     i -> CAST(qe[i] AS DOUBLE) * qe[i]), (a, b) -> a + b))
-                * sqrt(list_reduce(list_transform(range(1, {in_dim + 1}),
+                * sqrt(list_reduce(list_transform(range(1, 65),
                     i -> CAST(ce[i] AS DOUBLE) * ce[i]), (a, b) -> a + b))),
                4) AS cosine,
              row_number() OVER (PARTITION BY qid
                                 ORDER BY pround(
-               list_reduce(list_transform(range(1, {in_dim + 1}),
+               list_reduce(list_transform(range(1, 65),
                    i -> CAST(qe[i] AS DOUBLE) * ce[i]), (a, b) -> a + b)
-               / (sqrt(list_reduce(list_transform(range(1, {in_dim + 1}),
+               / (sqrt(list_reduce(list_transform(range(1, 65),
                     i -> CAST(qe[i] AS DOUBLE) * qe[i]), (a, b) -> a + b))
-                * sqrt(list_reduce(list_transform(range(1, {in_dim + 1}),
+                * sqrt(list_reduce(list_transform(range(1, 65),
                     i -> CAST(ce[i] AS DOUBLE) * ce[i]), (a, b) -> a + b))),
                4) DESC, cid ASC) AS rn
       FROM short
-    ) WHERE rn <= {k}
+    ) WHERE rn <= 5
     """
 
 

@@ -9,7 +9,6 @@ by a9_* / pqs4).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lakerunner_spark.functions.rounding import portable_round as _pr
 from lakerunner_spark.operators.range_agg import range_agg

@@ -1,8 +1,8 @@
-"""File readers (S1-S6).
+"""File readers (S1, S3, S4).
 
 The reference dispatches a Reader by file extension
-(internal/filereader/reader_factory.go:56-110); gz variants are
-transparent. Spark's DataSource framework handles .gz transparently for
+(internal/filereader/reader_factory.go:56-110); here the caller picks
+the reader. Spark's DataSource framework handles .gz transparently for
 csv/json text sources and reads schema from Parquet footers, so each
 reader is a thin declarative wrapper — Catalyst gets full pushdown.
 
@@ -22,20 +22,11 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     return spark.read.parquet(*paths)
 
 
-def read_parquet_union(spark: SparkSession, *paths: str) -> DataFrame:
-    """S2/U3: multi-file scan with schema union.
-
-    Reference: read_parquet([...], union_by_name=true)
-    (queryworker/file_executor.go:128-135).
-    """
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
-def read_csv(spark: SparkSession, *paths: str, infer: bool = True) -> DataFrame:
+def read_csv(spark: SparkSession, *paths: str) -> DataFrame:
     """S3: header CSV (+ .csv.gz transparently) with normalized column names."""
     df = (
         spark.read.option("header", "true")
-        .option("inferSchema", str(infer).lower())
+        .option("inferSchema", "true")
         .csv(list(paths))
     )
     from lakerunner_spark.ingest.translate import normalize_columns
@@ -55,7 +46,7 @@ def read_jsonlines(spark: SparkSession, *paths: str) -> DataFrame:
     return flatten(df)
 
 
-def flatten(df: DataFrame, sep: str = "_") -> DataFrame:
+def flatten(df: DataFrame) -> DataFrame:
     """Flatten struct columns recursively into top-level columns."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -87,28 +78,9 @@ def flatten(df: DataFrame, sep: str = "_") -> DataFrame:
                 for sub in f.dataType.fields:
                     cols.append(
                         F.col(f"`{f.name}`.`{sub.name}`").alias(
-                            _unique(normalize_name(f"{f.name}{sep}{sub.name}"))
+                            _unique(normalize_name(f"{f.name}_{sub.name}"))
                         )
                     )
             else:
                 cols.append(F.col(f"`{f.name}`").alias(_unique(f.name)))
         df = df.select(*cols)
-
-
-_EXT_READERS = {
-    ".parquet": read_parquet,
-    ".csv": read_csv,
-    ".csv.gz": read_csv,
-    ".json": read_jsonlines,
-    ".json.gz": read_jsonlines,
-    ".ndjson": read_jsonlines,
-}
-
-
-def read_any(spark: SparkSession, path: str) -> DataFrame:
-    """Factory dispatch by extension (reader_factory.go:56-110)."""
-    lower = path.lower()
-    for ext in sorted(_EXT_READERS, key=len, reverse=True):
-        if lower.endswith(ext):
-            return _EXT_READERS[ext](spark, path)
-    raise ValueError(f"unsupported file type: {path}")

@@ -34,14 +34,15 @@ from lakerunner_spark.schema import PARTITION_COLUMNS, SEGMENT_SORT_KEYS
 # clustering is silently lost
 _write_lock = threading.Lock()
 
+# rows per segment file: Spark splits a partition's output at this count
+MAX_RECORDS_PER_FILE = 2_000_000
+
 
 def write_segments(
     df: DataFrame,
     path: str,
     family: str,
-    max_records_per_file: int = 2_000_000,
     mode: str = "append",
-    target_partitions: int | None = None,
 ) -> None:
     """Write a cooked table family as sorted, partitioned segments."""
     partition_cols = [c for c in PARTITION_COLUMNS[family] if c in df.columns]
@@ -49,17 +50,14 @@ def write_segments(
 
     out = df
     if partition_cols:
-        if target_partitions:
-            out = out.repartition(target_partitions, *partition_cols)
-        else:
-            out = out.repartition(*partition_cols)
+        out = out.repartition(*partition_cols)
     if sort_keys:
         out = out.sortWithinPartitions(*(partition_cols + sort_keys))
 
     writer = (
         out.write.mode(mode)
         .option("compression", "zstd")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
     )
     if mode == "overwrite" and partition_cols:
         # overwrite only the partitions THIS write produces (the

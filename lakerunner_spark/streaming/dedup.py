@@ -73,8 +73,6 @@ def run_dedup_stream(
     state_path: str,
     checkpoint_path: str,
     schema,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     available_now: bool = True,
 ) -> StreamingQuery:
     """Incremental exact dedup over a document stream.
@@ -93,7 +91,7 @@ def run_dedup_stream(
         if batch_df.isEmpty():
             return
         novel = dedup_batch_against_store(
-            batch_df, batch_id, state_path, text_col, id_col
+            batch_df, batch_id, state_path, "text", "doc_id"
         ).withColumn("batch", F.lit(batch_id))
         # one computation, two narrow writes (output rows + hash store);
         # dynamic partition overwrite keeps retries idempotent

@@ -37,23 +37,19 @@ from pyspark.sql.streaming import StreamingQuery
 def preagg_stream(
     stream: DataFrame,
     dims: list[str],
-    ts_col: str = "chq_timestamp",
-    value_col: str = "value",
-    grain_sec: int = 10,
-    watermark_sec: int = 60,
 ) -> DataFrame:
     """T1/T2: watermarked tumbling-window pre-aggregation (streaming A1)."""
     with_event_time = stream.withColumn(
-        "_event_time", F.timestamp_millis(F.col(ts_col))
-    ).withWatermark("_event_time", f"{watermark_sec} seconds")
-    win = F.window("_event_time", f"{grain_sec} seconds")
+        "_event_time", F.timestamp_millis(F.col("chq_timestamp"))
+    ).withWatermark("_event_time", "60 seconds")
+    win = F.window("_event_time", "10 seconds")
     return (
         with_event_time.groupBy(win.alias("_w"), *dims)
         .agg(
-            F.sum(value_col).alias("chq_rollup_sum"),
-            F.count(value_col).alias("chq_rollup_count"),
-            F.min(value_col).alias("chq_rollup_min"),
-            F.max(value_col).alias("chq_rollup_max"),
+            F.sum("value").alias("chq_rollup_sum"),
+            F.count("value").alias("chq_rollup_count"),
+            F.min("value").alias("chq_rollup_min"),
+            F.max("value").alias("chq_rollup_max"),
         )
         .select(
             F.unix_millis(F.col("_w.start")).alias("chq_timestamp"),
@@ -75,9 +71,6 @@ def run_cook_stream(
     base_path: str,
     checkpoint_path: str,
     schema,
-    metric_col: str = "metric_name",
-    attr_cols: list[str] | None = None,
-    value_col: str = "value",
     tiers_ms: list[int] | None = None,
     available_now: bool = True,
     sketch_accuracy: float | None = None,
@@ -114,9 +107,6 @@ def run_cook_stream(
         cook_metrics(
             batch_df.withColumn("ingest_batch", F.lit(batch_id)),
             base_path,
-            metric_col=metric_col,
-            attr_cols=attr_cols,
-            value_col=value_col,
             tiers_ms=tiers_ms,
             extra_dims=["ingest_batch"],
             write_mode="overwrite",
@@ -140,8 +130,6 @@ def run_file_ingest_stream(
     checkpoint_path: str,
     schema,
     dims: list[str],
-    ts_col: str = "chq_timestamp",
-    value_col: str = "value",
     available_now: bool = True,
 ) -> StreamingQuery:
     """End-to-end file-source ingest: watch a directory, pre-aggregate,
@@ -150,10 +138,10 @@ def run_file_ingest_stream(
     stream = (
         spark.readStream.schema(schema).format("parquet").load(input_path)
     )
-    agg = preagg_stream(stream, dims, ts_col=ts_col, value_col=value_col)
+    agg = preagg_stream(stream, dims)
     # CAVEAT (inherent to append-mode watermarked aggregation): windows
     # ending after (max event time - watermark) stay in state, so an
-    # availableNow catch-up run withholds the trailing ~watermark_sec of
+    # availableNow catch-up run withholds the trailing ~60 s (the watermark) of
     # windows until strictly newer-timestamped data arrives on a later
     # run. For a one-shot "cook everything and stop" job, use
     # run_cook_stream — its foreachBatch cook aggregates each batch

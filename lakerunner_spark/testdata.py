@@ -103,16 +103,16 @@ def _read_table(
     return df, schema
 
 
-def _ts_to_epoch_ms(dtype: DataType, col: str = "ts") -> Column:
+def _ts_to_epoch_ms(dtype: DataType) -> Column:
     """Normalize a raw ``ts`` column of type ``dtype`` (epoch-ns long |
     timestamp[_ntz]) to epoch-ms."""
     if isinstance(dtype, LongType):
         # integer `div`: epoch-ns exceeds 2^53, double division would
         # round a few rows into the wrong millisecond
-        return F.expr(f"{col} div 1000000").cast("long")
+        return F.expr("ts div 1000000").cast("long")
     # TIMESTAMP_NTZ -> TIMESTAMP uses the session zone (pinned UTC above);
     # plain TIMESTAMP casts through unchanged
-    return F.unix_millis(F.col(col).cast("timestamp")).cast("long")
+    return F.unix_millis(F.col("ts").cast("timestamp")).cast("long")
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

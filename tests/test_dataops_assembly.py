@@ -240,7 +240,7 @@ def test_narrow_minhash_and_jaccard_parity(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents").limit(200)
     sh = shingles(d, "text", "doc_id", n=3)
-    sig_wide = minhash_signatures(sh, "doc_id", num_hashes=8)
+    sig_wide = minhash_signatures(sh, "doc_id")
     sig_narrow = minhash_signatures_narrow(d, "text", "doc_id", n=3,
                                            num_hashes=8)
     assert sig_wide.exceptAll(sig_narrow).isEmpty()

@@ -260,11 +260,11 @@ def test_semantic_pair_engines_equal(spark, sf_dir):
     from lakerunner_spark.dataops.similarity import kmeans_assign
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assign = kmeans_assign(emb, 8, 3, "vec_id", "embedding").localCheckpoint()
+    assign = kmeans_assign(emb, 8, 3).localCheckpoint()
 
     def rows(engine):
         out = _pairs_within_clusters(
-            emb, assign, 0.3, "vec_id", "embedding", None, engine=engine
+            emb, assign, 0.3, None, engine=engine
         )
         return sorted(
             (r.cluster, r.keep_id, r.drop_id, r.cosine)
@@ -291,7 +291,7 @@ def test_semantic_pair_engines_equal(spark, sf_dir):
 
     def erows(engine):
         out = _pairs_within_clusters(
-            edge, ea, 0.5, "vec_id", "embedding", None, engine=engine
+            edge, ea, 0.5, None, engine=engine
         )
         return sorted(
             (r.cluster, r.keep_id, r.drop_id, r.cosine)
@@ -324,8 +324,8 @@ def test_kmeans_engines_equal(spark, sf_dir):
             (r["cluster"], r["pos"], r["cval"]) for r in df.collect()
         )
 
-    _, cents_jvm = _kmeans_trajectory(train, 8, 3, "vec_id", "embedding")
-    cents_arrow = kmeans_cents_arrow(train, 8, 3, "vec_id", "embedding")
+    _, cents_jvm = _kmeans_trajectory(train, 8, 3)
+    cents_arrow = kmeans_cents_arrow(train, 8, 3)
     a, j = cent_rows(cents_arrow), cent_rows(cents_jvm)
     assert len(a) > 0
     assert a == j  # every centroid double exact
@@ -781,30 +781,6 @@ def test_prefix_sum_matches_global_window(spark):
     # form. Spark prints it as: Window [sum(v#..)..], [_psb#..], [k#..]
     for ln in data_windows:
         assert "], [_psb#" in ln, f"data window unpartitioned: {ln}"
-
-
-def test_paragraph_dedup_regex_metachar_separator(spark):
-    """sep feeds F.split (a Java regex) but concat_ws (a literal): the
-    \\Q..\\E quoting must make a metachar separator like '||' or '. '
-    split literally — unquoted, '||' is the empty-alternation regex and
-    splits between every character."""
-    from pyspark.sql import functions as F
-
-    from lakerunner_spark.dataops.text import paragraph_dedup
-
-    rows = [("a||b||a||c", "||"), ("x. y. x. z", ". ")]
-    for text, sep in rows:
-        got = (
-            spark.range(1)
-            .select(paragraph_dedup(F.lit(text), sep).alias("t"))
-            .head()[0]
-        )
-        parts, seen, kept = text.split(sep), set(), []
-        for p in parts:
-            if p not in seen:
-                seen.add(p)
-                kept.append(p)
-        assert got == sep.join(kept), (text, sep, got)
 
 
 def test_rank_buckets_null_group_and_score(spark):

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lakerunner_spark.operators.ddsketch import (
+    DEFAULT_RELATIVE_ACCURACY,
     ddsketch_agg,
     ddsketch_merge,
     ddsketch_quantile,
@@ -27,8 +28,8 @@ def test_relative_error_bound(absvals):
     """DDSketch contract: the answer is within relative_accuracy of the
     sample at rank floor(q*(n-1)) — the same rank rule the sketch uses
     (no interpolation)."""
-    acc = 0.01
-    sk = ddsketch_agg(absvals, ["event_type"], "v", relative_accuracy=acc)
+    acc = DEFAULT_RELATIVE_ACCURACY
+    sk = ddsketch_agg(absvals, ["event_type"], "v")
     samples: dict[str, list[float]] = {}
     for r in absvals.select("event_type", "v").collect():
         samples.setdefault(r.event_type, []).append(r.v)
@@ -37,9 +38,7 @@ def test_relative_error_bound(absvals):
     for q in (0.5, 0.9, 0.95, 0.99):
         approx = {
             r.event_type: r.value
-            for r in ddsketch_quantile(
-                sk, ["event_type"], q, relative_accuracy=acc
-            ).collect()
+            for r in ddsketch_quantile(sk, ["event_type"], q).collect()
         }
         for et, vs in samples.items():
             true = vs[int(q * (len(vs) - 1))]
@@ -124,7 +123,9 @@ def test_sketch_column_tier_merge(absvals):
         with_sketch_column,
     )
 
-    fine = with_sketch_column(absvals, ["event_type", "user_id"], "v")
+    fine = with_sketch_column(
+        absvals.withColumnRenamed("v", "value"), ["event_type", "user_id"]
+    )
     coarse = merge_sketch_column(fine, ["event_type"])
     via_tiers = {
         r.event_type: r.value

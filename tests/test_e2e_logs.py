@@ -35,7 +35,7 @@ def logs_layout(spark, sf_dir, tmp_path_factory):
     logs = logs.withColumn("org_id", F.lit("org1")).withColumn(
         "dateint", dateint(F.col("chq_timestamp"))
     )
-    write_segments(logs, f"{base}/logs", "logs", max_records_per_file=100_000)
+    write_segments(logs, f"{base}/logs", "logs")
 
     cooked = spark.read.parquet(f"{base}/logs")
     # companion agg file (A13) + fingerprint index (J6) built at ingest

@@ -48,7 +48,7 @@ def cooked(spark, sf_dir, tmp_path_factory):
             .withColumn("dateint", dateint(F.col("chq_timestamp")))
             .withColumn("frequency_ms", F.lit(grain))
         )
-        write_segments(t, f"{base}/metrics", "metrics", max_records_per_file=50_000)
+        write_segments(t, f"{base}/metrics", "metrics")
     return base
 
 

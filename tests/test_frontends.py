@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from lakerunner_spark.catalog import default_log_source, default_metric_catalog
+from lakerunner_spark.functions.timeops import step_for_duration
 from lakerunner_spark.logql.compiler import compile_logql_exemplar
 from lakerunner_spark.logql.parser import (
     JsonStage,
@@ -17,7 +18,7 @@ from lakerunner_spark.logql.parser import (
     LogVectorAgg,
     parse_logql,
 )
-from lakerunner_spark.promql import compile_promql, parse_promql, step_for_duration
+from lakerunner_spark.promql.compiler import compile_promql
 from lakerunner_spark.promql.parser import (
     Agg,
     Binary,
@@ -25,6 +26,7 @@ from lakerunner_spark.promql.parser import (
     Num,
     Selector,
     parse_duration_ms,
+    parse_promql,
 )
 
 

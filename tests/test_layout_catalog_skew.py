@@ -6,7 +6,7 @@ import pytest
 from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
-from lakerunner_spark.catalog import default_metric_catalog, layout_metric_catalog
+from lakerunner_spark.catalog import layout_metric_catalog
 from lakerunner_spark.promql.compiler import compile_promql
 from lakerunner_spark.testdata import events_stream
 
@@ -109,8 +109,7 @@ def test_coarse_tier_routes_to_sparse_semantics(spark, cooked_metrics):
         s, "sum_over_time", 300_000, step, ["metric_name", "attr_user"]
     )
     want_fixed = range_agg(
-        s, "sum_over_time", 300_000, step, ["metric_name", "attr_user"],
-        coverage_gate=True,
+        s, "sum_over_time", 300_000, step, ["metric_name", "attr_user"]
     )
 
     def to_map(df):

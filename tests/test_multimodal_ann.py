@@ -134,25 +134,6 @@ def test_lsh_recall_vs_brute_force(emb):
     assert _recall(approx, exact) >= 0.5
 
 
-def test_lsh_candidates_bucket_cap(spark, sf_dir):
-    """Capping hot buckets only removes pairs from oversized buckets."""
-    from lakerunner_spark.dataops.dedup import (
-        lsh_candidates,
-        minhash_signatures,
-        shingles,
-    )
-    from lakerunner_spark.testdata import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    sh = shingles(d, "text", "doc_id", n=3)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=8)
-    uncapped = lsh_candidates(sig, "doc_id")
-    capped = lsh_candidates(sig, "doc_id", max_bucket_size=2)
-    u = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
-    c = {(r.doc_a, r.doc_b) for r in capped.collect()}
-    assert c <= u  # capping never invents pairs
-
-
 # ---------------------------------------------------------------------------
 # stdlib PNG codec (round-3: de-stubbed image decode)
 # ---------------------------------------------------------------------------
@@ -363,45 +344,18 @@ def test_bmp_top_down_and_32bit():
     assert tuple(samples[-4:]) == (150, 140, 130, 160)
 
 
-def test_ivf_with_kmeans_centroids(emb):
-    """IVF over TRAINED centroids (kmeans_centroids -> ivf_topk
-    composition): recall at the same probe budget should be at least as
-    good as the naive lowest-id seeding (trained cells partition the
-    space instead of clumping around the first ids), and never below
-    the naive floor."""
-    from lakerunner_spark.dataops.similarity import kmeans_centroids
-
-    q = emb.filter(F.col("vec_id") < 10)
-    c = emb.filter(F.col("vec_id") >= 10)
-    exact = cosine_topk(q, c, k=5).collect()
-    cents = kmeans_centroids(c, n_clusters=16, iters=3)
-    assert cents.count() <= 16  # empty clusters may drop out
-    trained = ivf_topk(
-        q, c, k=5, n_cells=16, n_probe=8, centroids=cents
-    ).collect()
-    naive = ivf_topk(q, c, k=5, n_cells=16, n_probe=8).collect()
-    r_trained, r_naive = _recall(trained, exact), _recall(naive, exact)
-    assert r_trained >= 0.6
-    assert r_trained >= r_naive - 0.05  # never meaningfully worse
-
-
 def test_kmeans_rejects_zero_iters(spark):
     """iters=0 has no assignment to return — explicit ValueError, not
     an AttributeError crash deep in the plan builder."""
     import pytest as _pytest
 
-    from lakerunner_spark.dataops.similarity import (
-        kmeans_assign,
-        kmeans_centroids,
-    )
+    from lakerunner_spark.dataops.similarity import kmeans_assign
 
     df = spark.createDataFrame(
         [(1, [0.0, 1.0]), (2, [1.0, 0.0])], "vec_id LONG, embedding ARRAY<DOUBLE>"
     )
     with _pytest.raises(ValueError, match="iters"):
         kmeans_assign(df, n_clusters=2, iters=0)
-    with _pytest.raises(ValueError, match="iters"):
-        kmeans_centroids(df, n_clusters=2, iters=0)
 
 
 # ------------------------------ AVI codec ----------------------------------

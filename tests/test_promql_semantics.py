@@ -425,9 +425,12 @@ def test_histogram_quantile_le_buckets(spark):
 
 def test_histogram_quantile_prometheus_guards(spark):
     """ensureMonotonic fixup (one target row despite a dip), missing
-    +Inf top bucket -> absent, and cumulative=False cumulates OTLP-style
-    per-bucket counts first."""
-    from lakerunner_spark.operators.histogram import histogram_quantile_buckets
+    +Inf top bucket -> absent, and cumulate_buckets turns OTLP-style
+    per-bucket counts cumulative first."""
+    from lakerunner_spark.operators.histogram import (
+        cumulate_buckets,
+        histogram_quantile_buckets,
+    )
 
     # dip at le=20 (rate artifact): running max -> [5,5,6]; q=0.5 ->
     # rank 3, first bucket (cum 5 >= 3, prev null), le=10 > 0:
@@ -452,7 +455,7 @@ def test_histogram_quantile_prometheus_guards(spark):
         [(0, "o", "0.5", 1.0), (0, "o", "2.5", 2.0), (0, "o", "+Inf", 3.0)],
         "bucket_ts LONG, job STRING, le STRING, value DOUBLE",
     )
-    rows = histogram_quantile_buckets(otlp, 0.5, cumulative=False).collect()
+    rows = histogram_quantile_buckets(cumulate_buckets(otlp), 0.5).collect()
     assert len(rows) == 1 and rows[0].value == 2.5
 
 

@@ -1,4 +1,4 @@
-"""Source/sink tests: CSV/JSON.gz round-trips, extension dispatch, OTLP
+"""Source/sink tests: CSV/JSON.gz round-trips, OTLP
 decode plumbing with an injected fake decoder, and the sorted
 partitioned segment writer."""
 
@@ -12,12 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lakerunner_spark.sources.otel import read_otlp_logs
-from lakerunner_spark.sources.readers import (
-    read_any,
-    read_csv,
-    read_jsonlines,
-    read_parquet_union,
-)
+from lakerunner_spark.sources.readers import read_csv, read_jsonlines
 from lakerunner_spark.sources.writers import write_segments
 
 
@@ -43,24 +38,6 @@ def test_jsonlines_gz_flattens_nested(spark, tmp_path):
     assert "resource_service_name" in df.columns
     names = {r.resource_service_name for r in df.collect()}
     assert names == {"api", "web"}
-
-
-def test_read_any_dispatch(spark, tmp_path, sf_dir):
-    assert read_any(spark, f"{sf_dir}/events.parquet").count() > 0
-    with pytest.raises(ValueError, match="unsupported"):
-        read_any(spark, "file.xyz")
-
-
-def test_parquet_union_by_name(spark, tmp_path):
-    spark.createDataFrame([(1, "a")], ["id", "x"]).write.parquet(
-        str(tmp_path / "f1")
-    )
-    spark.createDataFrame([(2, 3.5)], ["id", "y"]).write.parquet(
-        str(tmp_path / "f2")
-    )
-    df = read_parquet_union(spark, str(tmp_path / "f1"), str(tmp_path / "f2"))
-    assert {"id", "x", "y"} <= set(df.columns)
-    assert df.count() == 2
 
 
 def test_otlp_plumbing_with_fake_decoder(spark, tmp_path):
@@ -160,7 +137,7 @@ def test_write_segments_layout(spark, tmp_path, sf_dir):
         "chq_tid", F.col("user_id").cast("long")
     )
     out = str(tmp_path / "segments")
-    write_segments(e, out, "metrics", max_records_per_file=1000)
+    write_segments(e, out, "metrics")
 
     # hive partition dirs exist
     orgs = os.listdir(out)

@@ -30,7 +30,7 @@ def test_cook_stream_builds_tiered_layout(spark, sf_dir, tmp_path):
 
     q = run_cook_stream(
         spark, indir, base, ckpt, schema,
-        attr_cols=["attr_user"], tiers_ms=[10_000, 60_000],
+        tiers_ms=[10_000, 60_000],
     )
     q.awaitTermination(180)
 
@@ -48,7 +48,7 @@ def test_cook_stream_builds_tiered_layout(spark, sf_dir, tmp_path):
     before = cooked.count()
     q = run_cook_stream(
         spark, indir, base, ckpt, schema,
-        attr_cols=["attr_user"], tiers_ms=[10_000, 60_000],
+        tiers_ms=[10_000, 60_000],
     )
     q.awaitTermination(120)
     assert spark.read.parquet(f"{base}/metrics").count() == before
